@@ -57,22 +57,17 @@ from pyspark.sql import functions as F
 
 
 def _fingerprint(input_path: str, cmds: list[str]) -> str:
+    """Memo fingerprint: sha256 over the command strings and the
+    (path, size, mtime_ns) of every file under the paths the input glob
+    names — the warehouse's `_input_fingerprint` file walk."""
+    import glob as globmod
+
+    from filemap_spark.plans.memo import _input_fingerprint
+
     h = hashlib.sha256()
     for c in cmds:
         h.update(c.encode())
-    import glob as globmod
-
-    paths = sorted(globmod.glob(input_path)) or [input_path]
-    for p in paths:
-        if os.path.isdir(p):
-            for root, _, files in os.walk(p):
-                for f in sorted(files):
-                    fp = os.path.join(root, f)
-                    st = os.stat(fp)
-                    h.update(f"{fp}:{st.st_size}:{st.st_mtime_ns}".encode())
-        elif os.path.exists(p):
-            st = os.stat(p)
-            h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}".encode())
+    h.update(_input_fingerprint(globmod.glob(input_path) or [input_path]).encode())
     return h.hexdigest()
 
 
@@ -102,6 +97,35 @@ def _sq(s: str) -> str:
     return "'" + s.replace("'", "'\\''") + "'"
 
 
+def _pipe_stages(
+    spark: SparkSession,
+    input_path: str,
+    output: str,
+    stages: list[tuple[str, str]],
+    buckets: int,
+    partitions: int | None,
+) -> int:
+    """Read INPUT's lines, run the (kind, cmd) stages over them in ONE
+    job, write the result as a text dataset and return its line count.
+    `map` pipes every partition's lines through the shell command;
+    `reduce` first shuffles lines into hash buckets by their leading
+    whitespace-delimited field, then pipes each bucket."""
+    lines = spark.read.text(input_path).rdd.map(lambda r: r[0])
+    if partitions:
+        lines = lines.repartition(partitions)
+    for kind, cmd in stages:
+        if kind == "reduce":
+            keyed = lines.map(lambda line: (line.split(" ", 1)[0], line))
+            lines = keyed.partitionBy(buckets).values()
+        lines = lines.pipe(_shell(cmd))
+    # Explicit schema: toDF() infers from data and raises on an EMPTY rdd
+    # (a map command emitting no lines, e.g. grep with no matches) — an
+    # empty pipeline must still write an empty output dataset.
+    out_df = spark.createDataFrame(lines.map(lambda line: Row(value=line)), "value string")
+    out_df.write.mode("overwrite").text(output)
+    return spark.read.text(output).count()
+
+
 def run_map(
     spark: SparkSession,
     input_path: str,
@@ -111,20 +135,12 @@ def run_map(
     buckets: int = 32,
     partitions: int | None = None,
 ) -> int:
-    """Execute map [+ reduce] shell stages; returns output line count."""
-    lines = spark.read.text(input_path).rdd.map(lambda r: r[0])
-    if partitions:
-        lines = lines.repartition(partitions)
-    mapped = lines.pipe(_shell(cmd))
+    """Execute map [+ reduce] shell stages as ONE job (no intermediate
+    dataset); returns output line count."""
+    stages = [("map", cmd)]
     if reduce_cmd is not None:
-        keyed = mapped.map(lambda line: (line.split(" ", 1)[0], line))
-        mapped = keyed.partitionBy(buckets).values().pipe(_shell(reduce_cmd))
-    # Explicit schema: toDF() infers from data and raises on an EMPTY rdd
-    # (a map command emitting no lines, e.g. grep with no matches) — an
-    # empty pipeline must still write an empty output dataset.
-    out_df = spark.createDataFrame(mapped.map(lambda line: Row(value=line)), "value string")
-    out_df.write.mode("overwrite").text(output)
-    return spark.read.text(output).count()
+        stages.append(("reduce", reduce_cmd))
+    return _pipe_stages(spark, input_path, output, stages, buckets, partitions)
 
 
 def run_stage(
@@ -136,19 +152,8 @@ def run_stage(
     buckets: int = 32,
     partitions: int | None = None,
 ) -> int:
-    """One pipeline stage: `map` pipes every partition's lines through the
-    shell command; `reduce` first shuffles lines into hash buckets by their
-    leading whitespace-delimited field, then pipes each bucket."""
-    lines = spark.read.text(input_path).rdd.map(lambda r: r[0])
-    if partitions:
-        lines = lines.repartition(partitions)
-    if kind == "reduce":
-        keyed = lines.map(lambda line: (line.split(" ", 1)[0], line))
-        lines = keyed.partitionBy(buckets).values()
-    piped = lines.pipe(_shell(cmd))
-    out_df = spark.createDataFrame(piped.map(lambda line: Row(value=line)), "value string")
-    out_df.write.mode("overwrite").text(output)
-    return spark.read.text(output).count()
+    """One pipeline stage (see `_pipe_stages`); returns output line count."""
+    return _pipe_stages(spark, input_path, output, [(kind, cmd)], buckets, partitions)
 
 
 def run_pipeline(
@@ -424,12 +429,15 @@ def run_dedup_stream(
         ledger_name = "fingerprints.parquet"
     pairs_dir = os.path.join(output, "_pairs")
     checkpoint = os.path.join(output, "_checkpoint")
-    # heal a crashed _pairs compaction BEFORE the stream can append: a
-    # fresh append into a missing _pairs would otherwise recreate the dir
-    # and the post-drain recovery would then delete .compact_old — i.e.
-    # every historical pair (review finding, round 10; the three state
-    # tables get the same healing inside incremental_lsh_ingest itself)
+    # heal a crashed compaction of _pairs and of the ledger BEFORE the
+    # stream can append: a fresh append into a missing dir would
+    # otherwise recreate it (an absent fingerprint ledger also makes the
+    # ingest start fresh) and the post-drain recovery would then delete
+    # .compact_old — i.e. every historical pair or ledger row (review
+    # finding, round 10; the LSH state tables get the same healing
+    # inside incremental_lsh_ingest itself)
     _recover_compact_swap(pairs_dir)
+    _recover_compact_swap(os.path.join(state_dir, ledger_name))
     schema = spark.read.parquet(input_dir).schema
 
     if modality == "text":

@@ -194,34 +194,32 @@ def fingerprint_near_dup_pairs(
     trade: pass CORPUS_MATCHED_KNOB (16, 4, 15) for corpora whose near
     pairs sit at high hamming distances (candidate volume ~n²/32 — fine
     small, quadratic at web scale) or WEB_SCALE_KNOB (8, 8, 7) for
-    re-encode hunting over large corpora. Unless FILEMAP_CANDIDATE_STATS=0,
-    every run measures the pre-`distinct` candidate volume (one agg over
-    the hash-sized bucket frame), logs it, and emits a RuntimeWarning when
-    it exceeds CANDIDATE_BUDGET_PER_ITEM × n_distinct — the switch-knob
-    signal.
+    re-encode hunting over large corpora. Every run measures the
+    pre-`distinct` candidate volume (one agg over the hash-sized bucket
+    frame), logs it, and emits a RuntimeWarning when it exceeds
+    CANDIDATE_BUDGET_PER_ITEM × n_distinct — the switch-knob signal.
 
     Returns (doc_a, doc_b, hamming) with doc_a < doc_b, ordered."""
     reps = hashes.select(hash_col).distinct()
-    if os.environ.get("FILEMAP_CANDIDATE_STATS", "1") != "0":
-        n_distinct, cand = pigeonhole_candidate_volume(
-            reps, hash_col, n_blocks, block_bits
+    n_distinct, cand = pigeonhole_candidate_volume(
+        reps, hash_col, n_blocks, block_bits
+    )
+    _LOG.info(
+        "pigeonhole candidates: %d over %d distinct %s "
+        "(knob=%d x %d-bit, T<=%d)",
+        cand, n_distinct, hash_col, n_blocks, block_bits, threshold,
+    )
+    if cand > CANDIDATE_BUDGET_PER_ITEM * max(n_distinct, 1):
+        warnings.warn(
+            f"pigeonhole candidate volume {cand} exceeds "
+            f"{CANDIDATE_BUDGET_PER_ITEM}x the {n_distinct} distinct "
+            f"signatures with knob ({n_blocks}, {block_bits}, "
+            f"{threshold}); at corpus scale switch to WEB_SCALE_KNOB "
+            f"{WEB_SCALE_KNOB} (or raise the block width) before the "
+            "join quadratics",
+            RuntimeWarning,
+            stacklevel=2,
         )
-        _LOG.info(
-            "pigeonhole candidates: %d over %d distinct %s "
-            "(knob=%d x %d-bit, T<=%d)",
-            cand, n_distinct, hash_col, n_blocks, block_bits, threshold,
-        )
-        if cand > CANDIDATE_BUDGET_PER_ITEM * max(n_distinct, 1):
-            warnings.warn(
-                f"pigeonhole candidate volume {cand} exceeds "
-                f"{CANDIDATE_BUDGET_PER_ITEM}x the {n_distinct} distinct "
-                f"signatures with knob ({n_blocks}, {block_bits}, "
-                f"{threshold}); at corpus scale switch to WEB_SCALE_KNOB "
-                f"{WEB_SCALE_KNOB} (or raise the block width) before the "
-                "join quadratics",
-                RuntimeWarning,
-                stacklevel=2,
-            )
     # include_equal folds the old intra-group membership self-join into
     # the one expansion pass (r18): the diagonal (f, f, 0) hash rows
     # expand to every same-fingerprint doc pair, gated by id_a < id_b so
@@ -300,8 +298,6 @@ def incremental_fingerprint_ingest(
     fps; the index append is one single-file columnar write per batch.
     The knob is the same (n_blocks, block_bits, threshold) triple as
     the batch path (CORPUS_MATCHED_KNOB / WEB_SCALE_KNOB)."""
-    import os
-
     if threshold >= n_blocks:
         raise ValueError(
             f"pigeonhole needs threshold < n_blocks, got {threshold} >= {n_blocks}"

@@ -3795,6 +3795,34 @@ def win_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fin2.selectExpr(*[e.strip() for e in _split_select(_MWU_FINAL)])
 
 
+def _daily_event_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Densified daily event-count cells (event_type, d0, didx, n): one
+    row per type per epoch-day over the type's [d0, d1] span, zero-event
+    days kept as n = 0 (a zero-event day is a real observation of the
+    daily series — dropping it biases lag-k statistics on gappy series).
+    ONE events scan reduced map-side to the sparse (type, day) counts;
+    the dense frame stays calendar-bounded at O(types × span days). The
+    series kernel of ts_acf, ts_periodogram, ts_cusum_changepoint and
+    ts_mad_anomaly; callers select the columns they need (only the
+    periodogram reads the span start d0)."""
+    ev = load_table(spark, sf_dir, "events")
+    sparse = ev.groupBy(
+        "event_type",
+        F.expr(
+            "unix_micros(date_trunc('day', ts)) div 86400000000"
+        ).alias("didx"),
+    ).agg(F.count("*").alias("n"))
+    spans = sparse.groupBy("event_type").agg(
+        F.min("didx").alias("d0"), F.max("didx").alias("d1")
+    )
+    dense = spans.select(
+        "event_type", "d0", F.explode(F.sequence("d0", "d1")).alias("didx")
+    )
+    return dense.join(sparse, ["event_type", "didx"], "left").select(
+        "event_type", "d0", "didx", F.coalesce("n", F.lit(0)).alias("n")
+    )
+
+
 def _split_select(sql_fragment: str) -> list[str]:
     """Split a SELECT-list fragment on top-level commas so the identical
     SQL text drives both engines. Paren-aware AND string-literal-aware: a
@@ -3879,27 +3907,11 @@ def ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact integer day arithmetic — no calendar functions in the hot
     path). For per-entity ACF at scale the same plan keys by (entity,
     didx) and the daily frame stays proportional to active entity-days."""
-    ev = load_table(spark, sf_dir, "events")
-    sparse = ev.groupBy(
-        "event_type",
-        F.expr(
-            "unix_micros(date_trunc('day', ts)) div 86400000000"
-        ).alias("didx"),
-    ).agg(F.count("*").alias("n"))
-    # densify the [min, max] day span with 0-count cells (ADVICE r6): a
-    # zero-event day is a real observation of the daily series — dropping
-    # it biases lag-k r on gappy series, and the siblings
-    # (ts_holt_winters, ts_stl_lite) already densify. The dense frame
-    # stays calendar-bounded: O(types × span days).
-    spans = sparse.groupBy("event_type").agg(
-        F.min("didx").alias("d0"), F.max("didx").alias("d1")
-    )
-    dense = spans.select(
-        "event_type", F.explode(F.sequence("d0", "d1")).alias("didx")
-    )
+    # the densified series (_daily_event_cells, ADVICE r6): lag pairs
+    # never silently skip a zero-event day.
     daily = (
-        dense.join(sparse, ["event_type", "didx"], "left")
-        .select("event_type", "didx", F.coalesce("n", F.lit(0)).alias("n"))
+        _daily_event_cells(spark, sf_dir)
+        .select("event_type", "didx", "n")
         # the daily frame feeds BOTH sides of the lag self-join; without
         # reuse each side re-plans the whole fact scan+agg. persist()
         # materializes the bounded O(types × span-days) frame once at
@@ -4150,6 +4162,28 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("pct")
 
 
+def _nation_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(nation, customer) integer-cent spend frame (nat, cust, s):
+    round(o_totalprice·100) per ORDER, then an exact integer sum per
+    customer — never a rounded sum of doubles. One fact join (AQE
+    broadcasts customer while it fits) and one (nation, customer) hash
+    agg; the input of agg_gini_grouped and agg_theil_index."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_custkey",
+        F.expr("cast(round(o_totalprice * 100) as bigint)").alias("p"),
+    )
+    cust_dim = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey"
+    )
+    return (
+        orders.join(cust_dim, orders["o_custkey"] == cust_dim["c_custkey"])
+        .groupBy(
+            F.col("c_nationkey").alias("nat"), F.col("o_custkey").alias("cust")
+        )
+        .agg(F.sum("p").alias("s"))
+    )
+
+
 @query(
     "agg_gini_grouped",
     cost=0.8,
@@ -4194,20 +4228,7 @@ def agg_gini_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nation, customer) hash agg, a rank window PARTITIONED by nation
     (never a global sort), one per-nation agg, and a 25-row broadcast
     name join."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.expr("cast(round(o_totalprice * 100) as bigint)").alias("p"),
-    )
-    cust_dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    cust = (
-        orders.join(cust_dim, orders["o_custkey"] == cust_dim["c_custkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("nat"), F.col("o_custkey").alias("cust")
-        )
-        .agg(F.sum("p").alias("s"))
-    )
+    cust = _nation_customer_spend(spark, sf_dir)
     w_i = Window.partitionBy("nat").orderBy("s", "cust")
     w_n = Window.partitionBy("nat")
     ranked = (
@@ -4273,43 +4294,30 @@ _THEIL_TERM = (
 def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PER-GROUP Theil-T inequality index (round 15) — customer spend
     concentration within each nation, the ENTROPY-based complement to
-    `agg_gini_grouped` over the identical per-customer integer-cent
-    spend frame: T = (1/n)·Σ (sᵢ/μ)·ln(sᵢ/μ), μ = tot/n. Theil is
-    additively DECOMPOSABLE (within-group terms sum to the corpus
-    total, the property Gini lacks), which is why mixture audits report
-    both: Gini for the familiar 0–1 scale, Theil for attributing
-    corpus-level inequality to individual domains/sources.
+    `agg_gini_grouped` over the same per-customer integer-cent spend
+    frame (`_nation_customer_spend`): T = (1/n)·Σ (sᵢ/μ)·ln(sᵢ/μ),
+    μ = tot/n. Theil is additively DECOMPOSABLE (within-group terms sum
+    to the corpus total, the property Gini lacks), which is why mixture
+    audits report both: Gini for the familiar 0–1 scale, Theil for
+    attributing corpus-level inequality to individual domains/sources.
 
     Determinism contract: the spend sᵢ is an exact integer (per-cent
-    round per order, integer sum per customer — agg_gini_grouped's
-    frame); each customer's term is the shared-text _THEIL_TERM IEEE
-    expression, quantized per row at 1e4 and mean-reduced through
-    davg_lnsafe (the libm-ln discipline of text_bigram_logprob: a 1-ulp
-    engine split must land within ~1e-15 of a 1e-4 boundary). Term
-    magnitude: the share ratio is ≤ n, so |term| ≤ n·ln(n) — ~7e5 at
-    60k customers/nation, ~7e9 q-units/row, int64-safe past 1e8
-    rows/group; corpus scales beyond that promote the sum to decimal,
-    stated here rather than discovered (the agg_gini_grouped ceiling
-    discipline).
+    round per order, integer sum per customer — the
+    _nation_customer_spend kernel); each customer's term is the
+    shared-text _THEIL_TERM IEEE expression, quantized per row at 1e4
+    and mean-reduced through davg_lnsafe (the libm-ln discipline of
+    text_bigram_logprob: a 1-ulp engine split must land within ~1e-15
+    of a 1e-4 boundary). Term magnitude: the share ratio is ≤ n, so
+    |term| ≤ n·ln(n) — ~7e5 at 60k customers/nation, ~7e9 q-units/row,
+    int64-safe past 1e8 rows/group; corpus scales beyond that promote
+    the sum to decimal, stated here rather than discovered (the
+    agg_gini_grouped ceiling discipline).
 
     Scale: one fact join (AQE broadcasts customer while it fits), one
     (nation, customer) hash agg, count/sum windows PARTITIONED by
     nation (never a global sort — and no rank needed at all, unlike
     Gini), one per-nation agg, and a 25-row broadcast name join."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.expr("cast(round(o_totalprice * 100) as bigint)").alias("p"),
-    )
-    cust_dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    cust = (
-        orders.join(cust_dim, orders["o_custkey"] == cust_dim["c_custkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("nat"), F.col("o_custkey").alias("cust")
-        )
-        .agg(F.sum("p").alias("s"))
-    )
+    cust = _nation_customer_spend(spark, sf_dir)
     w_n = Window.partitionBy("nat")
     r = cust.withColumn("n", F.count(F.lit(1)).over(w_n)).withColumn(
         "tot", F.sum("s").over(w_n)
@@ -4400,8 +4408,9 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-frequency Fourier magnitude normalized by the series mass,
     comparable across types of different volume).
 
-    Series contract: the SAME densified daily frame as ts_acf /
-    ts_stl_lite (zero-count days are real observations; span per type),
+    Series contract: the densified daily frame `_daily_event_cells`
+    that ts_acf also reads (zero-count days are real observations; span
+    per type, the ts_stl_lite convention),
     phase t = didx − d0 so the projection is translation-anchored to
     each type's own span start.
 
@@ -4418,22 +4427,7 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     one final hash agg keyed (type, period). At per-entity scale the
     same plan keys by (entity, didx) and the daily frame stays
     proportional to active entity-days — no window, no sort, no UDF."""
-    ev = load_table(spark, sf_dir, "events")
-    sparse = ev.groupBy(
-        "event_type",
-        F.expr(
-            "unix_micros(date_trunc('day', ts)) div 86400000000"
-        ).alias("didx"),
-    ).agg(F.count("*").alias("n"))
-    spans = sparse.groupBy("event_type").agg(
-        F.min("didx").alias("d0"), F.max("didx").alias("d1")
-    )
-    dense = spans.select(
-        "event_type", "d0", F.explode(F.sequence("d0", "d1")).alias("didx")
-    )
-    daily = dense.join(sparse, ["event_type", "didx"], "left").select(
-        "event_type", "d0", "didx", F.coalesce("n", F.lit(0)).alias("n")
-    )
+    daily = _daily_event_cells(spark, sf_dir)
     periods = spark.createDataFrame(
         [(p,) for p in _PERIODOGRAM_DAYS], "period int"
     )
@@ -4553,22 +4547,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ ~4e15 (2^53), not the raw int64 range (ADVICE r16); past that
     swap the two means to the dsum_decimal path, the statistic column
     is ×n-scaled already and exact through tot ≤ ~9e12."""
-    ev = load_table(spark, sf_dir, "events")
-    sparse = ev.groupBy(
-        "event_type",
-        F.expr(
-            "unix_micros(date_trunc('day', ts)) div 86400000000"
-        ).alias("didx"),
-    ).agg(F.count("*").alias("n"))
-    spans = sparse.groupBy("event_type").agg(
-        F.min("didx").alias("d0"), F.max("didx").alias("d1")
-    )
-    dense = spans.select(
-        "event_type", F.explode(F.sequence("d0", "d1")).alias("didx")
-    )
-    daily = dense.join(sparse, ["event_type", "didx"], "left").select(
-        "event_type", "didx", F.coalesce("n", F.lit(0)).alias("n")
-    )
+    daily = _daily_event_cells(spark, sf_dir).select("event_type", "didx", "n")
     w_ord = Window.partitionBy("event_type").orderBy("didx")
     w_cum = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w_all = Window.partitionBy("event_type")
@@ -4713,29 +4692,12 @@ def ts_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     by event_type and both medians are aggregations of the bounded cell
     frame — no global sort, no driver state. Per-entity anomaly scans
     key the same plan by (entity, didx)."""
-    ev = load_table(spark, sf_dir, "events")
-    sparse = ev.groupBy(
-        "event_type",
-        F.expr(
-            "unix_micros(date_trunc('day', ts)) div 86400000000"
-        ).alias("didx"),
-    ).agg(F.count("*").alias("n"))
-    spans = sparse.groupBy("event_type").agg(
-        F.min("didx").alias("d0"), F.max("didx").alias("d1")
-    )
-    dense = spans.select(
-        "event_type", F.explode(F.sequence("d0", "d1")).alias("didx")
-    )
     # both median passes and the final probe consume the cell frame —
     # persist() keeps it ONE runtime fact scan (ts_acf's rationale:
     # bounded O(types × days), plan stays auditable, recompute-safe).
     daily = (
-        dense.join(sparse, ["event_type", "didx"], "left")
-        .select(
-            "event_type",
-            "didx",
-            F.coalesce("n", F.lit(0)).cast("bigint").alias("n"),
-        )
+        _daily_event_cells(spark, sf_dir)
+        .select("event_type", "didx", F.col("n").cast("bigint").alias("n"))
         .persist()
     )
     w_val = Window.partitionBy("event_type").orderBy("n", "didx")

@@ -510,6 +510,85 @@ _Y4M_H = "cast(floor(n_chars / 3) % 6 + 2 AS int)"
 _Y4M_NF = "cast(n_chars % 4 + 2 AS int)"
 
 
+def _y4m_assets(docs: DataFrame) -> DataFrame:
+    """(asset_id, payload): every document rendered as a genuine C444
+    YUV4MPEG2 stream — plain-text header, then nf FRAME-marked frames of
+    three w×h planes — built entirely in JVM expressions (transform +
+    array_join over the frame sequence). The ONE construction shared by
+    mm_decode_y4m and mm_scene_cut_y4m; the geometry is the _Y4M_*
+    fragments the oracle shares verbatim."""
+    buf = docs.select(
+        "doc_id",
+        "text",
+        "n_chars",
+        F.expr(_Y4M_W).alias("w"),
+        F.expr(_Y4M_H).alias("h"),
+        F.expr(_Y4M_NF).alias("nf"),
+    ).select(
+        "doc_id",
+        "w",
+        "h",
+        "nf",
+        F.expr(
+            "substr(repeat(text, cast(ceil((nf * w * h * 3.0) / n_chars) AS int)),"
+            " 1, nf * w * h * 3)"
+        ).alias("b"),
+    )
+    return buf.select(
+        F.col("doc_id").alias("asset_id"),
+        F.encode(
+            F.expr(
+                "concat('YUV4MPEG2 W', cast(w AS string), ' H', cast(h AS string),"
+                " ' F25:1 C444\\n',"
+                " array_join(transform(sequence(0, nf - 1),"
+                "   f -> concat('FRAME\\n', substr(b, f * w * h * 3 + 1, w * h * 3))"
+                " ), ''))"
+            ),
+            "UTF-8",
+        ).alias("payload"),
+    )
+
+
+def _parse_y4m(stream: bytes) -> tuple[int, int, Iterator[bytes]]:
+    """REAL (not stubbed) decode of a C444 Y4M stream: header magic and
+    W/H tokens parse eagerly; the returned iterator walks the frames in
+    order, validating every FRAME marker and yielding each luma plane
+    (the U/V planes are skipped), so a consumer holds O(frame) state.
+    A short plane means the char-counted construction misaligned —
+    documents.text must be single-byte (ASCII, the FIXTURES.md
+    contract) — and hard-fails rather than diverging from the oracle."""
+    nl = stream.index(b"\n")
+    header = stream[:nl].split(b" ")
+    if header[0] != b"YUV4MPEG2":
+        raise ValueError(f"bad y4m magic: {header[0]!r}")
+    w = h = None
+    for tok in header[1:]:
+        if tok.startswith(b"W"):
+            w = int(tok[1:])
+        elif tok.startswith(b"H"):
+            h = int(tok[1:])
+    plane = w * h
+
+    def lumas() -> Iterator[bytes]:
+        pos = nl + 1
+        while pos < len(stream):
+            if stream[pos : pos + 6] != b"FRAME\n":
+                raise ValueError(f"missing FRAME marker at {pos}")
+            pos += 6
+            luma = stream[pos : pos + plane]
+            if len(luma) != plane:
+                raise ValueError(
+                    f"truncated y4m luma plane ({len(luma)}/{plane} bytes) — "
+                    "documents.text must be single-byte (ASCII, the "
+                    "FIXTURES.md contract); multibyte text misaligns the "
+                    "char-counted frame construction"
+                )
+            yield luma
+            pos += plane * 3  # skip all three C444 planes
+
+    return w, h, lumas()
+
+
 @query(
     "mm_decode_y4m",
     oracle="""
@@ -559,36 +638,8 @@ def mm_decode_y4m(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverging from the oracle."""
     import numpy as np  # noqa: F401  (parity with sibling decoders)
 
-    docs = spread_single_split(load_table(spark, sf_dir, "documents"))
-    buf = docs.select(
-        "doc_id",
-        "text",
-        "n_chars",
-        F.expr(_Y4M_W).alias("w"),
-        F.expr(_Y4M_H).alias("h"),
-        F.expr(_Y4M_NF).alias("nf"),
-    ).select(
-        "doc_id",
-        "w",
-        "h",
-        "nf",
-        F.expr(
-            "substr(repeat(text, cast(ceil((nf * w * h * 3.0) / n_chars) AS int)),"
-            " 1, nf * w * h * 3)"
-        ).alias("b"),
-    )
-    assets = buf.select(
-        F.col("doc_id").alias("asset_id"),
-        F.encode(
-            F.expr(
-                "concat('YUV4MPEG2 W', cast(w AS string), ' H', cast(h AS string),"
-                " ' F25:1 C444\\n',"
-                " array_join(transform(sequence(0, nf - 1),"
-                "   f -> concat('FRAME\\n', substr(b, f * w * h * 3 + 1, w * h * 3))"
-                " ), ''))"
-            ),
-            "UTF-8",
-        ).alias("payload"),
+    assets = _y4m_assets(
+        spread_single_split(load_table(spark, sf_dir, "documents"))
     )
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -600,35 +651,9 @@ def mm_decode_y4m(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_frames": [], "frame_no": [], "luma_md5": [],
             }
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                stream = bytes(payload)
-                nl = stream.index(b"\n")
-                header = stream[:nl].split(b" ")
-                if header[0] != b"YUV4MPEG2":
-                    raise ValueError(f"bad y4m magic: {header[0]!r}")
-                w = h = None
-                for tok in header[1:]:
-                    if tok.startswith(b"W"):
-                        w = int(tok[1:])
-                    elif tok.startswith(b"H"):
-                        h = int(tok[1:])
-                pos, frame_no, frames = nl + 1, 0, []
-                plane = w * h
-                while pos < len(stream):
-                    if stream[pos : pos + 6] != b"FRAME\n":
-                        raise ValueError(f"missing FRAME marker at {pos}")
-                    pos += 6
-                    luma = stream[pos : pos + plane]
-                    if len(luma) != plane:
-                        raise ValueError(
-                            f"mm_decode_y4m: truncated luma plane "
-                            f"({len(luma)}/{plane} bytes) — documents.text "
-                            "must be single-byte (ASCII, the FIXTURES.md "
-                            "contract); multibyte text misaligns the "
-                            "char-counted frame construction"
-                        )
-                    frames.append(luma)
-                    pos += plane * 3  # skip all three C444 planes
-                    frame_no += 1
+                w, h, lumas = _parse_y4m(bytes(payload))
+                frames = list(lumas)
+                frame_no = len(frames)
                 for f in range(0, frame_no, 2):
                     rows["asset_id"].append(aid)
                     rows["width"].append(w)
@@ -1501,14 +1526,15 @@ def mm_incremental_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_scene_cut_y4m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shot-boundary (scene cut) detection over REALLY-decoded video — the
     segmentation step a video training-data pipeline runs before frame
-    sampling, so clips don't straddle cuts. Streams are the same genuine
-    YUV4MPEG2 construction as `mm_decode_y4m` (JVM-built header + FRAME
-    markers + C444 planes; the decoder parses magic/geometry tokens and
-    validates every FRAME marker). Per successive frame pair the kernel
-    computes the luma-plane SAD (sum of absolute byte differences —
-    exact integers end to end), and flags a cut where mean abs diff
-    exceeds 30 gray levels (d*10 > w*h*300 in cross-multiplied integer
-    form — no FP threshold anywhere). The oracle rebuilds every frame
+    sampling, so clips don't straddle cuts. Streams are the genuine
+    YUV4MPEG2 construction `mm_decode_y4m` also decodes (`_y4m_assets`:
+    JVM-built header + FRAME markers + C444 planes; `_parse_y4m` parses
+    magic/geometry tokens and validates every FRAME marker). Per
+    successive frame pair the kernel computes the luma-plane SAD (sum
+    of absolute byte differences — exact integers end to end), and
+    flags a cut where mean abs diff exceeds 30 gray levels (d*10 >
+    w*h*300 in cross-multiplied integer form — no FP threshold
+    anywhere). The oracle rebuilds every frame
     slice and re-sums byte diffs in SQL, so a decoder that misaligns by
     one byte anywhere mismatches from that frame on.
 
@@ -1518,36 +1544,8 @@ def mm_scene_cut_y4m(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asset_id, frame_no) for any downstream clip assembly. Real-codec
     deployments swap the parse step behind the `_real_decode_stub` seam;
     the SAD kernel and the plan are codec-agnostic."""
-    docs = spread_single_split(load_table(spark, sf_dir, "documents"))
-    buf = docs.select(
-        "doc_id",
-        F.expr(_Y4M_W).alias("w"),
-        F.expr(_Y4M_H).alias("h"),
-        F.expr(_Y4M_NF).alias("nf"),
-        "text",
-        "n_chars",
-    ).select(
-        "doc_id",
-        "w",
-        "h",
-        "nf",
-        F.expr(
-            "substr(repeat(text, cast(ceil((nf * w * h * 3.0) / n_chars) AS int)),"
-            " 1, nf * w * h * 3)"
-        ).alias("b"),
-    )
-    assets = buf.select(
-        F.col("doc_id").alias("asset_id"),
-        F.encode(
-            F.expr(
-                "concat('YUV4MPEG2 W', cast(w AS string), ' H', cast(h AS string),"
-                " ' F25:1 C444\\n',"
-                " array_join(transform(sequence(0, nf - 1),"
-                "   f -> concat('FRAME\\n', substr(b, f * w * h * 3 + 1, w * h * 3))"
-                " ), ''))"
-            ),
-            "UTF-8",
-        ).alias("payload"),
+    assets = _y4m_assets(
+        spread_single_split(load_table(spark, sf_dir, "documents"))
     )
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1558,41 +1556,17 @@ def mm_scene_cut_y4m(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             rows = {"asset_id": [], "frame_no": [], "diff_energy": [], "is_cut": []}
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                stream = bytes(payload)
-                nl = stream.index(b"\n")
-                header = stream[:nl].split(b" ")
-                if header[0] != b"YUV4MPEG2":
-                    raise ValueError(f"bad y4m magic: {header[0]!r}")
-                w = h = None
-                for tok in header[1:]:
-                    if tok.startswith(b"W"):
-                        w = int(tok[1:])
-                    elif tok.startswith(b"H"):
-                        h = int(tok[1:])
-                plane = w * h
-                pos, frame_no = nl + 1, 0
+                w, h, lumas = _parse_y4m(bytes(payload))
                 prev = None
-                while pos < len(stream):
-                    if stream[pos : pos + 6] != b"FRAME\n":
-                        raise ValueError(f"missing FRAME marker at {pos}")
-                    pos += 6
-                    luma = stream[pos : pos + plane]
-                    if len(luma) != plane:
-                        raise ValueError(
-                            f"mm_scene_cut_y4m: truncated luma plane "
-                            f"({len(luma)}/{plane} bytes) — documents.text "
-                            "must be single-byte ASCII (FIXTURES.md)"
-                        )
+                for frame_no, luma in enumerate(lumas):
                     cur = np.frombuffer(luma, dtype=np.uint8).astype(np.int64)
                     if prev is not None:
                         d = int(np.abs(cur - prev).sum())
                         rows["asset_id"].append(aid)
                         rows["frame_no"].append(frame_no)
                         rows["diff_energy"].append(d)
-                        rows["is_cut"].append(int(d * 10 > plane * 300))
+                        rows["is_cut"].append(int(d * 10 > w * h * 300))
                     prev = cur
-                    pos += plane * 3  # skip all three C444 planes
-                    frame_no += 1
             out = pd.DataFrame(rows)
             out["frame_no"] = out["frame_no"].astype("int32")
             out["is_cut"] = out["is_cut"].astype("int32")

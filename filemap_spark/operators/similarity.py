@@ -30,7 +30,7 @@ similarity with vec_id tiebreaks.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -303,26 +303,14 @@ def emb_centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _train_centroids(
-    spark: SparkSession,
-    sf_dir: str,
-    n_cells: int = 8,
-    n_iters: int = 5,
-    max_sample: int = 4096,
-) -> np.ndarray:
-    """Coarse IVF quantizer trained on a BOUNDED deterministic sample.
-
-    The sample is the max_sample rows with the smallest xxhash64(vec_id) —
-    an id hash, deterministic but indifferent to vector contents (TakeOrdered:
-    an O(N) scan with per-partition top-k, never a full collect or shuffle) —
-    so driver memory is capped at max_sample × dim float64 regardless of
-    corpus size. Init = first n_cells sample vectors
-    in vec_id order; Lloyd iterations on cosine similarity. Deterministic
-    end to end, so tests and operators recompute identical centroids.
-
-    NOTE: the embeddings table's `label` column is NOT a geometric cluster
-    (measured: top-5 neighbors share the query's label ~10% ≈ chance at
-    every SF), so the quantizer must be learned from the vectors."""
+def _training_sample(spark: SparkSession, sf_dir: str, max_sample: int) -> np.ndarray:
+    """Bounded deterministic training sample: the max_sample embeddings
+    with the smallest xxhash64(vec_id) — an id hash, deterministic but
+    indifferent to vector contents (TakeOrdered: an O(N) scan with
+    per-partition top-k, never a full collect or shuffle) — row-normalized
+    and returned in vec_id order, so driver memory is capped at
+    max_sample × dim float64 regardless of corpus size. The sample of
+    both `_train_centroids` and `_train_pq_codebooks`."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     sample_pdf = (
         emb.orderBy(F.xxhash64(F.col("vec_id").cast("string")), "vec_id")
@@ -330,8 +318,25 @@ def _train_centroids(
         .toPandas()
     )
     raw_ids, raw_mat = _normalized_matrix(sample_pdf)
-    order = np.argsort(raw_ids, kind="stable")
-    mat = raw_mat[order]
+    return raw_mat[np.argsort(raw_ids, kind="stable")]
+
+
+def _train_centroids(
+    spark: SparkSession,
+    sf_dir: str,
+    n_cells: int = 8,
+    n_iters: int = 5,
+    max_sample: int = 4096,
+) -> np.ndarray:
+    """Coarse IVF quantizer trained on a BOUNDED deterministic sample
+    (`_training_sample`). Init = first n_cells sample vectors in vec_id
+    order; Lloyd iterations on cosine similarity. Deterministic end to
+    end, so tests and operators recompute identical centroids.
+
+    NOTE: the embeddings table's `label` column is NOT a geometric cluster
+    (measured: top-5 neighbors share the query's label ~10% ≈ chance at
+    every SF), so the quantizer must be learned from the vectors."""
+    mat = _training_sample(spark, sf_dir, max_sample)
     cents = mat[:n_cells].copy()
     for _ in range(n_iters):
         assign = np.argmax(mat @ cents.T, axis=1)
@@ -510,25 +515,35 @@ def _cell_topk(
     )
 
 
-@query("sim_ann_ivf", cost=1.5)  # rows-only: ANN recall is approximate by design
-def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style approximate top-5, fully distributed (round-2 rewrite):
-    sample-trained coarse quantizer (_train_centroids — bounded driver
-    memory), mapInPandas cell assignment, index hash-partitioned by cell,
-    queries exploded to their nprobe=2 nearest cells and cogroup-joined to
-    exactly those index partitions; per-cell vectorized top-5 then a global
-    window top-5 over the <= nprobe*k survivors per query.
+def _topk_per_vector(cands: DataFrame, k: int) -> DataFrame:
+    """Per-vector top-k tail of the candidate-set ANN ops: a window
+    PARTITIONED by vec_id keeps each query's k best (vec_id, nbr_id, sim)
+    candidates (sim DESC, nbr_id ASC — ties pinned), ordered for output."""
+    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("nbr_id"))
+    return (
+        cands.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .select("vec_id", "nbr_id", "sim")
+        .orderBy("vec_id", F.desc("sim"), "nbr_id")
+    )
 
-    This is the 100 TB layout: no full-index broadcast, no driver k-means —
-    cost per query is O(N * nprobe / n_cells) flops inside the probed
-    cells and the shuffle carries each vector nprobe+1 times. Not
-    oracle-graded: tests assert the MECHANISM is exact (output ≡
-    brute-force restricted to probed cells); absolute recall is a data
-    property (isotropic vectors ⇒ modest recall at nprobe=2, by design)."""
-    nprobe, k = 2, 5
-    cents = _train_centroids(spark, sf_dir)
-    index = _cell_index(spark, sf_dir, cents)
-    bc = spark.sparkContext.broadcast(cents)
+
+def _ivf_probe_topk(
+    emb: DataFrame,
+    cents: np.ndarray,
+    index: DataFrame,
+    index_matrix: Callable[[pd.DataFrame], np.ndarray],
+    nprobe: int,
+    k: int,
+) -> DataFrame:
+    """IVF probe plan shared by sim_ann_ivf and sim_ann_pq: every query
+    vector of `emb` (vec_id, embedding) is exploded to its nprobe
+    nearest cells of the broadcast `cents`, cogroup-joined to exactly
+    those cells of `index` (any frame with a `cell` column), scored by
+    `_cell_topk` against `index_matrix(index cell batch)` — the
+    (n, dim) vectors the index rows stand for — and cut to the
+    per-vector top-k."""
+    bc = emb.sparkSession.sparkContext.broadcast(cents)
 
     def probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = bc.value
@@ -546,7 +561,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q_df = emb.mapInPandas(probes, schema="vec_id long, cell int, embedding array<double>")
 
     def cell_topk_fn(q_pdf: pd.DataFrame, i_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -556,20 +570,41 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         q_ids = q_pdf["vec_id"].to_numpy(dtype=np.int64)
         q_mat = np.vstack(q_pdf["embedding"].to_numpy())
         i_ids = i_pdf["vec_id"].to_numpy(dtype=np.int64)
-        i_mat = np.vstack(i_pdf["embedding"].to_numpy())
-        return _cell_topk(q_ids, q_mat, i_ids, i_mat, k)
+        return _cell_topk(q_ids, q_mat, i_ids, index_matrix(i_pdf), k)
 
     cands = (
         q_df.groupby("cell")
         .cogroup(index.groupby("cell"))
         .applyInPandas(cell_topk_fn, schema="vec_id long, nbr_id long, sim double")
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("nbr_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("vec_id", "nbr_id", "sim")
-        .orderBy("vec_id", F.desc("sim"), "nbr_id")
+    return _topk_per_vector(cands, k)
+
+
+@query("sim_ann_ivf", cost=1.5)  # rows-only: ANN recall is approximate by design
+def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-style approximate top-5, fully distributed (round-2 rewrite):
+    sample-trained coarse quantizer (_train_centroids — bounded driver
+    memory), mapInPandas cell assignment, index hash-partitioned by cell,
+    queries exploded to their nprobe=2 nearest cells and cogroup-joined to
+    exactly those index partitions; per-cell vectorized top-5 then a global
+    window top-5 over the <= nprobe*k survivors per query.
+
+    This is the 100 TB layout: no full-index broadcast, no driver k-means —
+    cost per query is O(N * nprobe / n_cells) flops inside the probed
+    cells and the shuffle carries each vector nprobe+1 times. Not
+    oracle-graded: tests assert the MECHANISM is exact (output ≡
+    brute-force restricted to probed cells); absolute recall is a data
+    property (isotropic vectors ⇒ modest recall at nprobe=2, by design)."""
+    cents = _train_centroids(spark, sf_dir)
+    index = _cell_index(spark, sf_dir, cents)
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _ivf_probe_topk(
+        emb,
+        cents,
+        index,
+        lambda i_pdf: np.vstack(i_pdf["embedding"].to_numpy()),
+        nprobe=2,
+        k=5,
     )
 
 
@@ -661,13 +696,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "nbr_id")
         .agg(F.max("sim").alias("sim"))
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("nbr_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("vec_id", "nbr_id", "sim")
-        .orderBy("vec_id", F.desc("sim"), "nbr_id")
-    )
+    return _topk_per_vector(cands, k)
 
 
 @query(
@@ -1623,20 +1652,12 @@ def _train_pq_codebooks(
     n_iters: int = 5,
     max_sample: int = 4096,
 ) -> np.ndarray:
-    """(n_sub, k, d/n_sub) PQ codebooks — per-subspace Lloyd k-means on the
-    SAME bounded deterministic sample discipline as _train_centroids (the
-    max_sample smallest xxhash64(vec_id) rows via TakeOrdered, init = first
+    """(n_sub, k, d/n_sub) PQ codebooks — per-subspace Lloyd k-means on
+    the `_training_sample` that _train_centroids also uses (init = first
     k sample subvectors in vec_id order, fixed iterations), so operators
     and tests recompute identical codebooks with driver memory capped at
     max_sample × dim float64 regardless of corpus size."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    sample_pdf = (
-        emb.orderBy(F.xxhash64(F.col("vec_id").cast("string")), "vec_id")
-        .limit(max_sample)
-        .toPandas()
-    )
-    raw_ids, raw_mat = _normalized_matrix(sample_pdf)
-    mat = raw_mat[np.argsort(raw_ids, kind="stable")]
+    mat = _training_sample(spark, sf_dir, max_sample)
     d = mat.shape[1]
     if d % n_sub:
         raise ValueError(f"embedding dim {d} not divisible by n_sub={n_sub}")
@@ -1672,8 +1693,8 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     side PRODUCT-QUANTIZED: vectors in the inverted cells are stored as
     M=4 codebook indexes (4 bytes) instead of 64 float64s, so the
     index shuffle and the per-cell resident set shrink ~128× while the
-    probe plan (nprobe=2 nearest cells, cogroup join, per-cell top-5,
-    global window top-5) stays identical. Scoring is ADC: the query stays
+    probe plan (`_ivf_probe_topk`: nprobe=2 nearest cells, cogroup join,
+    per-cell top-5, global window top-5) is the one IVF runs. Scoring is ADC: the query stays
     full-precision and scores against the RECONSTRUCTED codeword vectors
     x̂ — computed per cell from the tiny broadcast codebooks, never
     shuffled — through the same pinned `_cell_topk` kernel as IVF.
@@ -1689,7 +1710,6 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only by design (recall is approximate); the mechanism pin is the
     IVF one, re-based on x̂: output ≡ brute-force top-5 over ADC scores
     restricted to probed cells (tests/test_quality.py)."""
-    nprobe, k = 2, 5
     cents = _train_centroids(spark, sf_dir)
     books = _train_pq_codebooks(spark, sf_dir)
     bc = spark.sparkContext.broadcast((cents, books))
@@ -1718,50 +1738,11 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     index = emb.mapInPandas(encode, schema="vec_id long, cell int, code array<int>")
 
-    def probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c, _ = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids, mat = _normalized_matrix(pdf)
-            sims = mat @ c.T
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(ids, nprobe),
-                    "cell": top.ravel().astype(np.int32),
-                    "embedding": list(np.repeat(mat, nprobe, axis=0)),
-                }
-            )
-
-    q_df = emb.mapInPandas(
-        probes, schema="vec_id long, cell int, embedding array<double>"
-    )
-
-    def cell_topk_fn(q_pdf: pd.DataFrame, i_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"vec_id": [], "nbr_id": [], "sim": []})
-        if q_pdf.empty or i_pdf.empty:
-            return empty
-        _, bk = bc.value
-        q_ids = q_pdf["vec_id"].to_numpy(dtype=np.int64)
-        q_mat = np.vstack(q_pdf["embedding"].to_numpy())
-        i_ids = i_pdf["vec_id"].to_numpy(dtype=np.int64)
+    def reconstruct(i_pdf: pd.DataFrame) -> np.ndarray:
         codes = np.vstack(i_pdf["code"].to_numpy()).astype(np.int64)
-        recon = _pq_reconstruct(bk, codes)
-        return _cell_topk(q_ids, q_mat, i_ids, recon, k)
+        return _pq_reconstruct(bc.value[1], codes)
 
-    cands = (
-        q_df.groupby("cell")
-        .cogroup(index.groupby("cell"))
-        .applyInPandas(cell_topk_fn, schema="vec_id long, nbr_id long, sim double")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("nbr_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("vec_id", "nbr_id", "sim")
-        .orderBy("vec_id", F.desc("sim"), "nbr_id")
-    )
+    return _ivf_probe_topk(emb, cents, index, reconstruct, nprobe=2, k=5)
 
 
 # Matryoshka prefix dims: powers of two up to the contract embedding

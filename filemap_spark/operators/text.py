@@ -2372,6 +2372,27 @@ def text_ngram_coverage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPAN_TOKENS = 20  # rolling-window span granularity (tokens)
 
 
+def _window_docs(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """(doc_id, w) token arrays of the docs long enough to hold one
+    n-token window — shorter docs open no window and drop here."""
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.select("doc_id", F.split("text", " ").alias("w")).where(
+        F.size("w") >= n
+    )
+
+
+def _token_windows(ws: DataFrame, n: int) -> DataFrame:
+    """Rolling n-token windows of a `_window_docs` frame: one row
+    (doc_id, w, pos) per window start pos in [1, size(w) − n + 1], the
+    window itself being slice(w, pos, n). O(tokens) rows per doc; the
+    span kernel of dedup_span_exact and dedup_exact_substring."""
+    return ws.select(
+        "doc_id",
+        "w",
+        F.explode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias("pos"),
+    )
+
+
 @query(
     "dedup_span_exact",
     cost=1.2,
@@ -2410,15 +2431,8 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the letter of Lee et al.; the rolling-window hash join is the
     distributed-equivalent coverage at fixed granularity."""
     n = _SPAN_TOKENS
-    docs = load_table(spark, sf_dir, "documents")
     spans = (
-        docs.select("doc_id", F.split("text", " ").alias("w"))
-        .where(F.size("w") >= n)
-        .select(
-            "doc_id",
-            "w",
-            F.explode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias("pos"),
-        )
+        _token_windows(_window_docs(spark, sf_dir, n), n)
         .select(
             "doc_id",
             F.concat_ws(" ", F.expr(f"slice(w, pos, {n})")).alias("span"),
@@ -2716,6 +2730,19 @@ text_quality_classifier.__doc__ = text_quality_classifier.__doc__.format(
 )
 
 
+def _gopher_lab(docs: DataFrame) -> DataFrame:
+    """Gopher-labelled split frame (doc_id, ws, gopher_verdict): the
+    words array plus the shared `_gopher_columns` verdict — the noisy
+    label the NB and DSIR tiers train on. Batch callers localCheckpoint
+    it (one documents scan feeds the token explode, the label join and
+    the score join)."""
+    return docs.select(
+        "doc_id",
+        F.split("text", " ").alias("ws"),
+        _gopher_columns()["verdict"].alias("gopher_verdict"),
+    )
+
+
 def _nb_per_doc(
     spark: SparkSession, sf_dir: str, train_parity: int | None = None
 ) -> DataFrame:
@@ -2732,12 +2759,7 @@ def _nb_per_doc(
     full-corpus mode every scored bucket was trained on, so the
     coalesce is never exercised and the classifier's semantics are
     byte-identical to its pre-refactor round-15 form."""
-    docs = load_table(spark, sf_dir, "documents")
-    lab = docs.select(
-        "doc_id",
-        F.split("text", " ").alias("ws"),
-        _gopher_columns()["verdict"].alias("gopher_verdict"),
-    ).localCheckpoint()
+    lab = _gopher_lab(load_table(spark, sf_dir, "documents")).localCheckpoint()
     toks = lab.select(
         "doc_id", "gopher_verdict", F.explode("ws").alias("word")
     ).withColumn("bucket", _hash_bucket_col("word"))
@@ -4627,12 +4649,7 @@ def nb_ingest_counts(docs: DataFrame) -> DataFrame:
     foreachBatch entry point: a streaming ingest loop appends each
     micro-batch's table to its count ledger and the merged ledger is
     ALWAYS exactly the full-retrain model (tests/test_streaming.py)."""
-    lab = docs.select(
-        "doc_id",
-        F.split("text", " ").alias("ws"),
-        _gopher_columns()["verdict"].alias("gopher_verdict"),
-    )
-    return nb_count_table(lab)
+    return nb_count_table(_gopher_lab(docs))
 
 
 @query(
@@ -4733,12 +4750,7 @@ def text_quality_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _NB_INGEST_RUNS
     from filemap_spark.plans.memo import artifact_key, cached_by_key
 
-    docs = load_table(spark, sf_dir, "documents")
-    lab = docs.select(
-        "doc_id",
-        F.split("text", " ").alias("ws"),
-        _gopher_columns()["verdict"].alias("gopher_verdict"),
-    ).localCheckpoint()
+    lab = _gopher_lab(load_table(spark, sf_dir, "documents")).localCheckpoint()
     is_delta = F.col("doc_id") % 10 == 0
 
     def build_base() -> DataFrame:
@@ -4814,6 +4826,69 @@ _DSIR_SCORE_SQL = (
 )
 
 
+def _dsir_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc DSIR score frame (doc_id, s, n_feats) — the shared front
+    half of text_dsir_importance and text_dsir_resample: hashed bigrams
+    of the checkpointed Gopher-labelled split frame, the {B}-row
+    target/raw log-ratio model, and each doc's exact integer dot
+    product s (1e-4 units) over its n_feats bigrams. LEFT-joined back to
+    every doc, so docs with <2 words carry NULL s / n_feats (callers
+    coalesce them to 0)."""
+    lab = _gopher_lab(load_table(spark, sf_dir, "documents")).localCheckpoint()
+    bg = lab.select(
+        "doc_id",
+        "gopher_verdict",
+        F.explode(
+            F.expr(
+                "zip_with(slice(ws, 1, greatest(size(ws) - 1, 0)),"
+                " slice(ws, 2, greatest(size(ws) - 1, 0)),"
+                " (a, b) -> concat(a, ' ', b))"
+            )
+        ).alias("bg"),
+    ).withColumn("bucket", _hash_bucket_col("bg"))
+    # ONE tokenize pass (r18, the sample_importance_hashed r12 rewrite
+    # applied to the bigram model): the doc×bucket agg keeps the verdict
+    # as a grouping key (functionally dependent on doc_id — zero extra
+    # groups), and the per-bucket model distribution re-aggregates THAT
+    # frame instead of re-running the explode+md5 pipeline. Both
+    # consumers hang off one identical exchange subtree which
+    # ReuseExchange dedupes; the explicit no-op null guards keep every
+    # branch's inferred-filter set (hence canonical plan) identical —
+    # without them the joins push isnotnull() into only some branches
+    # and the scan+explode runs twice (the relational.py precedent).
+    dbl = (
+        bg.select("doc_id", "gopher_verdict", "bucket")
+        .where(F.col("doc_id").isNotNull() & F.col("bucket").isNotNull())
+        .groupBy("doc_id", "gopher_verdict", "bucket")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    raw = dbl.groupBy("bucket").agg(
+        F.sum("n").cast("bigint").alias("rk"),
+        F.sum(
+            F.when(F.col("gopher_verdict") == "keep", F.col("n")).otherwise(0)
+        ).cast("bigint").alias("tk"),
+    )
+    tot = raw.agg(
+        F.sum("rk").cast("bigint").alias("tr"),
+        F.sum("tk").cast("bigint").alias("tt"),
+    )
+    lo = raw.crossJoin(F.broadcast(tot)).select(
+        "bucket", F.expr(_DSIR_Q_SQL).alias("q")
+    )
+    sc = (
+        dbl.join(F.broadcast(lo), "bucket")
+        .groupBy("doc_id")
+        .agg(
+            F.sum(F.col("n") * F.col("q")).cast("bigint").alias("s"),
+            F.sum("n").cast("bigint").alias("n_feats"),
+        )
+    )
+    return lab.select("doc_id").join(sc, "doc_id", "left")
+
+
+_dsir_doc_scores.__doc__ = _dsir_doc_scores.__doc__.format(B=_HASH_FEATURE_BUCKETS)
+
+
 @query(
     "text_dsir_importance",
     cost=1.0,
@@ -4885,63 +4960,8 @@ def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     model is a {B}-row broadcast, scoring is one (doc, bucket) hash agg
     + broadcast join + doc-keyed agg. No vocabulary state at any corpus
     size — the hashing-trick property again."""
-    docs = load_table(spark, sf_dir, "documents")
-    lab = docs.select(
-        "doc_id",
-        F.split("text", " ").alias("ws"),
-        _gopher_columns()["verdict"].alias("gopher_verdict"),
-    ).localCheckpoint()
-    bg = lab.select(
-        "doc_id",
-        "gopher_verdict",
-        F.explode(
-            F.expr(
-                "zip_with(slice(ws, 1, greatest(size(ws) - 1, 0)),"
-                " slice(ws, 2, greatest(size(ws) - 1, 0)),"
-                " (a, b) -> concat(a, ' ', b))"
-            )
-        ).alias("bg"),
-    ).withColumn("bucket", _hash_bucket_col("bg"))
-    # ONE tokenize pass (r18, the sample_importance_hashed r12 rewrite
-    # applied to the bigram model): the doc×bucket agg keeps the verdict
-    # as a grouping key (functionally dependent on doc_id — zero extra
-    # groups), and the per-bucket model distribution re-aggregates THAT
-    # frame instead of re-running the explode+md5 pipeline. Both
-    # consumers hang off one identical exchange subtree which
-    # ReuseExchange dedupes; the explicit no-op null guards keep every
-    # branch's inferred-filter set (hence canonical plan) identical —
-    # without them the joins push isnotnull() into only some branches
-    # and the scan+explode runs twice (the relational.py precedent).
-    dbl = (
-        bg.select("doc_id", "gopher_verdict", "bucket")
-        .where(F.col("doc_id").isNotNull() & F.col("bucket").isNotNull())
-        .groupBy("doc_id", "gopher_verdict", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    raw = dbl.groupBy("bucket").agg(
-        F.sum("n").cast("bigint").alias("rk"),
-        F.sum(
-            F.when(F.col("gopher_verdict") == "keep", F.col("n")).otherwise(0)
-        ).cast("bigint").alias("tk"),
-    )
-    tot = raw.agg(
-        F.sum("rk").cast("bigint").alias("tr"),
-        F.sum("tk").cast("bigint").alias("tt"),
-    )
-    lo = raw.crossJoin(F.broadcast(tot)).select(
-        "bucket", F.expr(_DSIR_Q_SQL).alias("q")
-    )
-    sc = (
-        dbl.join(F.broadcast(lo), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.col("n") * F.col("q")).cast("bigint").alias("s"),
-            F.sum("n").cast("bigint").alias("n_feats"),
-        )
-    )
     return (
-        lab.select("doc_id")
-        .join(sc, "doc_id", "left")
+        _dsir_doc_scores(spark, sf_dir)
         .select(
             "doc_id",
             F.coalesce("n_feats", F.lit(0)).cast("bigint").alias("n_feats"),
@@ -5410,7 +5430,7 @@ def text_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, not by FP luck (ln's 1-ulp libm skew is absorbed by
     the 1e-4 grid, the davg_lnsafe argument). doc_id breaks ties.
 
-    Scale: identical plan skeleton to text_dsir_importance — ONE
+    Scale: the `_dsir_doc_scores` plan text_dsir_importance also runs — ONE
     documents scan (labeled frame checkpointed), map-side zip_with
     bigrams, a {B}-row broadcast model, one (doc, bucket) hash agg —
     plus a hash column and TakeOrdered(k): the selection adds NO new
@@ -5418,56 +5438,8 @@ def text_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-partition heap + driver merge of k rows (TakeOrdered), never
     a global sort. Composes with sample_importance_hashed (the
     unigram-lite ranking twin) and the quality/temperature mixes."""
-    docs = load_table(spark, sf_dir, "documents")
-    lab = docs.select(
-        "doc_id",
-        F.split("text", " ").alias("ws"),
-        _gopher_columns()["verdict"].alias("gopher_verdict"),
-    ).localCheckpoint()
-    bg = lab.select(
-        "doc_id",
-        "gopher_verdict",
-        F.explode(
-            F.expr(
-                "zip_with(slice(ws, 1, greatest(size(ws) - 1, 0)),"
-                " slice(ws, 2, greatest(size(ws) - 1, 0)),"
-                " (a, b) -> concat(a, ' ', b))"
-            )
-        ).alias("bg"),
-    ).withColumn("bucket", _hash_bucket_col("bg"))
-    # ONE tokenize pass — same r18 rewrite as text_dsir_importance (the
-    # shared-exchange comment there); verdict rides the doc×bucket agg
-    # key so the model distribution derives from it.
-    dbl = (
-        bg.select("doc_id", "gopher_verdict", "bucket")
-        .where(F.col("doc_id").isNotNull() & F.col("bucket").isNotNull())
-        .groupBy("doc_id", "gopher_verdict", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    raw = dbl.groupBy("bucket").agg(
-        F.sum("n").cast("bigint").alias("rk"),
-        F.sum(
-            F.when(F.col("gopher_verdict") == "keep", F.col("n")).otherwise(0)
-        ).cast("bigint").alias("tk"),
-    )
-    tot = raw.agg(
-        F.sum("rk").cast("bigint").alias("tr"),
-        F.sum("tk").cast("bigint").alias("tt"),
-    )
-    lo = raw.crossJoin(F.broadcast(tot)).select(
-        "bucket", F.expr(_DSIR_Q_SQL).alias("q")
-    )
-    sc = (
-        dbl.join(F.broadcast(lo), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.col("n") * F.col("q")).cast("bigint").alias("s"),
-            F.sum("n").cast("bigint").alias("n_feats"),
-        )
-    )
     keyed = (
-        lab.select("doc_id")
-        .join(sc, "doc_id", "left")
+        _dsir_doc_scores(spark, sf_dir)
         .select(
             "doc_id",
             F.coalesce("n_feats", F.lit(0)).cast("bigint").alias("n_feats"),
@@ -5596,18 +5568,9 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort, no driver state. The token-array frame is checkpointed
     doc-sized (the contamination-op precedent)."""
     n = _SUBSTR_SPAN_TOKENS
-    docs = load_table(spark, sf_dir, "documents")
-    ws = (
-        docs.select("doc_id", F.split("text", " ").alias("w"))
-        .where(F.size("w") >= n)
-        .localCheckpoint()
-    )
+    ws = _window_docs(spark, sf_dir, n).localCheckpoint()
     arr = F.expr(f"slice(w, pos, {n})")
-    keyed = ws.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias("pos"),
-        F.col("w"),
-    ).select(
+    keyed = _token_windows(ws, n).select(
         "doc_id",
         "pos",
         F.xxhash64(arr).alias("h1"),

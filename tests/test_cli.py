@@ -569,7 +569,9 @@ def test_dedup_modality_batch_and_stream_chain(spark, tmp_path):
     exactly the arriving batch), (b) surface the exact-duplicate pair
     that spans the two batches, and (c) leave a survivors corpus
     identical to a from-scratch batch `dedup --modality X` of the union
-    — the chained-corpus invariant the text test pins."""
+    — the chained-corpus invariant the text test pins. The ledger is
+    parked as an interrupted compaction leaves it between the two runs,
+    so (a)–(c) also pin that the stream heals it before ingesting."""
     from filemap_spark.cli import run_dedup, run_dedup_stream
 
     base = (
@@ -606,6 +608,10 @@ def test_dedup_modality_batch_and_stream_chain(spark, tmp_path):
         ledger = os.path.join(out, "_fp_state", "fingerprints.parquet")
         ids1 = {r["doc_id"] for r in spark.read.parquet(ledger).collect()}
         assert ids1 == {1, 3}
+        # a ledger compaction that died between its two renames leaves
+        # the ledger parked as .compact_old: the next run must heal it
+        # before the stream ingests, not start a fresh ledger
+        os.rename(ledger, ledger + ".compact_old")
 
         write_batch([2, 4])
         kept2, total2 = run_dedup_stream(
