@@ -396,8 +396,11 @@ def run_dedup_stream(
       - `text` (default): each micro-batch ingests into the persisted
         LSH index under OUTPUT/_lsh_state
         (operators/text.py:incremental_lsh_ingest) — unseen docs are
-        shingled/minhashed/banded once, the existing corpus contributes
-        through the index, never re-read;
+        shingled/minhashed/banded once; the existing corpus contributes
+        only through the index, whose files each batch scans (never
+        re-shingles). A batch small enough to broadcast probes the index
+        by its keys; a larger one (this verb sets no maxFilesPerTrigger,
+        so a run drains every new file as one batch) shuffles the index;
       - `image` / `audio` (round 15, VERDICT r14 task 7): each
         micro-batch ingests into the persisted fingerprint ledger under
         OUTPUT/_fp_state (functions/blocked.py:
@@ -409,7 +412,9 @@ def run_dedup_stream(
       - the survivors-only corpus is rebuilt from ledger + accumulated
         pairs via connected components (min-id survivor — the same rule
         as `dedup --method near`), written to OUTPUT/documents.parquet so
-        the output chains as a corpus dir.
+        the output chains as a corpus dir. This step is NOT incremental:
+        every run re-reads the whole input directory and all accumulated
+        pairs and rewrites the survivor corpus.
 
     Returns (kept, total-ingested). Re-running with no new files is a
     cheap no-op drain. tests/test_cli.py pins: two-batch arrival, the

@@ -115,44 +115,50 @@ def spread_single_split(df: DataFrame) -> DataFrame:
     return df
 
 
-# Logical operators whose presence means `.rdd.getNumPartitions()` will
-# plan (and under AQE, EXECUTE) a shuffle stage — the exact double-
-# execution hazard spread_single_split's precondition exists to prevent.
-# Narrow operators (Project/Filter/Generate/Union/scan relations) are
-# fine and deliberately not listed.
-_SPREAD_UNSAFE_NODES = (
-    "Join",
-    "Aggregate",
-    "Window",
-    "Sort",
-    "Deduplicate",
-    "Repartition",
-    "RepartitionByExpression",
-    "CollectMetrics",
-    "GlobalLimit",
+# Analyzed logical-plan nodes that keep a plan scan-only: a scan relation
+# (file source, checkpoint or RDD-backed rows) under row-wise operators
+# and analysis-only wrappers. An ALLOW-list: any other node — join,
+# aggregate, window, sort, distinct, set operation (intersect/except),
+# limit/offset, repartition — or any subquery means
+# `.rdd.getNumPartitions()` plans (and under AQE, EXECUTES) a shuffle
+# stage, the double-execution hazard spread_single_split's precondition
+# exists to prevent. A node nobody listed is refused, not waved through.
+_SCAN_ONLY_NODES = frozenset(
+    {
+        "LogicalRelation",
+        "LogicalRDD",
+        "LocalRelation",
+        "Project",
+        "Filter",
+        "Generate",
+        "Union",
+        "SubqueryAlias",
+        "View",
+    }
 )
 
 
 def _assert_scan_only(df: DataFrame) -> None:
-    """Raise if `df`'s analyzed plan contains a shuffle-inducing operator
-    (wide node or explicit repartition). Pure plan inspection — nothing is
-    executed; node names are matched as whole words at line starts of the
-    analyzed-plan tree, where each operator prints as `:- NodeName ...`."""
-    import re
-
-    plan = df._jdf.queryExecution().analyzed().toString()
-    hits = sorted(
-        {
-            node
-            for node in _SPREAD_UNSAFE_NODES
-            if re.search(rf"^[\s:+-]*'?{node}[ \[(]", plan, re.MULTILINE)
-        }
-    )
-    if hits:
+    """Raise if `df`'s analyzed logical plan holds a node outside
+    _SCAN_ONLY_NODES or a subquery expression. Pure plan inspection —
+    nothing is executed; the tree is walked node by node (children and
+    expression subqueries), never matched as plan text."""
+    bad = set()
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name not in _SCAN_ONLY_NODES:
+            bad.add(name)
+        if not node.subqueries().isEmpty():
+            bad.add("subquery")
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    if bad:
         raise ValueError(
             "spread_single_split requires a scan-only input plan "
             "(scan + narrow projections): found shuffle-inducing "
-            f"operator(s) {hits}. Probing partition counts here would "
+            f"operator(s) {sorted(bad)}. Probing partition counts here would "
             "re-execute every upstream AQE stage; use an unconditional "
             "bounded repartition instead (see functions/blocked.py)."
         )

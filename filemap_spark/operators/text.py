@@ -852,6 +852,12 @@ def _shingle_frame(docs: DataFrame) -> DataFrame:
 # LSH geometry shared by dedup_minhash_lsh and the incremental ingest:
 # r = 4 rows/band over 128 deterministic permutations → catches jaccard ≥ ~0.6
 _LSH_HASHES, _LSH_BANDS = 128, 32
+# Most rows incremental_lsh_ingest broadcasts to probe the persisted index
+# (probe bands, or candidate-id rows). A batch that could exceed it takes
+# the shuffle joins instead — same rows, index exchanged. The built probe
+# relation measured ~105 B a row (8.0 MiB for 79,968 rows, sf0.1), so
+# ~55 MB at the cap (≤ 16,384 new docs per batch).
+_LSH_BROADCAST_ROWS = 1 << 19
 
 
 def _keyed_by_text(docs: DataFrame) -> DataFrame:
@@ -1127,14 +1133,30 @@ def incremental_lsh_ingest(
     jaccard 1.0 by construction (emitted only for shingle-bearing texts,
     matching the old plan where shingle-less docs never reached a band).
 
-    Scale: per batch the shuffles touch O(|distinct new texts|) signature
-    fragments plus the probed buckets of the index; the index itself is an
-    appended columnar table that ingest never rewrites — and now grows
-    with distinct texts, not raw docs. (The separate `compact_lsh_state`
-    utility DOES rewrite, to fold accumulated per-batch file sets; its
-    hysteresis amortizes that cost over ≥ (slack−1)·ideal appends.)
-    Deterministic seeded permutations make signatures from different
-    batches comparable by construction."""
+    Scale: with state present and a batch of at most
+    _LSH_BROADCAST_ROWS / _LSH_BANDS new docs, the index is probed by the
+    batch's keys and never exchanged. Two frames are broadcast: the
+    probe bands (the batch's novel rep bands plus the stored bands of
+    touched old groups, at most _LSH_BANDS rows per new doc), which the
+    index bands stream through so only colliding rows reach the
+    candidate dedup; and the candidates' doc ids (two rows per candidate
+    pair, materialized once and counted), which semi-join both shingle
+    sources so verification reads only the candidates' shingles. Each
+    hint goes on only when its row bound fits _LSH_BROADCAST_ROWS; a
+    larger batch or candidate set keeps the shuffle joins (same rows,
+    the index exchanged). The saving grows with how much smaller the
+    arrival is than the index (measured at sf0.1, local[4]: a 5% arrival
+    wrote 16x fewer shuffle records, a 50% arrival 2.7x fewer, same
+    pairs). The exchanges that remain move the batch's signature
+    fragments, the candidate pairs and their shingles, plus the ledger
+    rows for pair expansion; the index files are scanned (streamed), not
+    re-partitioned. The stateless first ingest keeps plain shuffle joins
+    (its probe is the whole corpus). The index is an appended columnar
+    table that ingest never rewrites, growing with distinct texts. (The
+    separate `compact_lsh_state` utility DOES rewrite, to fold
+    accumulated per-batch file sets; its hysteresis amortizes that cost
+    over ≥ (slack−1)·ideal appends.) Deterministic seeded permutations
+    make signatures from different batches comparable by construction."""
     import os
 
     os.makedirs(state_dir, exist_ok=True)
@@ -1160,9 +1182,11 @@ def incremental_lsh_ingest(
             )
         new_docs = new_docs.join(ledger.select("doc_id"), "doc_id", "left_anti")
     # pin the delta (ledger append below must not flip the anti-join);
-    # thash rides along so the dup-collapse never rehashes text
-    keyed = _keyed_by_text(new_docs).localCheckpoint()
-    if not keyed.take(1):
+    # thash rides along so the dup-collapse never rehashes text. The
+    # count materializes the checkpoint and sizes the probe below.
+    keyed = _keyed_by_text(new_docs).localCheckpoint(eager=False)
+    n_new = keyed.count()
+    if not n_new:
         # nothing unseen: skip the whole band/verify machinery (a no-op
         # batch otherwise pays ~5 s of plan overhead — measured sf0.1)
         return spark.createDataFrame(
@@ -1248,8 +1272,24 @@ def incremental_lsh_ingest(
         j_reps = old_reps.join(
             keyed.select("thash").distinct(), "thash", "left_semi"
         ).select(F.col("rep_id").alias("doc_id"))
-        probe_bands = new_bands.unionByName(
-            idx_bands.join(j_reps, "doc_id", "left_semi")
+        # Probe by the arrival's keys: with the probe side BROADCAST the
+        # index bands stream through the hash probe with no exchange and
+        # only rows sharing a (band, bucket) with the probe leave the
+        # scan (a shuffle join moves every index band row on every
+        # arrival). The probe holds at most _LSH_BANDS rows per new doc
+        # (novel reps plus touched old groups, j_reps one id each), so
+        # the hints go on only when that bound fits _LSH_BROADCAST_ROWS;
+        # a larger batch keeps the shuffle joins. Not on the stateless
+        # first ingest below: there the probe IS the corpus.
+        bcast = (
+            F.broadcast
+            if n_new * _LSH_BANDS <= _LSH_BROADCAST_ROWS
+            else lambda df: df
+        )
+        probe_bands = bcast(
+            new_bands.unionByName(
+                idx_bands.join(bcast(j_reps), "doc_id", "left_semi")
+            )
         )
     else:
         all_bands = new_bands
@@ -1271,6 +1311,21 @@ def incremental_lsh_ingest(
         )
         .distinct()
     )
+    if have_state:
+        # Verify reads only the candidates' shingles: a broadcast
+        # semi-join on the candidate doc ids prunes both shingle sources
+        # before the verify exchanges (_jaccard_verify uses shingles and
+        # counts of candidate docs only). The candidates are materialized
+        # ONCE — the count, the id set and the verify join all read the
+        # checkpoint. The id set is two rows per candidate pair (not
+        # deduplicated: that would be one more exchange); past
+        # _LSH_BROADCAST_ROWS verify joins the unpruned shingles.
+        candidates = candidates.localCheckpoint(eager=False)
+        if 2 * candidates.count() <= _LSH_BROADCAST_ROWS:
+            cand_ids = candidates.select(
+                F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
+            )
+            all_sh = all_sh.join(F.broadcast(cand_ids), "doc_id", "left_semi")
     rep_pairs = _jaccard_verify(candidates, all_sh, threshold)
 
     # Expansion universe: all members (old + new) keyed directly on
@@ -5549,16 +5604,24 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the scalable Spark spelling of the letter of the paper, not an
     approximation of it.
 
-    Determinism: span equality rides a 128-bit key (two independently
-    seeded xxhash64 values of the token-slice ARRAY — injective to the
-    span string since tokens never contain the separator); a false
-    collision needs p ≈ n²/2¹²⁸, the `_keyed_by_text` discipline, and
-    the hash never reaches the output. The island split is integer
+    Determinism: span equality rides the key pair (h1, h2) — xxhash64
+    of the same token-slice ARRAY (injective to the span string since
+    tokens never contain the separator) under two seeds (h2 folds a
+    leading literal into its seed). These are NOT two independent
+    64-bit hashes: the seed only sets xxhash64's initial state, and
+    nothing in this non-cryptographic hash makes a pair that collides
+    under one seed spread under the other. The bound that holds is the
+    single-hash birthday bound over n distinct spans, p ≈ n²/2⁶⁵
+    (≈ 3·10⁻⁸ at n = 10⁶, ≈ 1 at n ≈ 6·10⁹); the second seed lowers it
+    only as far as the seeded functions behave independently, which is
+    unproven. A collision can only flag a non-repeated window as
+    duplicated (a spurious masked span); the hash never reaches the
+    output columns. The island split is integer
     position arithmetic over a doc-partitioned, position-ordered
     window; every output column is an exact integer.
 
     Scale (r18 rewrite, guide §2.1/§2.3): duplicate detection is ONE
-    pass — count(*) over a window keyed by the 128-bit span hash — so
+    pass — count(*) over a window keyed by the (h1, h2) span hashes — so
     the explode pipeline runs once and the only corpus-sized exchange
     moves 32-byte (hash, doc, pos) rows, never span strings (the
     pre-r18 shape built the ~50-token span string twice — once for the

@@ -1471,11 +1471,15 @@ def test_spread_single_split_rejects_shuffled_plans(spark, sf_dir):
     from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs.createOrReplaceTempView("spread_docs")
     # scan + narrow projection: accepted (the supported shape)
     spread_single_split(docs)
     spread_single_split(docs.where(F.length("text") > 0))
+    spread_single_split(spark.sql("SELECT doc_id FROM spread_docs"))
     # checkpoint scans are scan-like: accepted (incremental-path inputs)
+    spread_single_split(docs.limit(5).localCheckpoint().select("doc_id"))
     ck = docs.limit(0)  # cheap frame for plan-shape-only checks below
+    ids = docs.select("doc_id")
     for bad in (
         docs.join(docs.select("doc_id"), "doc_id", "left_anti"),
         docs.groupBy("doc_id").count(),
@@ -1483,6 +1487,16 @@ def test_spread_single_split_rejects_shuffled_plans(spark, sf_dir):
         docs.distinct(),
         docs.repartition(4),
         ck.join(ck.select("doc_id"), "doc_id"),
+        # wide nodes a plan-text match of listed names let through
+        ids.intersect(ids),
+        ids.exceptAll(ids),
+        ids.subtract(ids),
+        spark.sql("SELECT DISTINCT doc_id FROM spread_docs"),
+        docs.offset(3),
+        spark.sql(
+            "SELECT doc_id FROM spread_docs WHERE doc_id IN "
+            "(SELECT doc_id FROM spread_docs WHERE doc_id > 3)"
+        ),
     ):
         with _pytest.raises(ValueError, match="scan-only"):
             spread_single_split(bad)

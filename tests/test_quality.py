@@ -249,6 +249,73 @@ def test_incremental_lsh_only_new_docs_do_work(spark, sf_dir, tmp_path):
     assert spark.read.parquet(band_path).count() == rows_after_delta
 
 
+def _lsh_delta_ingest_shuffle(spark, sf_dir, state):
+    """Ingest the fixture corpus minus every 20th doc, then those docs as
+    a delta, and check the delta's pairs are exactly the true pairs
+    touching it. Returns the shuffle records written by every stage the
+    delta ingest ran (status store, attributed by stage-id range the way
+    perfbench/spans.py does) and the index's band-row count."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    from filemap_spark.operators.text import incremental_lsh_ingest
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    incremental_lsh_ingest(spark, docs.where(F.col("doc_id") % 20 != 0), state)
+    jsc = spark.sparkContext._jsc.sc()
+    dag, store, bus = jsc.dagScheduler(), jsc.statusStore(), jsc.listenerBus()
+    bus.waitUntilEmpty(60000)
+    lo = int(dag.nextStageId())
+    pairs = incremental_lsh_ingest(
+        spark, docs.where(F.col("doc_id") % 20 == 0), state
+    ).collect()
+    bus.waitUntilEmpty(60000)
+    hi = int(dag.nextStageId())
+    shuffled = 0
+    for s in range(lo, hi):
+        try:
+            sd = store.lastStageAttempt(s)
+        except Py4JJavaError:  # skipped stage: never attempted, wrote nothing
+            continue
+        shuffled += int(sd.shuffleWriteRecords())
+    index_rows = spark.read.parquet(os.path.join(state, "bands.parquet")).count()
+    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs}
+    exact = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in QUERIES["dedup_near_jaccard"](spark, sf_dir).collect()
+    }
+    assert got == {p: j for p, j in exact.items() if p[0] % 20 == 0 or p[1] % 20 == 0}
+    return shuffled, index_rows
+
+
+def test_incremental_lsh_delta_shuffles_less_than_the_index(spark, sf_dir, tmp_path):
+    """Counter pin: a delta ingest under the broadcast cap probes the
+    persisted index by the arrival's keys, so its exchanges move
+    delta-sized rows — fewer shuffle records than the index has band
+    rows. A plan that shuffles the index bands (or the shingles) to meet
+    the probe cannot pass."""
+    shuffled, index_rows = _lsh_delta_ingest_shuffle(
+        spark, sf_dir, str(tmp_path / "lsh_state")
+    )
+    assert shuffled < index_rows, (shuffled, index_rows)
+
+
+def test_incremental_lsh_past_broadcast_cap_shuffles_same_pairs(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The other side of the cap: a delta whose probe could exceed
+    _LSH_BROADCAST_ROWS takes the shuffle joins — the index is exchanged
+    (records reach its band-row count) and the pairs stay exact."""
+    from filemap_spark.operators import text
+
+    monkeypatch.setattr(text, "_LSH_BROADCAST_ROWS", 0)
+    shuffled, index_rows = _lsh_delta_ingest_shuffle(
+        spark, sf_dir, str(tmp_path / "lsh_state")
+    )
+    assert shuffled >= index_rows, (shuffled, index_rows)
+
+
 def _write_replica_corpus(spark, path: str) -> dict[int, str]:
     """The hot-bucket fixture (VERDICT r9 task 2's done-criterion corpus):
     a 10-member identical cluster (the k² band-bucket hot spot), a true
