@@ -27,7 +27,11 @@ from pyspark.sql.window import Window
 
 from filemap_spark.functions.numeric import mean_micro_6dp
 from filemap_spark.io import EVENTS_NORM_SQL, load_table
-from filemap_spark.operators.text import JACCARD_PAIR_CTES, SHINGLE_CTE
+from filemap_spark.operators.text import (
+    JACCARD_PAIR_CTES,
+    SHINGLE_CTE,
+    _shingle_frame,
+)
 from filemap_spark.registry import query
 
 
@@ -514,34 +518,16 @@ def dedup_cross_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRAIN SET AS A WHOLE, reporting the shared-shingle count and overlap
     ratio.
 
-    Scale shape: the join key is the shingle (same layout as
-    dedup_near_jaccard, but against a DISTINCT train-shingle set — a
-    semi-join-sized build side, not doc×doc pairs); one shuffle on the
-    shingle for the join, one on doc_id for the count. At 100 TB the
+    Scale shape: the per-doc distinct shingles are _shingle_frame's
+    map-side build (no doc_id exchange); the join key is the shingle
+    (same layout as dedup_near_jaccard, but against a DISTINCT
+    train-shingle set — a semi-join-sized build side, not doc×doc
+    pairs); one shuffle on the shingle for the join, one on doc_id for
+    the count. At 100 TB the
     shingle set is hash-partitioned and the held-out side is ~10% of the
     corpus streaming through it."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    sh = (
-        docs.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "word"))
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ",
-                "word",
-                F.lead("word", 1).over(w),
-                F.lead("word", 2).over(w),
-                F.lead("word", 3).over(w),
-                F.lead("word", 4).over(w),
-            ).alias("shingle"),
-            F.lead("word", 4).over(w).alias("w4"),
-        )
-        .where(F.col("w4").isNotNull())
-        .select("doc_id", "shingle")
-        .distinct()
-        # scanned by train-distinct, held-out, and held-out-count branches
-        .localCheckpoint()
-    )
+    # scanned by train-distinct, held-out, and held-out-count branches
+    sh = _shingle_frame(load_table(spark, sf_dir, "documents")).localCheckpoint()
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("long")
@@ -1935,10 +1921,15 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     does not already know). The sorted-distinct basket makes pa < pb
     by construction, and the pair rows per order are exactly the
     self-join's output, so the >= 2 shared-order gate is unchanged.
-    graph_jaccard_neighbors / graph_triangle_count keep the self-join
-    form deliberately: they are oracle-graded and their SQL twins state
-    the join literally (the r17 A/B note); LPA is rows-only, pinned by
-    the independent Python reference."""
+    Measured cold at sf0.1 (local[4], status-store shuffle writes), the
+    >= 2 pair set costs 17.16 MB / 1.35M records / 5 stages as baskets
+    and 18.58 MB / 1.80M records / 7 stages as the distinct + self-join,
+    so baskets stay here. The same build would also move less in
+    graph_jaccard_neighbors (whole op 17.86 vs 19.28 MB) and
+    graph_triangle_count (1.47 vs 2.19 MB), which still self-join. It
+    loses where postings are near-singletons: dedup_near_jaccard's
+    shingle overlap ships 6.86 MB as shingle baskets against 16 KB for
+    its self-join, which AQE broadcasts."""
     baskets = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_partkey").alias("p"), F.col("l_orderkey").alias("o"))

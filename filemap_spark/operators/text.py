@@ -4,9 +4,10 @@ scoring, token counting, fingerprinting, language-ID, exact & near dedup.
 
 These run on the `documents` table (space-separated lowercase bag-of-words,
 FIXTURES.md). Everything is built from explode/window/join/agg primitives —
-no Python UDFs — so the same plans scale to a 100 TB corpus: tokenization
-explodes into (doc, pos, word) rows that partition by doc_id; shingle joins
-shuffle on the shingle hash, which is the standard dedup layout.
+no Python UDFs — so the same plans scale to a 100 TB corpus: n-grams are
+sliced map-side from each doc's token array (`_ngrams`), so no tokenization
+step shuffles; shingle joins shuffle on the shingle hash, which is the
+standard dedup layout.
 """
 
 from __future__ import annotations
@@ -34,6 +35,37 @@ def _tokens(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "word")
     )
+
+
+def _ngrams(w: Column, n: int) -> Column:
+    """The in-order array of n-token slices of token-array column `w` —
+    empty when `w` is NULL or has fewer than n tokens (guarded, because
+    sequence(1, 0) counts down instead of coming back empty). Built
+    map-side from each doc's own array, so an n-gram stream costs no
+    per-doc window: no doc_id exchange, no sort."""
+    return F.when(
+        F.size(w) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(w) - (n - 1)), lambda i: F.slice(w, i, n)
+        ),
+    ).otherwise(F.array())
+
+
+def _bigrams(docs: DataFrame) -> DataFrame:
+    """(doc_id, w1, w2) — every adjacent token pair of every doc."""
+    return docs.select(
+        "doc_id", F.explode(_ngrams(F.split("text", " "), 2)).alias("ng")
+    ).select("doc_id", F.col("ng")[0].alias("w1"), F.col("ng")[1].alias("w2"))
+
+
+def _bigram_counts(bg: DataFrame, c: str) -> DataFrame:
+    """(w1, w2, c): the corpus bigram count table of a `_bigrams` frame,
+    materialized once (round-10 scan sweep) so every marginal the LM and
+    collocation ops need derives FROM it — exact integer sums — instead
+    of re-tokenizing the corpus per marginal. Reduced to distinct
+    bigrams (Zipf-bounded, ≪ corpus); the per-bigram stream itself stays
+    un-checkpointed (corpus-sized rows, the bm25 full-tf lesson)."""
+    return bg.groupBy("w1", "w2").agg(F.count("*").alias(c)).localCheckpoint()
 
 
 @query(
@@ -73,17 +105,11 @@ def text_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc bigrams via posexplode + lead window; top-30."""
+    """Per-doc bigrams, built map-side by _ngrams; top-30."""
     docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("doc_id").orderBy("pos")
     return (
-        _tokens(docs)
-        .select(
-            F.concat_ws(" ", "word", F.lead("word").over(w)).alias("bigram"),
-            F.lead("word").over(w).alias("nxt"),
-        )
-        .where(F.col("nxt").isNotNull())
-        .groupBy("bigram")
+        docs.select(F.explode(_ngrams(F.split("text", " "), 2)).alias("ng"))
+        .groupBy(F.concat_ws(" ", "ng").alias("bigram"))
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))
         .limit(30)
@@ -358,36 +384,31 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     taken by the single most frequent bigram — the standard screens for
     boilerplate loops and keyword-stuffed spam in a pretraining corpus.
 
-    Token stats come straight off the split array (JVM, no extra scan
-    branch); only the bigram frequency needs relational machinery: explode
-    (doc_id, pos, word), lead() within doc, then two keyed aggregations.
-    Every shuffle is on doc_id or (doc_id, bigram) — the natural corpus
-    partitioning — so the plan is the one you'd run at 100 TB: no all-pairs,
-    no driver state, group sizes bounded by document length."""
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
-        F.size(F.array_distinct(F.split("text", " "))).alias("n_uniq"),
-    )
-    toks = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "word")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    per_doc = (
-        toks.select(
-            "doc_id",
-            F.concat_ws(" ", "word", F.lead("word").over(w)).alias("bigram"),
-            F.lead("word").over(w).alias("nxt"),
-        )
-        .where(F.col("nxt").isNotNull())
-        .groupBy("doc_id", "bigram")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id")
-        .agg(F.max("c").alias("top_big"), F.sum("c").alias("n_bigrams"))
-    )
+    Token stats come straight off the split array; the bigrams come off
+    it too (_ngrams, map-side), and only their per-doc frequency needs
+    relational machinery. Scale: the documents are exchanged ONCE by
+    doc_id — one row per doc, never one per token — and both keyed
+    aggregations ((doc_id, bigram), then doc_id) ride that partitioning
+    with no exchange of their own. The token stats are grouping keys
+    functionally dependent on doc_id (zero extra groups), so there is no
+    join back; explode_outer keeps docs with < 2 tokens as one NULL
+    bigram counted as 0. No all-pairs, no driver state, group sizes
+    bounded by document length."""
+    w = F.split("text", " ")
+    n_bigrams = F.col("n_bigrams")
     return (
-        tok.join(per_doc, "doc_id", "left")
+        load_table(spark, sf_dir, "documents")
+        .repartition("doc_id")
+        .select(
+            "doc_id",
+            F.size(w).cast("bigint").alias("n_tokens"),
+            F.size(F.array_distinct(w)).alias("n_uniq"),
+            F.explode_outer(_ngrams(w, 2)).alias("ng"),
+        )
+        .groupBy("doc_id", "n_tokens", "n_uniq", F.concat_ws(" ", "ng").alias("bigram"))
+        .agg(F.count("ng").alias("c"))
+        .groupBy("doc_id", "n_tokens", "n_uniq")
+        .agg(F.max("c").alias("top_big"), F.sum("c").alias("n_bigrams"))
         .select(
             "doc_id",
             "n_tokens",
@@ -395,9 +416,8 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "uniq_token_ratio"
             ),
             F.round(
-                F.coalesce(
-                    F.col("top_big").cast("double") / F.col("n_bigrams"), F.lit(0.0)
-                ),
+                F.when(n_bigrams > 0, F.col("top_big").cast("double") / n_bigrams)
+                .otherwise(0.0),
                 6,
             ).alias("top_bigram_frac"),
         )
@@ -487,27 +507,12 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE broadcasts them while small, shuffled-hash-joins them at corpus
     scale (the text_unigram_logprob OOM lesson)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "word")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bg = (
-        toks.select(
-            "doc_id",
-            F.col("word").alias("w1"),
-            F.lead("word").over(w).alias("w2"),
-        )
-        .where(F.col("w2").isNotNull())
-    )
-    # the bigram count table is materialized once and the w1-marginal
-    # derives FROM it (sum of c12 over w1 ≡ count of bigrams starting
-    # with w1 — exact integers), round-10 scan sweep: the r5-r10 form
-    # re-ran the corpus bigram window for each count (4 corpus scans →
-    # 3). bg itself stays un-checkpointed deliberately — it is
-    # corpus-sized per-bigram rows, the bm25 full-tf lesson.
-    c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12")).localCheckpoint()
+    bg = _bigrams(docs)
+    # the w1-marginal derives FROM the count table (sum of c12 over w1 ≡
+    # count of bigrams starting with w1 — exact integers)
+    c12 = _bigram_counts(bg, "c12")
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    v = toks.agg(F.countDistinct("word").alias("v"))
+    v = _tokens(docs).agg(F.countDistinct("word").alias("v"))
     return (
         bg.join(c12, ["w1", "w2"])
         .join(c1, "w1")
@@ -828,25 +833,17 @@ def _shingle_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle): DISTINCT word-5-gram shingles — the Spark twin of
     SHINGLE_CTE, shared by the LSH family (minhash, incremental).
 
-    Round 9 (while cutting the incremental-LSH ingest path, VERDICT r8
-    task 5): built MAP-SIDE from the split array — transform over start
-    positions + array_distinct inside each doc, then explode — zero
-    shuffle, where the r1-r8 form paid a doc_id-window shuffle+sort (four
+    Built MAP-SIDE from the split array — the _ngrams 5-token slices,
+    joined and array_distinct'ed inside each doc, then exploded — zero
+    shuffle, where a lead()-window form pays a doc_id shuffle+sort (four
     leads) plus a global distinct exchange. Per-doc array_distinct equals
     the global DISTINCT (doc_id, shingle) because doc_id is in the key;
     values are bit-identical, pinned by the oracle hashes of the whole
     LSH/ngram family. At 100 TB this makes shingling embarrassingly
     parallel — the first shuffle in every dedup plan is now the one keyed
     on the shingle itself."""
-    sh = (
-        "array_distinct(CASE WHEN size(w) >= 5 THEN"
-        " transform(sequence(1, size(w) - 4),"
-        "           i -> concat_ws(' ', slice(w, i, 5)))"
-        " ELSE array() END)"
-    )
-    return docs.select("doc_id", F.split("text", " ").alias("w")).select(
-        "doc_id", F.explode(F.expr(sh)).alias("shingle")
-    )
+    sh = F.transform(_ngrams(F.split("text", " "), 5), lambda g: F.concat_ws(" ", g))
+    return docs.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
 
 
 # LSH geometry shared by dedup_minhash_lsh and the incremental ingest:
@@ -1387,6 +1384,16 @@ def incremental_lsh_ingest(
     # single-task memory scan and the state grows ONE file per table
     # per batch instead of one per shuffle partition (guide §6
     # small-files; later probes pay per-file open cost).
+    # Crash exposure of the concurrent pair: either append can commit
+    # without the other. Bands committed WITHOUT their shingles is a
+    # state the sequential order never left: a later arrival's band probe
+    # still returns those reps as candidates, but _jaccard_verify inner-
+    # joins their (missing) shingles, so every such pair is dropped as if
+    # dissimilar — silently, and for good, because the ledger row stops
+    # the docs from ever being re-appended. Shingles without bands, like
+    # a ledger row without either, only hides the docs from later probes.
+    # Nothing detects or repairs either state (_recover_compact_swap
+    # heals compaction swaps only).
     new_rows.coalesce(1).write.mode("append").parquet(ing_path)
     from concurrent.futures import ThreadPoolExecutor
 
@@ -1418,7 +1425,14 @@ def _recover_compact_swap(path: str) -> None:
     Idempotent; called by every reader/writer entry point so a crashed
     compaction can never silently present as an EMPTY state (an absent
     ledger would make the next ingest start fresh and drop the old
-    membership rows — review finding, round 10)."""
+    membership rows — review finding, round 10).
+
+    It does NOT heal a partial ingest commit: incremental_lsh_ingest
+    appends shingles.parquet and bands.parquet concurrently after the
+    ledger, so a crash can leave bands committed with their shingles
+    missing (or the reverse). Such state passes through here unchanged,
+    and candidates from those bands then fail verification silently
+    (see the comment at the appends)."""
     import os
     import shutil
 
@@ -2319,22 +2333,14 @@ def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts while the vocab is small — same no-hint discipline as
     text_unigram_logprob); top-50 collapses to TakeOrdered."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(docs)
     # both count tables materialized once (round-10 scan sweep): u1/u2
     # each re-ran the unigram agg and n_big/main each re-ran the bigram
-    # window+agg — 5 corpus scans; checkpointing the two REDUCED count
-    # frames and deriving the token total as sum(c) over the unigram
-    # table (identical integer by construction) leaves exactly 2
-    uni = toks.groupBy("word").agg(F.count("*").alias("c")).localCheckpoint()
+    # agg — 5 corpus scans; checkpointing the two REDUCED count frames
+    # and deriving the token total as sum(c) over the unigram table
+    # (identical integer by construction) leaves exactly 2
+    uni = _tokens(docs).groupBy("word").agg(F.count("*").alias("c")).localCheckpoint()
     n_uni = uni.agg(F.sum("c").alias("n"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bc = (
-        toks.select(F.col("word").alias("w1"), F.lead("word").over(w).alias("w2"))
-        .where(F.col("w2").isNotNull())
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("cb"))
-        .localCheckpoint()
-    )
+    bc = _bigram_counts(_bigrams(docs), "cb")
     n_big = bc.agg(F.sum("cb").alias("m"))
     u1 = uni.select(F.col("word").alias("w1"), F.col("c").alias("c1"))
     u2 = uni.select(F.col("word").alias("w2"), F.col("c").alias("c2"))
@@ -3440,35 +3446,36 @@ def text_rouge2_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: bigram sets are exact strings; recall is the raw IEEE
     quotient of two exact integers — identical in both engines.
 
-    Scale: per-doc bigram extraction is the text_ngrams shape (posexplode
-    + lead over (doc, pos) — one doc-keyed exchange); the overlap join is
-    an EQUI-join on (adjacent id, lang, bigram) — never doc×doc; the
-    count and the n_ref denominator are wordcount-shaped aggs. For
-    arbitrary (not id-adjacent) pair sets, the same plan applies with the
-    pair list broadcast."""
-    toks = (
+    Scale: the documents are exchanged ONCE by doc_id (one row per doc,
+    never one per token); each doc's distinct bigram set is built
+    map-side (_ngrams + array_distinct — doc_id is in the key, so the
+    per-doc set IS the global DISTINCT) and carries its size as n_ref,
+    so there is no distinct exchange and no n_ref join. The overlap join
+    is an EQUI-join on (adjacent id, lang, bigram) — never doc×doc — and
+    AQE sizes it from the doc exchange; the hit count groups on the
+    stream side's doc_id partitioning. For arbitrary (not id-adjacent)
+    pair sets, the same plan applies with the pair list broadcast."""
+    big = F.array_distinct(
+        F.transform(
+            _ngrams(F.split(F.lower(F.col("text")), " "), 2),
+            lambda g: F.concat_ws(" ", g),
+        )
+    )
+    bgd = (
         load_table(spark, sf_dir, "documents")
+        .repartition("doc_id")
+        .select("doc_id", "lang", big.alias("bg"))
         .select(
             "doc_id",
             "lang",
-            F.posexplode(F.split(F.lower(F.col("text")), " ")).alias("pos", "word"),
+            F.size("bg").cast("bigint").alias("n_ref"),
+            F.explode("bg").alias("bigram"),
         )
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bgd = (
-        toks.withColumn("nxt", F.lead("word").over(w))
-        .where(F.col("nxt").isNotNull())
-        .select(
-            "doc_id", "lang", F.concat_ws(" ", "word", "nxt").alias("bigram")
-        )
-        .distinct()
-    )
-    nref = bgd.groupBy(F.col("doc_id").alias("ref_key")).agg(
-        F.count("*").alias("n_ref")
     )
     ra = bgd.select(
         F.col("doc_id").alias("ref_id"),
         F.col("lang").alias("ref_lang"),
+        "n_ref",
         "bigram",
     )
     ca = bgd.select(
@@ -3476,18 +3483,15 @@ def text_rouge2_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").alias("cand_lang"),
         F.col("bigram").alias("cand_bigram"),
     )
-    hits = (
+    return (
         ra.join(
             ca,
             (ca.cand_id == ra.ref_id + 1)
             & (ca.cand_lang == ra.ref_lang)
             & (ca.cand_bigram == ra.bigram),
         )
-        .groupBy("ref_id", "cand_id")
+        .groupBy("ref_id", "cand_id", "n_ref")
         .agg(F.count("*").alias("n_overlap"))
-    )
-    return (
-        hits.join(nref, hits.ref_id == nref.ref_key)
         .select(
             "ref_id",
             "cand_id",
@@ -3918,18 +3922,7 @@ def text_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts them while vocab-sized; the 1-row N broadcasts; top-30
     collapses to TakeOrdered on the integer key."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(docs)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    # materialized once (round-10 scan sweep): r1/r2/nb/main each re-ran
-    # the corpus bigram window+agg — 4 corpus scans; the count table is
-    # REDUCED (distinct bigrams), so one checkpoint leaves exactly 1
-    bc = (
-        toks.select(F.col("word").alias("w1"), F.lead("word").over(w).alias("w2"))
-        .where(F.col("w2").isNotNull())
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("cb"))
-        .localCheckpoint()
-    )
+    bc = _bigram_counts(_bigrams(docs), "cb")
     r1 = bc.groupBy("w1").agg(F.sum("cb").alias("c1"))
     r2 = bc.groupBy("w2").agg(F.sum("cb").alias("c2"))
     nb = bc.agg(F.sum("cb").alias("m"))
@@ -4894,11 +4887,7 @@ def _dsir_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "gopher_verdict",
         F.explode(
-            F.expr(
-                "zip_with(slice(ws, 1, greatest(size(ws) - 1, 0)),"
-                " slice(ws, 2, greatest(size(ws) - 1, 0)),"
-                " (a, b) -> concat(a, ' ', b))"
-            )
+            F.transform(_ngrams(F.col("ws"), 2), lambda g: F.concat_ws(" ", g))
         ).alias("bg"),
     ).withColumn("bucket", _hash_bucket_col("bg"))
     # ONE tokenize pass (r18, the sample_importance_hashed r12 rewrite
@@ -5010,8 +4999,8 @@ def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal path, and the gate compares the integer sum to zero.
 
     Scale: ONE documents scan (labeled frame checkpointed); bigrams are
-    built map-side with zip_with on the split array (no per-doc window
-    shuffle — contrast text_bigram_pmi, which needs positions); the
+    built map-side by _ngrams on the split array (no per-doc window
+    shuffle); the
     model is a {B}-row broadcast, scoring is one (doc, bucket) hash agg
     + broadcast join + doc-keyed agg. No vocabulary state at any corpus
     size — the hashing-trick property again."""
@@ -5104,20 +5093,8 @@ def text_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNHINTED (AQE broadcasts while small, shuffled-hash at 100 TB — the
     text_unigram_logprob OOM lesson); the 1-row total is broadcast."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(docs)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bg = (
-        toks.select(
-            "doc_id",
-            F.col("word").alias("w1"),
-            F.lead("word").over(w).alias("w2"),
-        )
-        .where(F.col("w2").isNotNull())
-    )
-    # one materialization feeds all three marginals + the probe join —
-    # the text_bigram_logprob round-10 scan-sweep form; bg itself stays
-    # un-checkpointed (corpus-sized per-bigram rows, the bm25 lesson).
-    c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12")).localCheckpoint()
+    bg = _bigrams(docs)
+    c12 = _bigram_counts(bg, "c12")
     fw = c12.groupBy("w1").agg(
         F.sum("c12").cast("bigint").alias("c1"),
         F.count("*").cast("bigint").alias("n1fw"),
@@ -5224,21 +5201,11 @@ _CONTAM_BASE_RUNS = 0
 
 def _contam_ngrams(ws_frame: DataFrame) -> DataFrame:
     """(doc_id, ng) — the exploded {N}-gram stream over a (doc_id, ws)
-    token-array frame; map-side transform-over-slice, empty for docs
+    token-array frame; map-side _ngrams slices, empty for docs
     shorter than {N} tokens (shared by the batch and incremental
     decontamination ops)."""
-    n = _CONTAM_N
-    return ws_frame.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"case when size(ws) >= {n} then"
-                f" transform(sequence(1, size(ws) - {n} + 1),"
-                f" i -> array_join(slice(ws, i, {n}), ' '))"
-                f" else slice(ws, 1, 0) end"
-            )
-        ).alias("ng"),
-    )
+    ng = F.transform(_ngrams(F.col("ws"), _CONTAM_N), lambda g: F.concat_ws(" ", g))
+    return ws_frame.select("doc_id", F.explode(ng).alias("ng"))
 
 
 def _contam_report(tr: DataFrame, ev: DataFrame) -> DataFrame:
@@ -5486,7 +5453,7 @@ def text_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1e-4 grid, the davg_lnsafe argument). doc_id breaks ties.
 
     Scale: the `_dsir_doc_scores` plan text_dsir_importance also runs — ONE
-    documents scan (labeled frame checkpointed), map-side zip_with
+    documents scan (labeled frame checkpointed), map-side _ngrams
     bigrams, a {B}-row broadcast model, one (doc, bucket) hash agg —
     plus a hash column and TakeOrdered(k): the selection adds NO new
     shuffle. At 100 TB, k scales to the token budget and the top-k is

@@ -10,10 +10,12 @@ from __future__ import annotations
 import pytest
 
 from filemap_spark import all_oracle, all_queries
+from filemap_spark.registry import _META
 from filemap_spark.testing import run_one
 
 QUERIES = all_queries()
 ORACLE = all_oracle()
+FAMILIES = sorted({family for family, _idx, _cost in _META.values()})
 
 
 def test_entry_contract(spark):
@@ -24,14 +26,15 @@ def test_entry_contract(spark):
     assert set(mod.oracle_sql()) <= set(mod.queries())
 
 
-def test_query_matches_oracle(spark, sf_dir):
-    """All 327 registered queries vs their DuckDB oracles, swept over a
-    thread pool (r18, VERDICT r17 task 3: the serial one-test-per-op
-    sweep was ~9 min of suite wall (r18 durations profile); each op is an independent
-    plan + toPandas + per-thread DuckDB connection, so the sweep
-    parallelizes cleanly and the wall drops to the stragglers). Every
-    failure is reported by name — same coverage, same assertions as the
-    per-param form this replaces."""
+@pytest.mark.parametrize("family", FAMILIES)
+def test_query_matches_oracle(spark, sf_dir, family):
+    """Every registered query of one registry family (its operators/
+    module) vs its DuckDB oracle, swept over a thread pool: each op is an
+    independent plan + toPandas + per-thread DuckDB connection, so the
+    sweep parallelizes cleanly and the wall drops to the stragglers. The
+    families together cover all registered queries, and a failure reruns
+    one family, not the whole registry. Every failure is reported by
+    name."""
     from concurrent.futures import ThreadPoolExecutor
 
     def one(name):
@@ -41,7 +44,8 @@ def test_query_matches_oracle(spark, sf_dir):
         except Exception as exc:  # surface, keep sweeping
             return name, f"{type(exc).__name__}: {exc}"
 
+    names = sorted(n for n in QUERIES if _META[n][0] == family)
     with ThreadPoolExecutor(max_workers=12) as pool:
-        results = list(pool.map(one, sorted(QUERIES)))
+        results = list(pool.map(one, names))
     failures = {n: d for n, d in results if d is not None}
     assert not failures, failures

@@ -1000,6 +1000,42 @@ def test_cumsum_rank_col_equals_window_row_number(spark):
     assert got == want
 
 
+def test_ngrams_kernel_matches_python_slices(spark):
+    """_ngrams (the one n-gram kernel of the text ops) equals Python's
+    in-order n-token slices on the edge cases: NULL text, the empty
+    string, fewer than n tokens (where sequence(1, 0) would count DOWN
+    and yield two bogus slices), exactly n tokens, and consecutive spaces
+    (empty tokens are tokens)."""
+    from filemap_spark.operators.text import _ngrams
+
+    ns = (2, 5, 13)
+    texts = [
+        None,
+        "",
+        "a",
+        "a b c d",
+        "a b",
+        "a b c d e",
+        " ".join(f"t{i}" for i in range(13)),
+        "a  b   c ",
+        " ".join(f"w{i}" for i in range(30)),
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    rows = (
+        df.select(
+            "id",
+            *[_ngrams(F.split("text", " "), n).alias(f"g{n}") for n in ns],
+        )
+        .orderBy("id")
+        .collect()
+    )
+    for r in rows:
+        toks = [] if texts[r["id"]] is None else texts[r["id"]].split(" ")
+        for n in ns:
+            want = [toks[i : i + n] for i in range(len(toks) - n + 1)]
+            assert [list(g) for g in r[f"g{n}"]] == want, (texts[r["id"]], n)
+
+
 def test_mapside_shingle_frame_equals_lead_window_form(spark, sf_dir):
     """Round-9 rewrite pin: the map-side _shingle_frame (per-doc
     array_distinct over transform'd 5-gram slices, zero shuffle) must

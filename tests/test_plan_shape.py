@@ -172,17 +172,50 @@ def test_session_window_single_data_shuffle(spark, sf_dir):
 
 
 def test_repetition_stats_single_token_shuffle(spark, sf_dir):
-    """Round 3: one hashpartitioning(doc_id) exchange on the exploded token
-    relation must feed the lead() window AND both downstream aggregations
-    (groupBy(doc_id, bigram), then groupBy(doc_id) — hash on doc_id
-    satisfies both clustered distributions). The only other exchange is the
-    final presentation sort."""
+    """One hashpartitioning(doc_id) exchange of the documents must feed
+    both aggregations (groupBy(doc_id, bigram), then groupBy(doc_id) —
+    hash on doc_id satisfies both clustered distributions); the bigrams
+    are sliced map-side, so no window sorts the tokens. The only other
+    exchange is the final presentation sort."""
     plan = plan_of(spark, sf_dir, "text_repetition_stats")
     nodes = _tree_nodes(plan)
     data_exchanges = [n for n in nodes if n == "Exchange"]
-    assert len(data_exchanges) == 2, nodes  # token shuffle + final range sort
+    assert len(data_exchanges) == 2, nodes  # doc shuffle + final range sort
     assert plan.count("hashpartitioning(doc_id") == 1, plan
-    assert nodes.count("Window") == 1, nodes
+    assert "Window" not in nodes, nodes
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "text_ngrams",
+        "text_repetition_stats",
+        "text_bigram_logprob",
+        "text_bigram_pmi",
+        "text_rouge2_recall",
+        "text_collocation_llr",
+        "text_kneser_ney_logprob",
+        "dedup_cross_split",
+    ],
+)
+def test_ngram_ops_slice_map_side_not_lead_window(spark, sf_dir, name, monkeypatch):
+    """The n-gram ops build their n-grams with the map-side _ngrams kernel:
+    no lead() window — and so no doc_id exchange + sort of every token
+    row — may appear in the physical plan, nor in the plan of any frame
+    the op localCheckpoints while it builds its query (the bigram count
+    tables, the shingle set), which the query's plan shows only as a
+    scan."""
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    plans = []
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    plans.append(plan_of(spark, sf_dir, name))
+    assert not [p for p in plans if "lead(" in p]
 
 
 def test_domain_mix_corpus_never_shuffles(spark, sf_dir):
@@ -1510,5 +1543,5 @@ def test_dsir_ops_single_tokenize(spark, sf_dir):
     reused exchange — not once per distribution."""
     for name in ("text_dsir_importance", "text_dsir_resample"):
         plan = _final_adaptive_plan(spark, sf_dir, name)
-        assert plan.count("zip_with") == 1, (name, plan.count("zip_with"))
+        assert plan.count("Generate explode(") == 1, (name, plan)
         assert plan.count("ReusedExchange") >= 1, name
