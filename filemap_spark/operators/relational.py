@@ -1376,6 +1376,65 @@ def subq_idle_customers_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _order_baskets(
+    spark: SparkSession, sf_dir: str, parts: DataFrame | None = None
+) -> DataFrame:
+    """(o, ps): each order's sorted distinct part keys — one collect_set
+    agg, so ONE exchange on the order key. `parts` (a `p_partkey` frame)
+    restricts the baskets to those parts by a broadcast semi-join before
+    the agg. Feeds _co_order_pairs; the baskets also give each part's
+    order degree directly (explode ps, count per part)."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_partkey").alias("p"), F.col("l_orderkey").alias("o")
+    )
+    if parts is not None:
+        li = li.join(
+            F.broadcast(parts), F.col("p") == F.col("p_partkey"), "left_semi"
+        )
+    return li.groupBy("o").agg(F.sort_array(F.collect_set("p")).alias("ps"))
+
+
+def _co_order_pairs(baskets: DataFrame) -> DataFrame:
+    """(pa, pb, i): part pairs with pa < pb and the number of orders they
+    share — the co-order edge build of graph_triangle_count,
+    graph_jaccard_neighbors and graph_label_propagation.
+
+    Pairs come from an ordered array self-product inside each
+    _order_baskets basket, then one (pa, pb) count agg. The
+    sorted-distinct basket makes pa < pb by construction, and the pair
+    rows per order are exactly what a (part, order) distinct + order-key
+    self-join emits, without that shape's distinct exchange,
+    localCheckpoint and join re-exchange (guide §2.4: the distinct and
+    the join decided nothing the basket array does not already know).
+    Measured cold at sf0.1 (local[4], status-store shuffle writes), the
+    >= 2 shared-order pair set costs 17.16 MB / 1.35M records / 5 stages
+    as baskets and 18.58 MB / 1.80M records / 7 stages as the distinct +
+    self-join; whole graph_jaccard_neighbors 17.86 vs 19.28 MB, whole
+    graph_triangle_count 1.47 vs 2.19 MB.
+    Pair volume is Σ_orders |basket|², bounded by basket size, never
+    part × part; a pathological mega-basket is the skew surface, handled
+    by capping or salting the hot order key.
+
+    Baskets lose where postings are near-singletons:
+    dedup_near_jaccard's shingle overlap ships 6.86 MB as shingle
+    baskets against 16 KB for its self-join, which AQE broadcasts — so
+    that op keeps its self-join."""
+    return (
+        baskets.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ps, (x, i) ->"
+                    " transform(slice(ps, i + 2, size(ps) - i - 1),"
+                    " y -> struct(x AS pa, y AS pb))))"
+                )
+            ).alias("e")
+        )
+        .select("e.pa", "e.pb")
+        .groupBy("pa", "pb")
+        .agg(F.count(F.lit(1)).alias("i"))
+    )
+
+
 @query(
     "graph_triangle_count",
     oracle="""
@@ -1407,39 +1466,27 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: integer keys and counts only.
 
-    Scale: the edge list derives from ONE distinct-pair pass per order
-    (per-order part lists are small, so pair generation is bounded ×
-    orders, never parts²); the wedge join is the scale hazard — Σ deg(v)²
-    — bounded here by the type restriction, and the 100 TB mitigation is
-    the standard DEGREE orientation (point each edge from lower- to
-    higher-degree endpoint, making max wedge count O(edges^1.5)): same
-    plan, one extra degree agg + broadcast. All three joins are hash
-    equi-joins keyed on node ids; AQE reuses the edge exchange across the
-    e1/e2/e3 branches at runtime."""
+    Scale: the edge list is _co_order_pairs over the STANDARD-part
+    baskets (see its docstring for the build and its bound); its (pa, pb)
+    agg already makes the edges distinct. The wedge join is the scale
+    hazard — Σ deg(v)² — bounded here by the type restriction, and the
+    100 TB mitigation is the standard DEGREE orientation (point each edge
+    from lower- to higher-degree endpoint, making max wedge count
+    O(edges^1.5)): same plan, one extra degree agg + broadcast. All three
+    joins are hash equi-joins keyed on node ids."""
     part = (
         load_table(spark, sf_dir, "part")
         .where(F.col("p_type") == "STANDARD")
         .select("p_partkey")
     )
-    # materialized once (round 10, scan-sweep finding): the basket list
-    # feeds BOTH self-join sides and the edge list feeds FOUR consumers
-    # (e1/e2/e3/n_edges) — un-checkpointed, Spark's plan carries 8
-    # lineitem + 8 part scans (exchange reuse is partial at best, the
-    # ndcg precedent); both frames are REDUCED (distinct pairs of ints),
-    # so materializing them is cheap and the corpus is scanned once
-    pl = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"), "left_semi")
-        .distinct()
-        .localCheckpoint()
-    )
-    a = pl.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("u"))
-    b = pl.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("v"))
+    # materialized once (round 10, scan-sweep finding): the edge list
+    # feeds FOUR consumers (e1/e2/e3/n_edges) — un-checkpointed, each
+    # consumer may rescan lineitem + part (exchange reuse is partial at
+    # best, the ndcg precedent); the frame is REDUCED (distinct pairs of
+    # ints), so materializing it is cheap and the corpus is scanned once
     e = (
-        a.join(b, (a.o == b.o2) & (a.u < b.v))
-        .select("u", "v")
-        .distinct()
+        _co_order_pairs(_order_baskets(spark, sf_dir, part))
+        .select(F.col("pa").alias("u"), F.col("pb").alias("v"))
         .localCheckpoint()
     )
     e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
@@ -1710,38 +1757,25 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     together"), and the graph sibling of dedup_near_jaccard's shingle
     Jaccard. Top-30 by (jaccard, pa, pb).
 
-    Mechanics: candidate pairs generate ONLY through the shared-order
-    equi-join (blocking on the co-occurrence witness — never part×part);
-    intersections are counts over that join; degrees come from one agg
-    over the same deduped edge list.
+    Mechanics: intersections are the shared-order counts of
+    _co_order_pairs (pairs only within an order's basket — never
+    part×part); degrees are per-part counts over the exploded baskets,
+    which hold each (part, order) once.
 
     Determinism: all counts exact integers; jaccard = one IEEE quotient
     of exact ints (identical ordering both engines, (pa,pb) tiebreak).
 
-    Scale: pair volume is Σ_orders |basket|² — bounded by basket size,
-    not corpus size (same adjudication as graph_triangle_count's wedge
-    join); a pathological mega-basket is the skew surface, handled by
-    capping or salting the hot order key. Degrees join keys on part —
+    Scale: pair volume is the kernel's Σ_orders |basket|² (see
+    _co_order_pairs). The baskets are checkpointed once because both the
+    pair build and the degree agg read them. Degrees join keys on part —
     AQE broadcasts while the dim is small. TakeOrdered(30) on top."""
-    po = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_partkey").alias("p"), F.col("l_orderkey").alias("o"))
-        .distinct()
-        # materialized once (round 9): BOTH self-join sides and the degree
-        # agg read the deduped edge list — un-checkpointed, the
-        # scan+distinct ran up to 3× per query (measured 1.96 → 1.61 s
-        # warm at sf0.1)
-        .localCheckpoint()
+    baskets = _order_baskets(spark, sf_dir).localCheckpoint()
+    deg = (
+        baskets.select(F.explode("ps").alias("p"))
+        .groupBy("p")
+        .agg(F.count("*").alias("d"))
     )
-    deg = po.groupBy("p").agg(F.count("*").alias("d"))
-    a = po.select(F.col("p").alias("pa"), "o")
-    b = po.select(F.col("p").alias("pb"), F.col("o").alias("ob"))
-    inter = (
-        a.join(b, (F.col("o") == F.col("ob")) & (F.col("pa") < F.col("pb")))
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("i"))
-        .where(F.col("i") >= 2)
-    )
+    inter = _co_order_pairs(baskets).where(F.col("i") >= 2)
     da = deg.select(F.col("p").alias("pa"), F.col("d").alias("da"))
     db = deg.select(F.col("p").alias("pb"), F.col("d").alias("db"))
     uni = F.col("da") + F.col("db") - F.col("i")
@@ -1909,46 +1943,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard LPA trade: it holds while the NODE table fits the broadcast
     cap (~100M+ nodes at 16 B/row per guide §3.1); past that, dropping
     the hint degrades to the r16 node-keyed shuffle plan unchanged in
-    semantics. Edge volume is bounded by the shared-order blocking (sum
-    of basket^2, never part x part); rounds are a fixed constant, so
-    total cost is {r} x O(edges).
-
-    Edge build (r18): per-order baskets via one collect_set agg, pairs
-    by an ordered array self-product inside each basket — ONE exchange
-    on the order key where the r17 shape paid a (part, order) distinct
-    exchange, a localCheckpoint and a self-join's re-exchange (guide
-    §2.4: the distinct and the join decided nothing the basket array
-    does not already know). The sorted-distinct basket makes pa < pb
-    by construction, and the pair rows per order are exactly the
-    self-join's output, so the >= 2 shared-order gate is unchanged.
-    Measured cold at sf0.1 (local[4], status-store shuffle writes), the
-    >= 2 pair set costs 17.16 MB / 1.35M records / 5 stages as baskets
-    and 18.58 MB / 1.80M records / 7 stages as the distinct + self-join,
-    so baskets stay here. The same build would also move less in
-    graph_jaccard_neighbors (whole op 17.86 vs 19.28 MB) and
-    graph_triangle_count (1.47 vs 2.19 MB), which still self-join. It
-    loses where postings are near-singletons: dedup_near_jaccard's
-    shingle overlap ships 6.86 MB as shingle baskets against 16 KB for
-    its self-join, which AQE broadcasts."""
-    baskets = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_partkey").alias("p"), F.col("l_orderkey").alias("o"))
-        .groupBy("o")
-        .agg(F.sort_array(F.collect_set("p")).alias("ps"))
-    )
+    semantics. Edges are the >= 2 shared-order pairs of _co_order_pairs
+    (see its docstring for the build and its Σ basket² bound, never
+    part x part); rounds are a fixed constant, so total cost is
+    {r} x O(edges)."""
     undirected = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) ->"
-                    " transform(slice(ps, i + 2, size(ps) - i - 1),"
-                    " y -> struct(x AS pa, y AS pb))))"
-                )
-            ).alias("e")
-        )
-        .select("e.pa", "e.pb")
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("i"))
+        _co_order_pairs(_order_baskets(spark, sf_dir))
         .where(F.col("i") >= 2)
         .select("pa", "pb")
     )

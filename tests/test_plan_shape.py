@@ -23,6 +23,24 @@ def plan_of(spark, sf_dir, name: str) -> str:
     return buf.getvalue()
 
 
+def plans_with_checkpoints(spark, sf_dir, name: str, monkeypatch) -> list[str]:
+    """The op's plan plus the plan of every frame the op localCheckpoints
+    while it builds its query. A checkpointed frame shows in the op's plan
+    only as an ExistingRDD scan, so a shape hidden inside one is
+    invisible to plan_of alone."""
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    plans = []
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    plans.append(plan_of(spark, sf_dir, name))
+    return plans
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "filter_range")
     assert "GreaterThanOrEqual(l_shipdate" in plan  # range predicate pushed
@@ -205,16 +223,7 @@ def test_ngram_ops_slice_map_side_not_lead_window(spark, sf_dir, name, monkeypat
     the op localCheckpoints while it builds its query (the bigram count
     tables, the shingle set), which the query's plan shows only as a
     scan."""
-    cls = type(spark.range(1))
-    real = cls.localCheckpoint
-    plans = []
-
-    def spy(df, *args, **kwargs):
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return real(df, *args, **kwargs)
-
-    monkeypatch.setattr(cls, "localCheckpoint", spy)
-    plans.append(plan_of(spark, sf_dir, name))
+    plans = plans_with_checkpoints(spark, sf_dir, name, monkeypatch)
     assert not [p for p in plans if "lead(" in p]
 
 
@@ -867,14 +876,15 @@ def test_rouge2_overlap_is_equi_join_never_doc_cross(spark, sf_dir):
 
 def test_triangle_wedge_closes_with_hash_joins(spark, sf_dir):
     """graph_triangle_count: the wedge join and the closing existence join
-    are hash equi-joins on node ids; pair generation is per-order (the
-    order-key equi-join), never a parts cross product. The only nested
-    loop is the final 1-row × 1-row (n_edges, n_triangles) zip. Since
-    round 10's scan-sweep fix the edge list is CHECKPOINTED once (the
-    r1-r9 form relied on AQE exchange reuse, which left 8 lineitem + 8
-    part scans in the plan): the returned plan must read the
-    materialized edges (ExistingRDD) and touch NO file scan at all —
-    every fact pass happened exactly once inside the checkpoint jobs."""
+    are hash equi-joins on node ids; pairs come from the per-order part
+    baskets (the _co_order_pairs kernel), never a parts cross product.
+    The only nested loop is the final 1-row × 1-row (n_edges,
+    n_triangles) zip. Since round 10's scan-sweep fix the edge list is
+    CHECKPOINTED once (the r1-r9 form relied on AQE exchange reuse,
+    which left 8 lineitem + 8 part scans in the plan): the returned plan
+    must read the materialized edges (ExistingRDD) and touch NO file scan
+    at all — every fact pass happened exactly once inside the checkpoint
+    jobs."""
     plan = plan_of(spark, sf_dir, "graph_triangle_count")
     nodes = _tree_nodes(plan)
     assert "CartesianProduct" not in plan
@@ -1327,12 +1337,40 @@ def test_welch_single_hash_agg(spark, sf_dir):
 
 
 def test_jaccard_neighbors_blocks_on_shared_order(spark, sf_dir):
-    """graph_jaccard_neighbors: pairs generate via the order equi-join
-    (SMJ/SHJ on the witness key), never a part×part cross."""
+    """graph_jaccard_neighbors: pairs generate inside each order's part
+    basket (the _co_order_pairs kernel), never a part×part cross."""
     plan = plan_of(spark, sf_dir, "graph_jaccard_neighbors")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "TakeOrderedAndProject" in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["graph_triangle_count", "graph_jaccard_neighbors", "graph_label_propagation"],
+)
+def test_graph_ops_pair_parts_in_baskets_not_order_self_join(
+    spark, sf_dir, name, monkeypatch
+):
+    """The three co-order graph ops build their part pairs inside each
+    order's basket (_order_baskets + _co_order_pairs): no equi-join may
+    key on the order key — under any name these ops give it — in the
+    op's plan or in the plan of any frame it checkpoints. Join keys are
+    read in both plan spellings: inline `Join [keys], [keys]` (a
+    checkpointed frame's tree string) and the `Left keys` / `Right keys`
+    details of explain("formatted")."""
+    import re
+
+    joins = re.compile(
+        r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"
+        r"(?: \[[^\]]*\], \[[^\]]*\]"
+        r"|[^\n]*\nLeft keys \[\d+\]: \[[^\]]*\]\nRight keys \[\d+\]: \[[^\]]*\])"
+    )
+    order_key = re.compile(r"\b(?:l_orderkey|o|o2|ob)#")
+    plans = plans_with_checkpoints(spark, sf_dir, name, monkeypatch)
+    keyed = [m.group(0) for p in plans for m in joins.finditer(p)]
+    assert keyed, plans  # the node-id joins are read, so the regex is live
+    assert not [k for k in keyed if order_key.search(k)], keyed
 
 
 def test_ngram_novelty_shingle_keyed_join(spark, sf_dir):
