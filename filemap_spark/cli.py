@@ -683,7 +683,7 @@ def run_quality(
     (scores-only mode: inspect before you gate)."""
     from filemap_spark.io import load_table
     from filemap_spark.operators.text import (
-        dedup_line_level,
+        _line_dedup,
         text_dsir_importance,
         text_gopher_rules,
         text_kneser_ney_logprob,
@@ -699,9 +699,10 @@ def run_quality(
     tmp_corpus = None
     try:
         if clean_lines:
-            # one execution: checkpoint the (three-shuffle) line-dedup result
-            # so the audit sum and the materialization join both read it
-            cleaned = dedup_line_level(spark, input_dir).localCheckpoint()
+            # one execution: checkpoint the line-dedup kernel's result (no
+            # presentation sort — the verb only joins it by doc_id) so the
+            # audit sum and the materialization join both read it
+            cleaned = _line_dedup(docs).localCheckpoint()
             lines_removed = (
                 cleaned.agg(
                     F.coalesce(
@@ -733,6 +734,7 @@ def run_quality(
             input_dir = tmp_corpus
         if gate == "learned":
             verdicts = text_quality_classifier(spark, input_dir)
+            # without scores_out, the audit and the keepers join each run the plan
             if scores_out:
                 # checkpoint: the scores export, the audit agg, and the
                 # keepers join below would otherwise each re-run the

@@ -4,10 +4,10 @@ scoring, token counting, fingerprinting, language-ID, exact & near dedup.
 
 These run on the `documents` table (space-separated lowercase bag-of-words,
 FIXTURES.md). Everything is built from explode/window/join/agg primitives —
-no Python UDFs — so the same plans scale to a 100 TB corpus: n-grams are
-sliced map-side from each doc's token array (`_ngrams`), so no tokenization
-step shuffles; shingle joins shuffle on the shingle hash, which is the
-standard dedup layout.
+no Python UDFs — so the same plans scale to a 100 TB corpus: n-grams and
+aligned paragraphs are sliced map-side from each doc's token array
+(`_ngrams`, `_paras`), so no tokenization step shuffles; shingle joins
+shuffle on the shingle hash, which is the standard dedup layout.
 """
 
 from __future__ import annotations
@@ -47,6 +47,20 @@ def _ngrams(w: Column, n: int) -> Column:
         F.size(w) >= n,
         F.transform(
             F.sequence(F.lit(1), F.size(w) - (n - 1)), lambda i: F.slice(w, i, n)
+        ),
+    ).otherwise(F.array())
+
+
+def _paras(w: Column, n: int) -> Column:
+    """The in-order aligned n-token chunks of token-array column `w`, each
+    joined by ' ' (the last one may be short) — empty when `w` is NULL.
+    Built map-side like _ngrams, so a paragraph frame costs no
+    (doc_id, pidx) regroup of the token rows."""
+    return F.when(
+        F.size(w) > 0,
+        F.transform(
+            F.sequence(F.lit(0), F.size(w) - 1, F.lit(n)),
+            lambda i: F.array_join(F.slice(w, i + 1, n), " "),
         ),
     ).otherwise(F.array())
 
@@ -2106,7 +2120,8 @@ def dedup_paragraph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     catches partially-copied boilerplate that whole-doc Jaccard misses
     (a doc that embeds half of another scores low on doc-level shingles
     but 0.5+ here). The contract corpus has no newlines, so a "paragraph"
-    is an ALIGNED 10-token chunk (floor(pos/10)) — deterministic and
+    is an ALIGNED 10-token chunk (floor(pos/10)), cut map-side from each
+    doc's token array by the _paras kernel — deterministic and
     SQL-expressible in both engines; on a real corpus the front end is
     split(text, '\\n\\n') with the identical downstream plan.
 
@@ -2125,19 +2140,10 @@ def paragraph_containment_pairs(
     docs: DataFrame, para_tokens: int = _PARA_TOKENS, threshold: float = 0.5
 ) -> DataFrame:
     """Core of dedup_paragraph_jaccard on an arbitrary (doc_id, text) frame
-    — separated so tests can drive manufactured paragraph-dup fixtures."""
-    paras = (
-        _tokens(docs)
-        .groupBy("doc_id", (F.col("pos") / para_tokens).cast("long").alias("pidx"))
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "word"))),
-                    lambda s: s.word,
-                ),
-                " ",
-            ).alias("para")
-        )
+    — separated so tests can drive manufactured paragraph-dup fixtures.
+    The paragraphs come map-side from the _paras kernel."""
+    paras = docs.select(
+        "doc_id", F.explode(_paras(F.split("text", " "), para_tokens)).alias("para")
     )
     ph = paras.select("doc_id", F.md5("para").alias("h")).distinct().localCheckpoint()
     np_ = ph.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -3023,59 +3029,57 @@ def dedup_line_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned text ('' when every line was boilerplate — the doc row
     survives so downstream can decide to drop it).
 
-    Scale: line popularity is ONE hash aggregate over line rows (the
-    wordcount shuffle shape, partial-agg friendly); membership rides a
-    hash equi-join keyed by the line hash (never doc×doc); reassembly is
-    one keyed agg per doc. At 100 TB, hash lines to 128-bit BEFORE the
-    shuffle so the popularity exchange moves 16-byte keys, not line text
-    — the md5 here already is that discipline.
+    Scale: the line frame is cut MAP-SIDE from each doc's token array
+    (_paras) — no token row ever crosses a shuffle. Line popularity is ONE
+    hash aggregate on the line hash (the wordcount shuffle shape,
+    partial-agg friendly): a line is unique iff min(doc_id) = max(doc_id)
+    over its hash, because doc_id is the contract's non-null key — one
+    exchange where countDistinct needed a second, keyed (h, doc_id).
+    Membership rides a hash equi-join keyed by the line hash (never
+    doc×doc); reassembly is one keyed agg per doc. At 100 TB, hash lines
+    to 128-bit BEFORE the shuffle so the popularity exchange moves 16-byte
+    keys, not line text — the md5 here already is that discipline.
 
-    Round-12 single-tokenize rewrite: the r5 form scanned + tokenized +
-    line-aggregated the corpus THREE times (popularity branch, kept
-    branch, per-doc total branch — the optimizer specializes each
-    branch's aggregate differently, e.g. the total branch drops the
-    collect_list, so ReuseExchange can never fire; verified in the
-    post-AQE sweep). Now the line frame is materialized ONCE
+    Single-tokenize layout: the line frame is materialized ONCE
     (localCheckpoint — the dedup_near_jaccard discipline; safe under
-    memoization since the make-style key never builds the plan on a
-    hit), and the survivors and totals come from ONE final per-doc
-    aggregate: count(*) is n_paras, the kept count/reassembly ride
-    conditional aggregates (collect_list skips the NULLs the popularity
-    flag leaves on boilerplate lines) — which also deletes the old
-    tot⟕ka join and its shuffle."""
+    memoization since the make-style key never builds the plan on a hit)
+    and read by both the popularity branch and the per-doc aggregate, so
+    the corpus is scanned and split once (separate branches would each
+    re-tokenize: the optimizer specializes each branch differently, so
+    ReuseExchange can never fire). The survivors and totals come from ONE
+    final per-doc aggregate: count(*) is n_paras, the kept
+    count/reassembly ride conditional aggregates (collect_list skips the
+    NULLs the popularity flag leaves on boilerplate lines) — no tot⟕ka
+    join and no shuffle for it."""
+    return _line_dedup(load_table(spark, sf_dir, "documents")).orderBy("doc_id")
+
+
+def _line_dedup(docs: DataFrame) -> DataFrame:
+    """dedup_line_level's unordered kernel, which the quality verb checkpoints."""
     paras = (
-        _tokens(load_table(spark, sf_dir, "documents"))
-        .groupBy(
-            "doc_id", (F.col("pos") / _PARA_TOKENS).cast("long").alias("pidx")
-        )
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "word"))),
-                    lambda s: s.word,
-                ),
-                " ",
-            ).alias("para")
+        docs.select(
+            "doc_id",
+            F.posexplode(_paras(F.split("text", " "), _PARA_TOKENS)).alias(
+                "pidx", "para"
+            ),
         )
         .withColumn("h", F.md5("para"))
         .localCheckpoint()
     )
-    pop = paras.groupBy("h").agg(F.countDistinct("doc_id").alias("n_docs"))
+    pop = paras.groupBy("h").agg(
+        (F.min("doc_id") == F.max("doc_id")).alias("uniq")
+    )
     return (
         paras.join(pop, "h")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_paras"),
-            F.sum(F.when(F.col("n_docs") == 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_kept"),
+            F.sum(F.col("uniq").cast("int")).cast("bigint").alias("n_kept"),
             F.array_join(
                 F.transform(
                     F.array_sort(
                         F.collect_list(
-                            F.when(
-                                F.col("n_docs") == 1, F.struct("pidx", "para")
-                            )
+                            F.when(F.col("uniq"), F.struct("pidx", "para"))
                         )
                     ),
                     lambda s: s.para,
@@ -3083,7 +3087,6 @@ def dedup_line_level(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " ",
             ).alias("clean_text"),
         )
-        .orderBy("doc_id")
     )
 
 

@@ -1036,6 +1036,34 @@ def test_ngrams_kernel_matches_python_slices(spark):
             assert [list(g) for g in r[f"g{n}"]] == want, (texts[r["id"]], n)
 
 
+def test_paras_kernel_matches_python_chunks(spark):
+    """_paras (the one aligned-paragraph kernel of the text ops) equals
+    Python's in-order n-token chunks on the edge cases: NULL text (no
+    chunks), the empty string (one empty chunk), 1, n-1, n, n+1 and 2n
+    tokens, and a double space (empty tokens are tokens)."""
+    from filemap_spark.operators.text import _paras
+
+    ns = (1, 3, 10)
+    texts = [None, "", "a  b"]
+    for n in ns:
+        for k in sorted({1, n - 1, n, n + 1, 2 * n} - {0}):
+            texts.append(" ".join(f"t{i}" for i in range(k)))
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    rows = df.select(
+        "id", *[_paras(F.split("text", " "), n).alias(f"p{n}") for n in ns]
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        t = texts[r["id"]]
+        for n in ns:
+            if t is None:
+                want = []
+            else:
+                ws = t.split(" ")
+                want = [" ".join(ws[i : i + n]) for i in range(0, len(ws), n)]
+            assert list(r[f"p{n}"]) == want, (t, n)
+
+
 def test_mapside_shingle_frame_equals_lead_window_form(spark, sf_dir):
     """Round-9 rewrite pin: the map-side _shingle_frame (per-doc
     array_distinct over transform'd 5-gram slices, zero shuffle) must
@@ -2199,3 +2227,58 @@ def test_cdc_chunks_op_matches_pure_python_reference(spark, sf_dir):
     # (the op exists to find them)
     assert sum(v[0] for v in got.values()) >= 2 * len(got)
     assert sum(v[2] for v in got.values()) > 0
+
+
+def test_heavy_hitters_matches_python_on_planted_users(spark, sf_dir, tmp_path):
+    """agg_heavy_hitters returns no rows at any fixture scale, so its
+    oracle grade checks only a schema. Plant heavy users into a copy of
+    the fixture events — two tied at one count, plus one planted user
+    that stays under the bar — and check membership, order and share_pct
+    against a Python reference (exact rational share, rounded half away
+    from zero at 6dp)."""
+    import os
+    from collections import Counter
+    from datetime import datetime
+    from fractions import Fraction
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from filemap_spark.operators.aggregates import agg_heavy_hitters
+
+    ev = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    planted = {10_001: 400, 10_002: 250, 10_003: 250, 10_004: 90}
+    first_id = max(ev.column("event_id").to_pylist()) + 1
+    uids = [uid for uid, n in planted.items() for _ in range(n)]
+    rows = [
+        {
+            "event_id": first_id + i,
+            "ts": datetime(2024, 1, 2),
+            "user_id": uid,
+            "event_type": "click",
+            "value": 1.0,
+            "props": '{"k": 0}',
+        }
+        for i, uid in enumerate(uids)
+    ]
+    ev = pa.concat_tables([ev, pa.Table.from_pylist(rows, schema=ev.schema)])
+    pq.write_table(ev, str(tmp_path / "events.parquet"))
+
+    counts = Counter(ev.column("user_id").to_pylist())
+    n_total, n_users = sum(counts.values()), len(counts)
+
+    def share_pct(c):
+        q = Fraction(c * 100, n_total) * 10**6
+        return float(int(q + Fraction(1, 2)) / Fraction(10**6))
+
+    want = sorted(
+        (
+            (uid, c, share_pct(c))
+            for uid, c in counts.items()
+            if c * n_users > 2 * n_total
+        ),
+        key=lambda r: (-r[1], r[0]),
+    )
+    got = [tuple(r) for r in agg_heavy_hitters(spark, str(tmp_path)).collect()]
+    assert got == want
+    assert {r[0] for r in want} == {10_001, 10_002, 10_003}

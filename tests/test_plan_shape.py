@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -225,6 +226,21 @@ def test_ngram_ops_slice_map_side_not_lead_window(spark, sf_dir, name, monkeypat
     scan."""
     plans = plans_with_checkpoints(spark, sf_dir, name, monkeypatch)
     assert not [p for p in plans if "lead(" in p]
+
+
+@pytest.mark.parametrize("name", ["dedup_line_level", "dedup_paragraph_jaccard"])
+def test_paragraph_ops_cut_paragraphs_map_side(spark, sf_dir, name, monkeypatch):
+    """The paragraph ops cut their aligned paragraphs with the map-side
+    _paras kernel: no plan — the op's own or a checkpointed frame's — may
+    regroup the token rows by (doc_id, pidx). Line popularity is a single
+    exchange on the line hash, so no exchange is keyed (h, doc_id), the
+    second stage of a countDistinct."""
+    plans = plans_with_checkpoints(spark, sf_dir, name, monkeypatch)
+    regroup = re.compile(r"hashpartitioning\(doc_id#\d+L?, _groupingexpression")
+    assert not [p for p in plans if regroup.search(p)]
+    if name == "dedup_line_level":
+        pair = re.compile(r"hashpartitioning\(h#\d+, doc_id#")
+        assert not [p for p in plans if pair.search(p)]
 
 
 def test_domain_mix_corpus_never_shuffles(spark, sf_dir):
