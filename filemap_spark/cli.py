@@ -23,8 +23,9 @@ over directories of text files), re-expressed on Spark.
 Semantics preserved from the reference:
 - dataset = a directory (or glob) of text files; `.gz` handled transparently
   by Spark's text source, like filemap's transparent decompression;
-- map = a shell pipeline, lines in → lines out, forked once per partition
-  (filemap forks per file; `--partitions` recovers per-file granularity);
+- map = a shell pipeline, lines in → lines out. The `map`/`mapreduce`
+  verbs fork it once per partition (`--partitions` sets how many); a
+  `pipeline` map stage forks it once per input file, like filemap;
 - reduce = shuffle records by their leading whitespace-delimited field into
   hash buckets, then one shell pipeline per bucket;
 - memoization: with `--memo`, a run whose (inputs, commands) fingerprint
@@ -34,10 +35,14 @@ Semantics preserved from the reference:
 - pipelines: the `pipeline` verb chains ANY number of --cmd / --reduce
   stages in the order given on the command line (filemap's multi-stage
   dataset DAG). Each stage materializes its own dataset directory
-  (OUTPUT/stage00, stage01, ... and OUTPUT/final) and carries its own memo
-  fingerprint (that stage's input files + command), so with `--memo` a
-  re-run recomputes ONLY the stages whose inputs or command changed —
-  make-semantics per stage, exactly the reference's cached-dataset chain.
+  (OUTPUT/stage00, stage01, ... and OUTPUT/final). A map stage holds one
+  output file per input file, named after it, and a manifest of the
+  (size, mtime) each output was mapped from; with `--memo` a re-run maps
+  only the new or changed files and drops the outputs of deleted ones. A
+  reduce stage needs every key, so it carries one fingerprint (all of its
+  input files + command) and reruns whole. Either way a stage with nothing
+  to do writes nothing, so make-semantics cascade downstream exactly like
+  the reference's cached-dataset chain.
 - incremental: with `--stream`, the input is consumed through a
   Structured-Streaming file source with `trigger(availableNow=True)` —
   re-running after new files appear processes ONLY the new files
@@ -51,6 +56,7 @@ import hashlib
 import json
 import os
 import sys
+from typing import NamedTuple
 
 from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
@@ -71,18 +77,24 @@ def _fingerprint(input_path: str, cmds: list[str]) -> str:
     return h.hexdigest()
 
 
+_MEMO = "_filemap_memo.json"
+# a map stage's job writes here; each output is then renamed into place
+_MAP_TMP = "_map_tmp"
+# Hadoop's text source picks a decompression codec by file extension; a
+# map output is plain text, so its name drops the extension
+_CODEC_EXTS = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst")
+
+
 def _memo_hit(output: str, fp: str) -> bool:
-    marker = os.path.join(output, "_filemap_memo.json")
-    if not os.path.exists(marker):
-        return False
     try:
-        return json.load(open(marker)).get("fingerprint") == fp
-    except Exception:
+        with open(os.path.join(output, _MEMO)) as f:
+            return json.load(f).get("fingerprint") == fp
+    except (OSError, ValueError):
         return False
 
 
 def _write_memo(output: str, fp: str) -> None:
-    marker = os.path.join(output, "_filemap_memo.json")
+    marker = os.path.join(output, _MEMO)
     with open(marker, "w") as f:
         json.dump({"fingerprint": fp}, f)
 
@@ -103,10 +115,10 @@ def _pipe_stages(
     output: str,
     stages: list[tuple[str, str]],
     buckets: int,
-    partitions: int | None,
-) -> int:
+    partitions: int | None = None,
+) -> None:
     """Read INPUT's lines, run the (kind, cmd) stages over them in ONE
-    job, write the result as a text dataset and return its line count.
+    job and write the result as a text dataset.
     `map` pipes every partition's lines through the shell command;
     `reduce` first shuffles lines into hash buckets by their leading
     whitespace-delimited field, then pipes each bucket."""
@@ -123,7 +135,147 @@ def _pipe_stages(
     # empty pipeline must still write an empty output dataset.
     out_df = spark.createDataFrame(lines.map(lambda line: Row(value=line)), "value string")
     out_df.write.mode("overwrite").text(output)
-    return spark.read.text(output).count()
+
+
+def _hidden(name: str) -> bool:
+    """The names Hadoop's and Spark's file listings skip."""
+    return name.startswith(("_", "."))
+
+
+def _input_files(input_path: str) -> dict[str, str]:
+    """Output name → absolute path of every file the text source reads
+    for INPUT (a directory, a file or a glob): each matched file and the
+    files directly inside each matched directory, hidden names skipped.
+    The output name is the file's own, less a compression extension."""
+    import glob as globmod
+
+    roots = sorted(globmod.glob(input_path)) or [input_path]
+    if not any(os.path.exists(r) for r in roots):
+        raise FileNotFoundError(input_path)
+    files: dict[str, str] = {}
+    for root in roots:
+        if root != input_path and _hidden(os.path.basename(root)):
+            continue  # a glob match the text source skips
+        paths = (
+            [os.path.join(root, n) for n in os.listdir(root) if not _hidden(n)]
+            if os.path.isdir(root)
+            else [root]
+        )
+        for path in filter(os.path.isfile, paths):
+            name, ext = os.path.splitext(os.path.basename(path))
+            if ext not in _CODEC_EXTS:
+                name += ext
+            if name in files:
+                raise ValueError(
+                    f"{files[name]} and {path} would both map to {name}"
+                )
+            files[name] = os.path.abspath(path)
+    return files
+
+
+def _read_manifest(output: str) -> dict:
+    """A map stage's manifest: {"command", "inputs": {input path: {size,
+    mtime_ns, outputs}}}. An absent or unreadable file, or a whole-stage
+    {"fingerprint"} marker, reads as {}: it lists no output."""
+    try:
+        with open(os.path.join(output, _MEMO)) as f:
+            manifest = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    return manifest if "inputs" in manifest else {}
+
+
+def _drop_unlisted(output: str, listed: set[str]) -> None:
+    """Delete every data file under a map stage dir that its manifest does
+    not list, with its checksum sidecar, and an interrupted job's scratch
+    dir. Such a file was renamed in by a run that died before its manifest
+    commit (or left by another writer); no later stage may read it."""
+    import shutil
+
+    shutil.rmtree(os.path.join(output, _MAP_TMP), ignore_errors=True)
+    if not os.path.isdir(output):
+        return
+    for n in os.listdir(output):
+        data = n[1:-4] if n.startswith(".") and n.endswith(".crc") else n
+        if not _hidden(data) and data not in listed:
+            os.remove(os.path.join(output, n))
+
+
+class _MapPlan(NamedTuple):
+    manifest: dict  # committed once the stage's outputs are in place
+    todo: list[tuple[str, str]]  # (input path, output name) to map
+    gone: list[str]  # outputs whose input file disappeared
+
+
+def _map_plan(input_path: str, output: str, cmd: str, memo: bool) -> _MapPlan | None:
+    """A map stage's per-file memo. Clears OUTPUT of the data files its
+    manifest does not list, then keeps each output whose input file still
+    has the (size, mtime_ns) it was mapped from. Returns None when every
+    output is current (a full hit, which writes nothing), else what the
+    stage must map and drop. Every file is mapped when `memo` is off or
+    the command changed."""
+    old = _read_manifest(output)
+    old_inputs = old.get("inputs", {})
+    listed = {name for e in old_inputs.values() for name in e["outputs"]}
+    _drop_unlisted(output, listed)
+    command = f"map\x00{cmd}"
+    reuse = memo and old.get("command") == command
+    inputs: dict[str, dict] = {}
+    todo: list[tuple[str, str]] = []
+    for name, path in sorted(_input_files(input_path).items()):
+        st = os.stat(path)
+        entry = {"size": st.st_size, "mtime_ns": st.st_mtime_ns, "outputs": [name]}
+        inputs[path] = entry
+        if not (
+            reuse
+            and old_inputs.get(path) == entry
+            and os.path.isfile(os.path.join(output, name))
+        ):
+            todo.append((path, name))
+    gone = sorted(listed - {e["outputs"][0] for e in inputs.values()})
+    if reuse and not todo and not gone:
+        return None
+    return _MapPlan({"command": command, "inputs": inputs}, todo, gone)
+
+
+def _one_partition(sc, path: str):
+    """The lines of one file as ONE partition — an empty file too: Spark
+    drops its empty split, but it still gets its own fork and output."""
+    from pyspark.rdd import RDD
+
+    lines = sc.textFile(path, 1).coalesce(1)
+    if lines.getNumPartitions():
+        return lines
+    empty = sc._jsc.parallelize(sc._jvm.java.util.ArrayList(), 1)
+    return RDD(empty, sc, lines._jrdd_deserializer)
+
+
+def _map_files(spark: SparkSession, output: str, cmd: str, plan: _MapPlan) -> None:
+    """Carry out a map stage's plan. ONE job maps the files still to map,
+    each in its own task (a union of per-file single-partition RDDs, never
+    a packed scan), and each task's output is renamed to its file's name.
+    Then the outputs of deleted inputs go, `_SUCCESS` is touched, and the
+    manifest is committed last, by an atomic rename."""
+    import contextlib
+    import shutil
+
+    sc = spark.sparkContext
+    os.makedirs(output, exist_ok=True)
+    if plan.todo:
+        tmp = os.path.join(output, _MAP_TMP)
+        per_file = sc.union([_one_partition(sc, p) for p, _ in plan.todo])
+        per_file.pipe(_shell(cmd)).saveAsTextFile(tmp)
+        for i, (_, name) in enumerate(plan.todo):
+            os.replace(os.path.join(tmp, f"part-{i:05d}"), os.path.join(output, name))
+        shutil.rmtree(tmp)
+    for name in plan.gone:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(output, name))
+    open(os.path.join(output, "_SUCCESS"), "w").close()
+    staged = os.path.join(output, _MEMO + ".tmp")
+    with open(staged, "w") as f:
+        json.dump(plan.manifest, f)
+    os.replace(staged, os.path.join(output, _MEMO))
 
 
 def run_map(
@@ -140,7 +292,8 @@ def run_map(
     stages = [("map", cmd)]
     if reduce_cmd is not None:
         stages.append(("reduce", reduce_cmd))
-    return _pipe_stages(spark, input_path, output, stages, buckets, partitions)
+    _pipe_stages(spark, input_path, output, stages, buckets, partitions)
+    return spark.read.text(output).count()
 
 
 def run_stage(
@@ -150,10 +303,15 @@ def run_stage(
     kind: str,
     cmd: str,
     buckets: int = 32,
-    partitions: int | None = None,
-) -> int:
-    """One pipeline stage (see `_pipe_stages`); returns output line count."""
-    return _pipe_stages(spark, input_path, output, [(kind, cmd)], buckets, partitions)
+    plan: _MapPlan | None = None,
+) -> None:
+    """One pipeline stage. A map stage carries out `plan` (see
+    `_map_plan`; by default every input file is mapped), one output file
+    per input file; a reduce stage rewrites OUTPUT whole (`_pipe_stages`)."""
+    if kind == "map":
+        _map_files(spark, output, cmd, plan or _map_plan(input_path, output, cmd, False))
+    else:
+        _pipe_stages(spark, input_path, output, [(kind, cmd)], buckets)
 
 
 def run_pipeline(
@@ -162,37 +320,44 @@ def run_pipeline(
     output: str,
     stages: list[tuple[str, str]],
     buckets: int = 32,
-    partitions: int | None = None,
     memo: bool = False,
 ) -> int:
-    """Chain (kind, cmd) stages through per-stage dataset directories.
+    """Chain (kind, cmd) stages through per-stage dataset directories and
+    return the line count of the last one.
 
     Stage i reads stage i-1's directory (stage 0 reads INPUT) and writes
-    OUTPUT/stage{i:02d}; the last stage writes OUTPUT/final. With `memo`,
-    each stage is skipped when its own (input files, command) fingerprint
-    matches the marker in its directory — and because the fingerprint
-    covers the PREVIOUS stage's output files, invalidation cascades
-    downstream exactly like make: touch the input or edit stage 2's
-    command and stages 2..n rerun while 0..1 are reused."""
+    OUTPUT/stage{i:02d}; the last stage writes OUTPUT/final. A map stage
+    memoizes per input file (`_map_plan`): with `memo`, a run maps only
+    the files that are new or changed since the stage's manifest and
+    drops the outputs of deleted ones. A reduce stage needs every key, so
+    with `memo` it is skipped only when its whole (input files, command)
+    fingerprint matches the marker in its directory. A stage with nothing
+    to do writes nothing, and because each fingerprint covers the
+    PREVIOUS stage's files, invalidation cascades downstream exactly like
+    make: touch one input file and only that file is re-mapped before the
+    reduce reruns; edit stage 2's command and stages 2..n rerun while 0..1
+    are reused."""
     if not stages:
         raise ValueError("pipeline needs at least one --cmd/--reduce stage")
     cur = input_path
-    n = 0
     for i, (kind, cmd) in enumerate(stages):
         is_last = i == len(stages) - 1
         stage_out = os.path.join(output, "final" if is_last else f"stage{i:02d}")
-        fp = _fingerprint(cur, [f"{kind}\x00{cmd}"])
-        if memo and _memo_hit(stage_out, fp):
-            print(f"memo hit: stage {i} ({kind}) up to date", file=sys.stderr)
-            n = spark.read.text(stage_out).count()
+        plan = fp = None
+        if kind == "map":
+            plan = _map_plan(cur, stage_out, cmd, memo)
+            hit = plan is None
         else:
-            n = run_stage(
-                spark, cur, stage_out, kind, cmd, buckets=buckets, partitions=partitions
-            )
-            if memo:
+            fp = _fingerprint(cur, [f"{kind}\x00{cmd}"])
+            hit = memo and _memo_hit(stage_out, fp)
+        if hit:
+            print(f"memo hit: stage {i} ({kind}) up to date", file=sys.stderr)
+        else:
+            run_stage(spark, cur, stage_out, kind, cmd, buckets=buckets, plan=plan)
+            if memo and fp is not None:
                 _write_memo(stage_out, fp)
         cur = stage_out
-    return n
+    return spark.read.text(cur).count()
 
 
 def run_map_stream(
@@ -265,6 +430,9 @@ def _survivors_from_pairs(docs, edges):
     dedup_materialize_clean rule shared by every dedup path here."""
     from filemap_spark.operators.relational import alternating_star_components
 
+    # one evaluation of the pair plan: the emptiness probe and the
+    # components' own checkpoint both read this one
+    edges = edges.localCheckpoint()
     if not edges.take(1):
         return docs
     labels = alternating_star_components(edges)
@@ -409,18 +577,22 @@ def run_dedup_stream(
         its delta (PNG→dHash / WAV→energy hash), and the batch's
         fingerprints pigeonhole-probe the persisted index;
       - verified duplicate pairs accumulate in OUTPUT/_pairs;
-      - the survivors-only corpus is rebuilt from ledger + accumulated
-        pairs via connected components (min-id survivor — the same rule
-        as `dedup --method near`), written to OUTPUT/documents.parquet so
-        the output chains as a corpus dir. This step is NOT incremental:
-        every run re-reads the whole input directory and all accumulated
-        pairs and rewrites the survivor corpus.
+      - the survivors-only corpus is rebuilt from the input directory +
+        accumulated pairs via connected components (min-id survivor — the
+        same rule as `dedup --method near`), written to
+        OUTPUT/documents.parquet so the output chains as a corpus dir. A
+        rebuild re-reads the whole input directory and all accumulated
+        pairs and rewrites the survivor corpus, so it runs only when the
+        fingerprint of those two inputs (file paths, sizes, mtimes)
+        differs from the marker OUTPUT/_filemap_memo.json written after
+        the last rebuild: a run that ingested nothing, and compacted
+        nothing, leaves documents.parquet untouched.
 
     Returns (kept, total-ingested). Re-running with no new files is a
     cheap no-op drain. tests/test_cli.py pins: two-batch arrival, the
-    second run touching only batch-2 docs, and the final corpus matching
+    second run touching only batch-2 docs, the final corpus matching
     a from-scratch batch dedup of the union — for text AND the
-    perceptual modalities."""
+    perceptual modalities — and the no-op run writing nothing."""
     from filemap_spark.operators.text import (
         _recover_compact_swap,
         incremental_lsh_ingest,
@@ -505,13 +677,20 @@ def run_dedup_stream(
     if not os.path.exists(ledger_path):  # empty input dir, nothing ingested
         return 0, 0
     n_total = spark.read.parquet(ledger_path).count()
-    edges = spark.read.parquet(pairs_dir).select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    )
-    docs = spark.read.parquet(input_dir)
-    clean = _survivors_from_pairs(docs, edges)
     out = os.path.join(output, "documents.parquet")
-    clean.write.mode("overwrite").parquet(out)
+    # survivors are a function of the input files and the pairs alone
+    fp = _fingerprint(input_dir, ["survivors", _fingerprint(pairs_dir, [])])
+    if not (_memo_hit(output, fp) and os.path.exists(os.path.join(out, "_SUCCESS"))):
+        # drop the marker first: a rebuild cut short must not read as current
+        if os.path.exists(os.path.join(output, _MEMO)):
+            os.remove(os.path.join(output, _MEMO))
+        edges = spark.read.parquet(pairs_dir).select(
+            F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
+        )
+        docs = spark.read.parquet(input_dir)
+        clean = _survivors_from_pairs(docs, edges)
+        clean.write.mode("overwrite").parquet(out)
+        _write_memo(output, fp)
     return spark.read.parquet(out).count(), n_total
 
 
@@ -925,7 +1104,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--cmd", action=_StageAction, help="append a map stage")
     p.add_argument("--reduce", action=_StageAction, dest="stages", help="append a reduce stage")
     p.add_argument("--buckets", type=int, default=32)
-    p.add_argument("--partitions", type=int, default=None)
     p.add_argument("--memo", action="store_true")
 
     p = sub.add_parser("query", help="SQL over the contract-table views in SF_DIR")
@@ -1241,7 +1419,6 @@ def main(argv: list[str] | None = None) -> int:
             args.output,
             getattr(args, "stages", None) or [],
             buckets=args.buckets,
-            partitions=args.partitions,
             memo=args.memo,
         )
         print(f"{n} lines -> {os.path.join(args.output, 'final')}", file=sys.stderr)

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import functions as F
+
 from filemap_spark.cli import (
     _fingerprint,
     _memo_hit,
@@ -201,6 +203,159 @@ def test_pipeline_cli_verb_orders_stages(tmp_path):
     for f in glob.glob(os.path.join(out, "final", "part-*")):
         lines |= {ln for ln in open(f).read().splitlines() if ln}
     assert lines == {"a 3", "b 1"}
+
+
+_WORDCOUNT = [
+    ("map", "tr ' ' '\\n'"),
+    ("reduce", "sort | uniq -c | awk '{print $2, $1}'"),
+]
+
+
+def _stage_files(d: str) -> dict[str, bytes]:
+    """Data files of a map stage dir (one per input file), by name."""
+    return {
+        f: open(os.path.join(d, f), "rb").read()
+        for f in sorted(os.listdir(d))
+        if not f.startswith(("_", "."))
+    }
+
+
+def _mtimes(d: str) -> dict[str, int]:
+    return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in _stage_files(d)}
+
+
+def _assert_matches_cold(spark, src, out, stages, tmp_path, name):
+    """Every stage dir of an incremental run equals a cold run's, byte for
+    byte (reduce parts by partition index)."""
+    cold = str(tmp_path / name)
+    run_pipeline(spark, src, cold, stages, buckets=4, memo=True)
+    for i, (kind, _) in enumerate(stages):
+        d = "final" if i == len(stages) - 1 else f"stage{i:02d}"
+        read = _stage_files if kind == "map" else _dataset_bytes
+        assert read(os.path.join(out, d)) == read(os.path.join(cold, d)), d
+
+
+def test_pipeline_map_stage_memoizes_per_input_file(spark, tmp_path):
+    """A map stage holds one output per input file: adding a file maps
+    only that file, a touched file is re-mapped, a deleted file's output
+    disappears from the stage and from `final`, and a command edit re-maps
+    every file. After each step every stage equals a cold run."""
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["a b a", "b a c"])
+    _write_lines(str(src / "b.txt"), ["c a"])
+    (src / "e.txt").write_text("")  # an empty input still gets its output
+    src, out = str(src), str(tmp_path / "out")
+    stage00 = os.path.join(out, "stage00")
+    final = os.path.join(out, "final")
+
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
+    assert _stage_files(stage00) == {
+        "a.txt": b"a\nb\na\nb\na\nc\n", "b.txt": b"c\na\n", "e.txt": b"",
+    }
+    t0 = _mtimes(stage00)
+
+    # add a file: only it is mapped; the reduce reruns over every output
+    _write_lines(os.path.join(src, "c.txt"), ["d a"])
+    n = run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
+    t1 = _mtimes(stage00)
+    assert {f: t1[f] for f in t0} == t0 and "c.txt" in t1
+    got = dict(r["value"].split(" ") for r in spark.read.text(final).collect())
+    assert got == {"a": "5", "b": "2", "c": "2", "d": "1"} and n == 4
+    _assert_matches_cold(spark, src, out, _WORDCOUNT, tmp_path, "cold_add")
+
+    # touch a file: it alone is re-mapped
+    _write_lines(os.path.join(src, "b.txt"), ["c a e"])
+    st = os.stat(os.path.join(src, "b.txt"))
+    os.utime(os.path.join(src, "b.txt"), ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
+    t2 = _mtimes(stage00)
+    assert t2["b.txt"] != t1["b.txt"]
+    assert {f: t2[f] for f in ("a.txt", "c.txt", "e.txt")} == {
+        f: t1[f] for f in ("a.txt", "c.txt", "e.txt")
+    }
+    _assert_matches_cold(spark, src, out, _WORDCOUNT, tmp_path, "cold_touch")
+
+    # delete a file: its output leaves the stage and its words leave final
+    os.remove(os.path.join(src, "c.txt"))
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
+    assert sorted(_stage_files(stage00)) == ["a.txt", "b.txt", "e.txt"]
+    got = dict(r["value"].split(" ") for r in spark.read.text(final).collect())
+    assert "d" not in got and got["a"] == "4"
+    _assert_matches_cold(spark, src, out, _WORDCOUNT, tmp_path, "cold_delete")
+
+    # a full hit writes nothing, not even the manifest or _SUCCESS
+    snap = {
+        f: os.stat(os.path.join(stage00, f)).st_mtime_ns
+        for f in os.listdir(stage00)
+    }
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
+    assert {
+        f: os.stat(os.path.join(stage00, f)).st_mtime_ns
+        for f in os.listdir(stage00)
+    } == snap
+
+    # edit the command: every file is re-mapped
+    t3 = _mtimes(stage00)
+    edited = [("map", "tr ' ' '\\n' | grep -v '^c$'"), _WORDCOUNT[1]]
+    run_pipeline(spark, src, out, edited, buckets=4, memo=True)
+    t4 = _mtimes(stage00)
+    assert sorted(t4) == sorted(t3)
+    assert all(t4[f] != t3[f] for f in t3)
+    _assert_matches_cold(spark, src, out, edited, tmp_path, "cold_edit")
+
+
+def test_pipeline_map_stage_drops_unlisted_files(spark, tmp_path):
+    """A run that died between renaming its outputs in and committing the
+    manifest leaves files the manifest does not list. The next run deletes
+    them before any stage reads the dir, so `final` equals a cold run."""
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["a b a"])
+    src, out = str(src), str(tmp_path / "out")
+    stage00 = os.path.join(out, "stage00")
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
+
+    # the crashed run had mapped c.txt (under an older content) and a
+    # since-deleted input; neither reached the manifest
+    _write_lines(os.path.join(src, "c.txt"), ["c c"])
+    with open(os.path.join(stage00, "c.txt"), "w") as f:
+        f.write("stale\n")
+    with open(os.path.join(stage00, "zz.txt"), "w") as f:
+        f.write("orphan\n")
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
+    assert _stage_files(stage00) == {"a.txt": b"a\nb\na\n", "c.txt": b"c\nc\n"}
+    got = dict(
+        r["value"].split(" ")
+        for r in spark.read.text(os.path.join(out, "final")).collect()
+    )
+    assert got == {"a": "2", "b": "1", "c": "2"}
+    _assert_matches_cold(spark, src, out, _WORDCOUNT, tmp_path, "cold")
+
+
+def test_pipeline_upgrades_whole_stage_marker(spark, tmp_path):
+    """A stage dir written before per-file memoization (one set of Spark
+    part files and a {"fingerprint": ...} marker) lists no per-file output:
+    the next memoized run re-maps every file, drops the old parts and
+    leaves every stage equal to a cold run."""
+    from filemap_spark.cli import run_stage
+
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["a b a", "b a c"])
+    _write_lines(str(src / "b.txt"), ["c a"])
+    src, out = str(src), str(tmp_path / "out")
+    stage00 = os.path.join(out, "stage00")
+    final = os.path.join(out, "final")
+    (kind0, cmd0), (kind1, cmd1) = _WORDCOUNT
+    # the old layout: a packed map job and a whole-stage marker per stage
+    run_map(spark, src, stage00, cmd0, partitions=1)
+    _write_memo(stage00, _fingerprint(src, [f"{kind0}\x00{cmd0}"]))
+    run_stage(spark, stage00, final, kind1, cmd1, buckets=4)
+    _write_memo(final, _fingerprint(stage00, [f"{kind1}\x00{cmd1}"]))
+    assert any(f.startswith("part-") for f in os.listdir(stage00))
+
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
+    assert sorted(_stage_files(stage00)) == ["a.txt", "b.txt"]
+    assert not any(f.startswith(".part-") for f in os.listdir(stage00))
+    _assert_matches_cold(spark, src, out, _WORDCOUNT, tmp_path, "cold")
 
 
 def test_stream_processes_only_new_files(spark, tmp_path):
@@ -417,6 +572,77 @@ def test_dedup_stream_incremental_two_batches(spark, tmp_path):
     assert (kept4, total4) == (kept2, 4)
     assert os.path.isdir(pairs_dir)
     assert not os.path.exists(pairs_dir + ".compact_old")
+
+
+def test_dedup_stream_noop_leaves_survivors_untouched(spark, tmp_path):
+    """The survivor corpus is a function of the input files and the
+    accumulated pairs alone: a run with no new file leaves
+    documents.parquet untouched and returns the same tuple, and a new
+    file still triggers the rebuild."""
+    from filemap_spark.cli import run_dedup_stream
+
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+
+    def write_batch(rows):
+        spark.createDataFrame(
+            [(i, t, "en", "test", len(t)) for i, t in rows],
+            "doc_id long, text string, lang string, source string, n_chars long",
+        ).coalesce(1).write.mode("append").parquet(str(corpus))
+
+    def snapshot(d):
+        return {
+            f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)
+        }
+
+    out = str(tmp_path / "out")
+    docs = os.path.join(out, "documents.parquet")
+    write_batch([(1, text), (2, "a completely different document body")])
+    first = run_dedup_stream(spark, str(corpus), out)
+    assert first == (2, 2)
+    before = snapshot(docs)
+
+    assert run_dedup_stream(spark, str(corpus), out) == first
+    assert snapshot(docs) == before
+
+    write_batch([(3, text)])  # an exact duplicate of doc 1
+    assert run_dedup_stream(spark, str(corpus), out) == (2, 3)
+    assert snapshot(docs) != before
+    assert {r["doc_id"] for r in spark.read.parquet(docs).collect()} == {1, 2}
+
+
+def test_survivors_components_read_the_checkpointed_pairs(
+    spark, tmp_path, monkeypatch
+):
+    """`_survivors_from_pairs` evaluates the pair plan once: the emptiness
+    probe and connected components both read one checkpoint, so the edges
+    the components receive are an ExistingRDD scan, not the pair plan."""
+    from filemap_spark.cli import _survivors_from_pairs
+    from filemap_spark.operators import relational
+
+    seen = []
+    real = relational.alternating_star_components
+
+    def spy(edges):
+        seen.append(edges._jdf.queryExecution().executedPlan().toString())
+        return real(edges)
+
+    monkeypatch.setattr(relational, "alternating_star_components", spy)
+    pairs = str(tmp_path / "pairs")
+    spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 4)], "doc_a long, doc_b long"
+    ).write.parquet(pairs)
+    edges = (
+        spark.read.parquet(pairs)
+        .where("doc_a != doc_b")
+        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    )
+    docs = spark.range(1, 7).withColumnRenamed("id", "doc_id")
+    kept = {r["doc_id"] for r in _survivors_from_pairs(docs, edges).collect()}
+    assert kept == {1, 4, 6}
+    assert len(seen) == 1 and "ExistingRDD" in seen[0], seen
+    assert "parquet" not in seen[0].lower(), seen[0]
 
 
 def test_compact_verb_rewrites_fragmented_dataset(spark, sf_dir, tmp_path):
