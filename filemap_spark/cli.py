@@ -30,8 +30,8 @@ Semantics preserved from the reference:
   hash buckets, then one shell pipeline per bucket;
 - memoization: with `--memo`, a run whose (inputs, commands) fingerprint
   already produced OUTPUT is skipped — filemap's make-like rule. The
-  fingerprint covers input file names/sizes/mtimes and both command
-  strings.
+  fingerprint covers input file names/sizes/mtimes, both command
+  strings and the reduce's bucket count.
 - pipelines: the `pipeline` verb chains ANY number of --cmd / --reduce
   stages in the order given on the command line (filemap's multi-stage
   dataset DAG). Each stage materializes its own dataset directory
@@ -56,10 +56,14 @@ import hashlib
 import json
 import os
 import sys
+from functools import partial
 from typing import NamedTuple
 
 from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
+
+from filemap_spark import state
+from filemap_spark.state import _hidden
 
 
 def _fingerprint(input_path: str, cmds: list[str]) -> str:
@@ -77,24 +81,17 @@ def _fingerprint(input_path: str, cmds: list[str]) -> str:
     return h.hexdigest()
 
 
-_MEMO = "_filemap_memo.json"
-# a map stage's job writes here; each output is then renamed into place
-_MAP_TMP = "_map_tmp"
 # Hadoop's text source picks a decompression codec by file extension; a
 # map output is plain text, so its name drops the extension
 _CODEC_EXTS = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst")
 
 
 def _memo_hit(output: str, fp: str) -> bool:
-    try:
-        with open(os.path.join(output, _MEMO)) as f:
-            return json.load(f).get("fingerprint") == fp
-    except (OSError, ValueError):
-        return False
+    return state.read_manifest(output).get("fingerprint") == fp
 
 
 def _write_memo(output: str, fp: str) -> None:
-    marker = os.path.join(output, _MEMO)
+    marker = os.path.join(output, state.MANIFEST)
     with open(marker, "w") as f:
         json.dump({"fingerprint": fp}, f)
 
@@ -137,11 +134,6 @@ def _pipe_stages(
     out_df.write.mode("overwrite").text(output)
 
 
-def _hidden(name: str) -> bool:
-    """The names Hadoop's and Spark's file listings skip."""
-    return name.startswith(("_", "."))
-
-
 def _input_files(input_path: str) -> dict[str, str]:
     """Output name → absolute path of every file the text source reads
     for INPUT (a directory, a file or a glob): each matched file and the
@@ -173,69 +165,39 @@ def _input_files(input_path: str) -> dict[str, str]:
     return files
 
 
-def _read_manifest(output: str) -> dict:
-    """A map stage's manifest: {"command", "inputs": {input path: {size,
-    mtime_ns, outputs}}}. An absent or unreadable file, or a whole-stage
-    {"fingerprint"} marker, reads as {}: it lists no output."""
-    try:
-        with open(os.path.join(output, _MEMO)) as f:
-            manifest = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    return manifest if "inputs" in manifest else {}
-
-
-def _drop_unlisted(output: str, listed: set[str]) -> None:
-    """Delete every data file under a map stage dir that its manifest does
-    not list, with its checksum sidecar, and an interrupted job's scratch
-    dir. Such a file was renamed in by a run that died before its manifest
-    commit (or left by another writer); no later stage may read it."""
-    import shutil
-
-    shutil.rmtree(os.path.join(output, _MAP_TMP), ignore_errors=True)
-    if not os.path.isdir(output):
-        return
-    for n in os.listdir(output):
-        data = n[1:-4] if n.startswith(".") and n.endswith(".crc") else n
-        if not _hidden(data) and data not in listed:
-            os.remove(os.path.join(output, n))
-
-
 class _MapPlan(NamedTuple):
-    manifest: dict  # committed once the stage's outputs are in place
+    # the opened stage dir, with the outputs of deleted inputs dropped and
+    # the manifest to commit as its meta
+    txn: state.Transaction
     todo: list[tuple[str, str]]  # (input path, output name) to map
-    gone: list[str]  # outputs whose input file disappeared
 
 
 def _map_plan(input_path: str, output: str, cmd: str, memo: bool) -> _MapPlan | None:
-    """A map stage's per-file memo. Clears OUTPUT of the data files its
-    manifest does not list, then keeps each output whose input file still
-    has the (size, mtime_ns) it was mapped from. Returns None when every
-    output is current (a full hit, which writes nothing), else what the
-    stage must map and drop. Every file is mapped when `memo` is off or
-    the command changed."""
-    old = _read_manifest(output)
-    old_inputs = old.get("inputs", {})
-    listed = {name for e in old_inputs.values() for name in e["outputs"]}
-    _drop_unlisted(output, listed)
+    """A map stage's per-file memo. Opens OUTPUT as a state root (which
+    deletes the data files its manifest does not list), then keeps each
+    output whose input file still has the (size, mtime_ns) it was mapped
+    from. Returns None when every output is current (a full hit, which
+    writes nothing), else what the stage must map and drop. Every file is
+    mapped when `memo` is off or the command changed."""
+    txn = state.Transaction(output)
+    old_inputs, listed = txn.meta.get("inputs", {}), set(txn.files(output))
     command = f"map\x00{cmd}"
-    reuse = memo and old.get("command") == command
+    reuse = memo and txn.meta.get("command") == command
+    files = _input_files(input_path)
     inputs: dict[str, dict] = {}
     todo: list[tuple[str, str]] = []
-    for name, path in sorted(_input_files(input_path).items()):
+    for name, path in sorted(files.items()):
         st = os.stat(path)
-        entry = {"size": st.st_size, "mtime_ns": st.st_mtime_ns, "outputs": [name]}
-        inputs[path] = entry
-        if not (
-            reuse
-            and old_inputs.get(path) == entry
-            and os.path.isfile(os.path.join(output, name))
-        ):
+        inputs[path] = {"size": st.st_size, "mtime_ns": st.st_mtime_ns}
+        if not (reuse and old_inputs.get(path) == inputs[path] and name in listed):
             todo.append((path, name))
-    gone = sorted(listed - {e["outputs"][0] for e in inputs.values()})
+    gone = listed - set(files)
     if reuse and not todo and not gone:
         return None
-    return _MapPlan({"command": command, "inputs": inputs}, todo, gone)
+    for name in gone:
+        txn.drop(output, name)
+    txn.meta = {"command": command, "inputs": inputs}
+    return _MapPlan(txn, todo)
 
 
 def _one_partition(sc, path: str):
@@ -248,34 +210,6 @@ def _one_partition(sc, path: str):
         return lines
     empty = sc._jsc.parallelize(sc._jvm.java.util.ArrayList(), 1)
     return RDD(empty, sc, lines._jrdd_deserializer)
-
-
-def _map_files(spark: SparkSession, output: str, cmd: str, plan: _MapPlan) -> None:
-    """Carry out a map stage's plan. ONE job maps the files still to map,
-    each in its own task (a union of per-file single-partition RDDs, never
-    a packed scan), and each task's output is renamed to its file's name.
-    Then the outputs of deleted inputs go, `_SUCCESS` is touched, and the
-    manifest is committed last, by an atomic rename."""
-    import contextlib
-    import shutil
-
-    sc = spark.sparkContext
-    os.makedirs(output, exist_ok=True)
-    if plan.todo:
-        tmp = os.path.join(output, _MAP_TMP)
-        per_file = sc.union([_one_partition(sc, p) for p, _ in plan.todo])
-        per_file.pipe(_shell(cmd)).saveAsTextFile(tmp)
-        for i, (_, name) in enumerate(plan.todo):
-            os.replace(os.path.join(tmp, f"part-{i:05d}"), os.path.join(output, name))
-        shutil.rmtree(tmp)
-    for name in plan.gone:
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(os.path.join(output, name))
-    open(os.path.join(output, "_SUCCESS"), "w").close()
-    staged = os.path.join(output, _MEMO + ".tmp")
-    with open(staged, "w") as f:
-        json.dump(plan.manifest, f)
-    os.replace(staged, os.path.join(output, _MEMO))
 
 
 def run_map(
@@ -305,13 +239,25 @@ def run_stage(
     buckets: int = 32,
     plan: _MapPlan | None = None,
 ) -> None:
-    """One pipeline stage. A map stage carries out `plan` (see
-    `_map_plan`; by default every input file is mapped), one output file
-    per input file; a reduce stage rewrites OUTPUT whole (`_pipe_stages`)."""
-    if kind == "map":
-        _map_files(spark, output, cmd, plan or _map_plan(input_path, output, cmd, False))
-    else:
-        _pipe_stages(spark, input_path, output, [(kind, cmd)], buckets)
+    """One pipeline stage. A reduce stage rewrites OUTPUT whole
+    (`_pipe_stages`). A map stage carries out `plan` (see `_map_plan`; by
+    default every input file is mapped) as one state commit: ONE job maps
+    the files still to map, each in its own task (a union of per-file
+    single-partition RDDs, never a packed scan), into staging; each task's
+    output goes in under its file's name, the outputs of deleted inputs
+    go, and the stage's manifest is committed by one rename."""
+    if kind != "map":
+        return _pipe_stages(spark, input_path, output, [(kind, cmd)], buckets)
+    plan = plan or _map_plan(input_path, output, cmd, False)
+    sc = spark.sparkContext
+    if plan.todo:
+        tmp = plan.txn.staging()
+        per_file = sc.union([_one_partition(sc, p) for p, _ in plan.todo])
+        per_file.pipe(_shell(cmd)).saveAsTextFile(tmp)
+        for i, (_, name) in enumerate(plan.todo):
+            plan.txn.add(os.path.join(tmp, f"part-{i:05d}"), output, name)
+    open(os.path.join(output, "_SUCCESS"), "w").close()
+    plan.txn.commit()
 
 
 def run_pipeline(
@@ -329,10 +275,13 @@ def run_pipeline(
     OUTPUT/stage{i:02d}; the last stage writes OUTPUT/final. A map stage
     memoizes per input file (`_map_plan`): with `memo`, a run maps only
     the files that are new or changed since the stage's manifest and
-    drops the outputs of deleted ones. A reduce stage needs every key, so
-    with `memo` it is skipped only when its whole (input files, command)
-    fingerprint matches the marker in its directory. A stage with nothing
-    to do writes nothing, and because each fingerprint covers the
+    drops the outputs of deleted ones. The stage dir is a state root
+    (filemap_spark/state.py): its outputs are staged, moved in, and
+    committed by one rename of the manifest, and opening it deletes any
+    output the manifest does not list. A reduce stage needs every key, so
+    with `memo` it is skipped only when its whole (input files, command,
+    bucket count) fingerprint matches the marker in its directory. A
+    stage with nothing to do writes nothing, and because each fingerprint covers the
     PREVIOUS stage's files, invalidation cascades downstream exactly like
     make: touch one input file and only that file is re-mapped before the
     reduce reruns; edit stage 2's command and stages 2..n rerun while 0..1
@@ -348,7 +297,7 @@ def run_pipeline(
             plan = _map_plan(cur, stage_out, cmd, memo)
             hit = plan is None
         else:
-            fp = _fingerprint(cur, [f"{kind}\x00{cmd}"])
+            fp = _fingerprint(cur, [f"{kind}\x00{cmd}\x00{buckets}"])
             hit = memo and _memo_hit(stage_out, fp)
         if hit:
             print(f"memo hit: stage {i} ({kind}) up to date", file=sys.stderr)
@@ -364,17 +313,20 @@ def run_map_stream(
     spark: SparkSession, input_path: str, output: str, cmd: str
 ) -> int:
     """Incremental map over a directory: only files not yet recorded in the
-    checkpoint's file-source log are processed (availableNow drain)."""
+    checkpoint's file-source log are processed (availableNow drain). Each
+    micro-batch's lines commit to OUTPUT/data through the state module
+    under the batch id, so a batch replayed after a crash is written once."""
     checkpoint = os.path.join(output, "_checkpoint")
+    data_dir = os.path.join(output, "data")
     stream = spark.readStream.format("text").load(input_path)
     piped = stream.select(F.col("value"))
 
-    def sink(batch_df, _batch_id):
-        new = batch_df.rdd.map(lambda r: r[0]).pipe(_shell(cmd))
-        if not new.isEmpty():
-            new.map(lambda line: Row(value=line)).toDF().write.mode("append").text(
-                os.path.join(output, "data")
-            )
+    def sink(batch_df, batch_id):
+        with state.transaction(data_dir, batch=batch_id) as txn:
+            if not txn.replay:
+                lines = batch_df.rdd.map(lambda r: r[0]).pipe(_shell(cmd))
+                rows = lines.map(lambda line: Row(value=line))
+                txn.append(spark.createDataFrame(rows, "value string"), data_dir, "text")
 
     q = (
         piped.writeStream.foreachBatch(sink)
@@ -383,10 +335,8 @@ def run_map_stream(
         .start()
     )
     q.awaitTermination()
-    data_dir = os.path.join(output, "data")
-    if not os.path.exists(data_dir):
-        return 0
-    return spark.read.text(data_dir).count()
+    committed = state.Transaction(data_dir).files(data_dir)
+    return spark.read.text(data_dir).count() if committed else 0
 
 
 def run_query(
@@ -577,6 +527,13 @@ def run_dedup_stream(
         its delta (PNG→dHash / WAV→energy hash), and the batch's
         fingerprints pigeonhole-probe the persisted index;
       - verified duplicate pairs accumulate in OUTPUT/_pairs;
+      - OUTPUT is one state root (filemap_spark/state.py): a micro-batch's
+        ledger, index and `_pairs` rows commit together by one rename of
+        OUTPUT/_filemap_memo.json, keyed by the foreachBatch batch id, so a
+        crash before the rename replays the whole batch and a replay of a
+        committed batch is a no-op;
+      - after the drain the state tables and `_pairs` are compacted
+        (compact_parquet_dir's hysteresis) in one more commit;
       - the survivors-only corpus is rebuilt from the input directory +
         accumulated pairs via connected components (min-id survivor — the
         same rule as `dedup --method near`), written to
@@ -584,113 +541,86 @@ def run_dedup_stream(
         rebuild re-reads the whole input directory and all accumulated
         pairs and rewrites the survivor corpus, so it runs only when the
         fingerprint of those two inputs (file paths, sizes, mtimes)
-        differs from the marker OUTPUT/_filemap_memo.json written after
-        the last rebuild: a run that ingested nothing, and compacted
-        nothing, leaves documents.parquet untouched.
+        differs from the one the manifest records after the last
+        rebuild: a run that ingested nothing, and compacted nothing,
+        leaves documents.parquet untouched.
 
     Returns (kept, total-ingested). Re-running with no new files is a
     cheap no-op drain. tests/test_cli.py pins: two-batch arrival, the
     second run touching only batch-2 docs, the final corpus matching
     a from-scratch batch dedup of the union — for text AND the
-    perceptual modalities — and the no-op run writing nothing."""
+    perceptual modalities — the no-op run writing nothing, and a crash
+    on either side of the batch commit."""
     from filemap_spark.operators.text import (
-        _recover_compact_swap,
-        incremental_lsh_ingest,
+        _LSH_STATE_TABLES,
+        compact_lsh_state,
+        compact_parquet_dir,
     )
 
     if modality == "text":
-        state_dir = os.path.join(output, "_lsh_state")
-        ledger_name = "ingested.parquet"
-    else:
-        state_dir = os.path.join(output, "_fp_state")
-        ledger_name = "fingerprints.parquet"
-    pairs_dir = os.path.join(output, "_pairs")
-    checkpoint = os.path.join(output, "_checkpoint")
-    # heal a crashed compaction of _pairs and of the ledger BEFORE the
-    # stream can append: a fresh append into a missing dir would
-    # otherwise recreate it (an absent fingerprint ledger also makes the
-    # ingest start fresh) and the post-drain recovery would then delete
-    # .compact_old — i.e. every historical pair or ledger row (review
-    # finding, round 10; the LSH state tables get the same healing
-    # inside incremental_lsh_ingest itself)
-    _recover_compact_swap(pairs_dir)
-    _recover_compact_swap(os.path.join(state_dir, ledger_name))
-    schema = spark.read.parquet(input_dir).schema
+        from filemap_spark.operators.text import incremental_lsh_ingest
 
-    if modality == "text":
-
-        def sink(batch_df, _batch_id):
-            pairs = incremental_lsh_ingest(
-                spark, batch_df, state_dir, threshold=threshold
-            )
-            pairs.write.mode("append").parquet(pairs_dir)
-
+        state_name, names = "_lsh_state", _LSH_STATE_TABLES
+        ingest = partial(incremental_lsh_ingest, threshold=threshold)
     else:
         from filemap_spark.functions.blocked import (
             CORPUS_MATCHED_KNOB,
             incremental_fingerprint_ingest,
         )
 
-        hash_fn = _mm_hash_fn(modality)
+        state_name, names = "_fp_state", ("fingerprints.parquet",)
         nb, bb, t = CORPUS_MATCHED_KNOB
+        ingest = partial(
+            incremental_fingerprint_ingest, hash_fn=_mm_hash_fn(modality),
+            n_blocks=nb, block_bits=bb, threshold=t,
+        )
+    state_dir = os.path.join(output, state_name)
+    ledger = os.path.join(state_dir, names[0])
+    pairs_dir = os.path.join(output, "_pairs")
+    tables = [os.path.join(state_name, n) for n in names] + ["_pairs"]
 
-        def sink(batch_df, _batch_id):
-            pairs = incremental_fingerprint_ingest(
-                spark, batch_df.select("doc_id", "text"), hash_fn,
-                state_dir, n_blocks=nb, block_bits=bb, threshold=t,
-            )
-            pairs.select("doc_a", "doc_b").write.mode("append").parquet(
-                pairs_dir
-            )
+    def sink(batch_df, batch_id):
+        with state.transaction(output, tables, batch=batch_id) as txn:
+            if not txn.replay:
+                pairs = ingest(spark, batch_df.select("doc_id", "text"), state_dir=state_dir)
+                txn.append(pairs.drop("hamming"), pairs_dir)
 
     q = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(spark.read.parquet(input_dir).schema)
         .parquet(input_dir)
         .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
+        .option("checkpointLocation", os.path.join(output, "_checkpoint"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
 
-    # post-drain compaction (round 10): each micro-batch APPENDS a file
-    # set per state table AND to the accumulated-pairs dir, so a
+    # each micro-batch adds a file set per state table and to _pairs, so a
     # long-running arrival loop otherwise collects unbounded small files
     # the next run's probes and pair re-reads pay for; the hysteresis in
     # compact_parquet_dir keeps this from rewriting the full state on
     # every drain
-    from filemap_spark.operators.text import (
-        compact_lsh_state,
-        compact_parquet_dir,
-    )
-
-    if modality == "text":
-        compact_lsh_state(spark, state_dir)
-    elif os.path.isdir(os.path.join(state_dir, ledger_name)):
-        # the fingerprint ledger is one append-only parquet dir; same
-        # small-file hygiene, same hysteresis
-        compact_parquet_dir(spark, os.path.join(state_dir, ledger_name))
-    if os.path.isdir(pairs_dir):
+    with state.transaction(output, tables) as txn:
+        if modality == "text":
+            compact_lsh_state(spark, state_dir)
+        else:
+            compact_parquet_dir(spark, ledger)
         compact_parquet_dir(spark, pairs_dir)
-
-    ledger_path = os.path.join(state_dir, ledger_name)
-    if not os.path.exists(ledger_path):  # empty input dir, nothing ingested
+    if not txn.files(ledger):  # empty input dir, nothing ingested
         return 0, 0
-    n_total = spark.read.parquet(ledger_path).count()
+    n_total = spark.read.parquet(ledger).count()
     out = os.path.join(output, "documents.parquet")
     # survivors are a function of the input files and the pairs alone
     fp = _fingerprint(input_dir, ["survivors", _fingerprint(pairs_dir, [])])
     if not (_memo_hit(output, fp) and os.path.exists(os.path.join(out, "_SUCCESS"))):
-        # drop the marker first: a rebuild cut short must not read as current
-        if os.path.exists(os.path.join(output, _MEMO)):
-            os.remove(os.path.join(output, _MEMO))
         edges = spark.read.parquet(pairs_dir).select(
             F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
         )
-        docs = spark.read.parquet(input_dir)
-        clean = _survivors_from_pairs(docs, edges)
+        clean = _survivors_from_pairs(spark.read.parquet(input_dir), edges)
         clean.write.mode("overwrite").parquet(out)
-        _write_memo(output, fp)
+        # a rebuild cut short leaves no _SUCCESS, so it never reads as current
+        with state.transaction(output, tables) as txn:
+            txn.meta["fingerprint"] = fp
     return spark.read.parquet(out).count(), n_total
 
 
@@ -1317,17 +1247,16 @@ def main(argv: list[str] | None = None) -> int:
             shown += 1
         print(f"{shown} operators", file=sys.stderr)
         return 0
-    if args.verb == "query":
-        from filemap_spark.session import get_spark
+    if args.verb == "pipeline" and not getattr(args, "stages", None):
+        p.error("pipeline needs at least one --cmd/--reduce stage")
+    from filemap_spark.session import get_spark
 
-        spark = get_spark("filemap-cli")
+    spark = get_spark("filemap-cli")
+    if args.verb == "query":
         n = run_query(spark, args.sf_dir, args.sql, output=args.output, limit=args.limit)
         print(f"{n} rows", file=sys.stderr)
         return 0
     if args.verb == "dedup":
-        from filemap_spark.session import get_spark
-
-        spark = get_spark("filemap-cli")
         if args.method is not None and (args.stream or args.modality != "text"):
             # ADVICE r15: an explicit --method with a non-text modality
             # (or --stream) was silently ignored — say so. Perceptual
@@ -1353,16 +1282,10 @@ def main(argv: list[str] | None = None) -> int:
         print(f"kept {kept}/{total} docs -> {args.output}", file=sys.stderr)
         return 0
     if args.verb == "stats":
-        from filemap_spark.session import get_spark
-
-        spark = get_spark("filemap-cli")
         for k, v in run_stats(spark, args.input).items():
             print(f"{k}\t{v}")
         return 0
     if args.verb == "quality":
-        from filemap_spark.session import get_spark
-
-        spark = get_spark("filemap-cli")
         audit = run_quality(
             spark, args.input, args.output, clean_lines=args.clean_lines,
             gate=args.gate, scores_out=args.scores_out,
@@ -1371,9 +1294,6 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{k}\t{v}")
         return 0
     if args.verb == "decontam":
-        from filemap_spark.session import get_spark
-
-        spark = get_spark("filemap-cli")
         audit = run_decontam(
             spark, args.input, args.output, eval_dir=args.eval_dir,
             max_frac=args.max_frac, report_out=args.report_out,
@@ -1382,18 +1302,12 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{k}\t{v}")
         return 0
     if args.verb == "tpch":
-        from filemap_spark.session import get_spark
-
-        spark = get_spark("filemap-cli")
         results = run_tpch(spark, args.sf_dir, which=args.query, output=args.output)
         for qid, name, n, secs in results:
             print(f"{qid}\t{name}\t{n}\t{secs:.3f}")
         print(f"{len(results)} queries", file=sys.stderr)
         return 0
     if args.verb == "compact":
-        from filemap_spark.session import get_spark
-
-        spark = get_spark("filemap-cli")
         before, after, rows = run_compact(
             spark,
             args.input,
@@ -1408,11 +1322,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 0
     if args.verb == "pipeline":
-        if not (getattr(args, "stages", None) or []):
-            p.error("pipeline needs at least one --cmd/--reduce stage")
-        from filemap_spark.session import get_spark
-
-        spark = get_spark("filemap-cli")
         n = run_pipeline(
             spark,
             args.input,
@@ -1423,11 +1332,9 @@ def main(argv: list[str] | None = None) -> int:
         )
         print(f"{n} lines -> {os.path.join(args.output, 'final')}", file=sys.stderr)
         return 0
-    from filemap_spark.session import get_spark
-
-    spark = get_spark("filemap-cli")
     reduce_cmd = getattr(args, "reduce", None)
-    cmds = [args.cmd] + ([reduce_cmd] if reduce_cmd else [])
+    buckets = getattr(args, "buckets", 32)
+    cmds = [args.cmd] + ([reduce_cmd, str(buckets)] if reduce_cmd else [])
     fp = _fingerprint(args.input, cmds)
     if args.memo and _memo_hit(args.output, fp):
         print(f"memo hit: {args.output} up to date", file=sys.stderr)
@@ -1443,7 +1350,7 @@ def main(argv: list[str] | None = None) -> int:
             args.output,
             args.cmd,
             reduce_cmd=reduce_cmd,
-            buckets=getattr(args, "buckets", 32),
+            buckets=buckets,
             partitions=args.partitions,
         )
     if args.memo:

@@ -23,6 +23,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from filemap_spark import state
+
 _LOG = logging.getLogger("filemap_spark.blocked")
 
 # The deployed parameterizations, as CODE (round 14, VERDICT r13 task 5 —
@@ -268,11 +270,13 @@ def incremental_fingerprint_ingest(
     only the new documents are decoded and hashed; the existing corpus
     contributes through the persisted index, never re-decoded.
 
-    State layout under `state_dir`: one append-only parquet table
+    State layout under `state_dir`: one parquet table
     `fingerprints.parquet` (doc_id, fp) — simultaneously the make
     ledger (anti-join on doc_id keeps re-ingest a no-op) and the probe
     index (8 bytes per doc; the pigeonhole probe explodes it to
-    n_blocks rows per DISTINCT fp, never touching payload bytes).
+    n_blocks rows per DISTINCT fp, never touching payload bytes). It
+    grows by one file per batch, committed through filemap_spark/state.py
+    (staged, moved in, then one manifest rename).
 
     `hash_fn(docs) -> (doc_id, fp long)` is the modality's decode+hash
     stage (dHash for images, energy-contour hash for audio) — applied
@@ -295,113 +299,113 @@ def incremental_fingerprint_ingest(
     Scale: per batch, decode touches |delta| docs; the probe broadcasts
     n_blocks rows per distinct DELTA fp (16 B each — the in-code cap
     note) against the round-robin-spread block frame of all distinct
-    fps; the index append is one single-file columnar write per batch.
+    fps; the index commit is one single-file columnar write per batch.
     The knob is the same (n_blocks, block_bits, threshold) triple as
     the batch path (CORPUS_MATCHED_KNOB / WEB_SCALE_KNOB)."""
     if threshold >= n_blocks:
         raise ValueError(
             f"pigeonhole needs threshold < n_blocks, got {threshold} >= {n_blocks}"
         )
-    os.makedirs(state_dir, exist_ok=True)
     fp_path = os.path.join(state_dir, "fingerprints.parquet")
-    have_state = os.path.exists(fp_path)
+    with state.transaction(state_dir, ("fingerprints.parquet",)) as txn:
+        have_state = bool(txn.files(fp_path))
 
-    new_docs = docs
-    index = None
-    if have_state:
-        # localCheckpoint BEFORE the append below: the returned pair plan
-        # must read the pre-batch index even if executed after the write
-        index = spark.read.parquet(fp_path).localCheckpoint()
-        new_docs = new_docs.join(index.select("doc_id"), "doc_id", "left_anti")
-    # delta-only decode+hash, pinned (the ledger append must not flip
-    # the anti-join, and decode must run once, not per downstream use)
-    delta = hash_fn(new_docs).localCheckpoint()
-    if not delta.take(1):
-        return spark.createDataFrame([], "doc_a long, doc_b long, hamming int")
+        new_docs = docs
+        if have_state:
+            # localCheckpoint BEFORE the commit below: the returned pair plan
+            # must read the pre-batch index even if executed after it
+            index = spark.read.parquet(fp_path).localCheckpoint()
+            new_docs = new_docs.join(index.select("doc_id"), "doc_id", "left_anti")
+        # delta-only decode+hash, pinned (the ledger commit must not flip
+        # the anti-join, and decode must run once, not per downstream use)
+        delta = hash_fn(new_docs).localCheckpoint()
+        if not delta.take(1):
+            return spark.createDataFrame([], "doc_a long, doc_b long, hamming int")
 
-    all_fps = (
-        index.withColumn("is_new", F.lit(False)).unionByName(
-            delta.withColumn("is_new", F.lit(True))
+        all_fps = (
+            index.withColumn("is_new", F.lit(False)).unionByName(
+                delta.withColumn("is_new", F.lit(True))
+            )
+            if have_state
+            else delta.withColumn("is_new", F.lit(True))
         )
-        if have_state
-        else delta.withColumn("is_new", F.lit(True))
-    )
-    # ONE tagged distinct serves both join sides (r18: the r17 shape ran
-    # TWO distinct aggs — delta-only and all — each its own exchange;
-    # max(is_new) over the members of a fingerprint marks whether any
-    # holder arrived in THIS batch, so the probe side is a filter of the
-    # same relation and ReuseExchange computes the agg once)
-    reps = all_fps.groupBy("fp").agg(F.max("is_new").alias("is_new"))
-    # Probe side (delta fps only) is BROADCAST: both inputs are
-    # statistics-less checkpoint scans, so left alone the planner's
-    # static choice is fragile and an AQE SMJ->BHJ conversion re-reads
-    # the streamed side through a coalesced-to-ONE-partition
-    # AQEShuffleRead — the exact trap the r17 spread fixed (guide §3.1:
-    # pick the strategy deliberately when estimates are absent). The
-    # hint pins build=probe in the INITIAL plan, so the streamed side
-    # keeps the round-robin width below and no probe-side exchange
-    # exists at all (r17 spread both sides; the build side's exchange
-    # was dead weight). Cap: the broadcast holds n_blocks rows per
-    # DISTINCT delta fingerprint (16 B each) — delta-sized, fine to
-    # ~50M distinct fps per batch; past that drop the hint and the
-    # r17 both-sides-spread shuffle join is the semantics-identical
-    # fallback.
-    probe = F.broadcast(
-        signature_blocks(
-            reps.where("is_new"), "fp", n_blocks, block_bits, keep=["fp"]
-        ).withColumnRenamed("fp", "nfp")
-    ).alias("a")
-    # spread the streamed block frame before the candidate join — the
-    # distinct output is tiny, AQE coalesces its shuffle to ONE
-    # partition, and the streamed-side partition count is the task
-    # count of a join whose OUTPUT is ~n²/2^block_bits rows;
-    # unconditional for the no-double-execution reason documented in
-    # block_pigeonhole_pairs
-    width = spark.sparkContext.defaultParallelism
-    target = (
-        signature_blocks(reps, "fp", n_blocks, block_bits, keep=["fp"])
-        .repartition(width)
-        .withColumnRenamed("fp", "ofp")
-        .alias("b")
-    )
-    hamming = F.bit_count(F.col("a.nfp").bitwiseXOR(F.col("b.ofp")))
-    # nfp == ofp rows are KEPT (r18): a same-fingerprint "pair" agrees
-    # on every block, so the join emits (f, f, 0) for each delta fp and
-    # the doc-level expansion below yields exactly the old separate
-    # intra branch's hamming-0 pairs — one join subtree instead of two.
-    fp_pairs = (
-        probe.join(
-            target,
-            (F.col("a.blk_idx") == F.col("b.blk_idx"))
-            & (F.col("a.blk_val") == F.col("b.blk_val")),
+        # ONE tagged distinct serves both join sides (r18: the r17 shape ran
+        # TWO distinct aggs — delta-only and all — each its own exchange;
+        # max(is_new) over the members of a fingerprint marks whether any
+        # holder arrived in THIS batch, so the probe side is a filter of the
+        # same relation and ReuseExchange computes the agg once)
+        reps = all_fps.groupBy("fp").agg(F.max("is_new").alias("is_new"))
+        # Probe side (delta fps only) is BROADCAST: both inputs are
+        # statistics-less checkpoint scans, so left alone the planner's
+        # static choice is fragile and an AQE SMJ->BHJ conversion re-reads
+        # the streamed side through a coalesced-to-ONE-partition
+        # AQEShuffleRead — the exact trap the r17 spread fixed (guide §3.1:
+        # pick the strategy deliberately when estimates are absent). The
+        # hint pins build=probe in the INITIAL plan, so the streamed side
+        # keeps the round-robin width below and no probe-side exchange
+        # exists at all (r17 spread both sides; the build side's exchange
+        # was dead weight). Cap: the broadcast holds n_blocks rows per
+        # DISTINCT delta fingerprint (16 B each) — delta-sized, fine to
+        # ~50M distinct fps per batch; past that drop the hint and the
+        # r17 both-sides-spread shuffle join is the semantics-identical
+        # fallback.
+        probe = F.broadcast(
+            signature_blocks(
+                reps.where("is_new"), "fp", n_blocks, block_bits, keep=["fp"]
+            ).withColumnRenamed("fp", "nfp")
+        ).alias("a")
+        # spread the streamed block frame before the candidate join — the
+        # distinct output is tiny, AQE coalesces its shuffle to ONE
+        # partition, and the streamed-side partition count is the task
+        # count of a join whose OUTPUT is ~n²/2^block_bits rows;
+        # unconditional for the no-double-execution reason documented in
+        # block_pigeonhole_pairs
+        width = spark.sparkContext.defaultParallelism
+        target = (
+            signature_blocks(reps, "fp", n_blocks, block_bits, keep=["fp"])
+            .repartition(width)
+            .withColumnRenamed("fp", "ofp")
+            .alias("b")
         )
-        .where(hamming <= threshold)
-        .select("nfp", "ofp", hamming.cast("int").alias("hamming"))
-        .distinct()
-    )
-    # expand: the new side through THIS batch's docs only (delta
-    # semantics), the other side through everything; id_n != id_o drops
-    # the self-pairs the folded intra diagonal would otherwise emit
-    cross = (
-        fp_pairs.join(
-            delta.select(F.col("fp").alias("nfp"), F.col("doc_id").alias("id_n")),
-            "nfp",
+        hamming = F.bit_count(F.col("a.nfp").bitwiseXOR(F.col("b.ofp")))
+        # nfp == ofp rows are KEPT (r18): a same-fingerprint "pair" agrees
+        # on every block, so the join emits (f, f, 0) for each delta fp and
+        # the doc-level expansion below yields exactly the old separate
+        # intra branch's hamming-0 pairs — one join subtree instead of two.
+        fp_pairs = (
+            probe.join(
+                target,
+                (F.col("a.blk_idx") == F.col("b.blk_idx"))
+                & (F.col("a.blk_val") == F.col("b.blk_val")),
+            )
+            .where(hamming <= threshold)
+            .select("nfp", "ofp", hamming.cast("int").alias("hamming"))
+            .distinct()
         )
-        .join(
-            all_fps.select(F.col("fp").alias("ofp"), F.col("doc_id").alias("id_o")),
-            "ofp",
+        # expand: the new side through THIS batch's docs only (delta
+        # semantics), the other side through everything; id_n != id_o drops
+        # the self-pairs the folded intra diagonal would otherwise emit
+        cross = (
+            fp_pairs.join(
+                delta.select(F.col("fp").alias("nfp"), F.col("doc_id").alias("id_n")),
+                "nfp",
+            )
+            .join(
+                all_fps.select(F.col("fp").alias("ofp"), F.col("doc_id").alias("id_o")),
+                "ofp",
+            )
+            .where(F.col("id_n") != F.col("id_o"))
+            .select(
+                F.least("id_n", "id_o").alias("doc_a"),
+                F.greatest("id_n", "id_o").alias("doc_b"),
+                "hamming",
+            )
         )
-        .where(F.col("id_n") != F.col("id_o"))
-        .select(
-            F.least("id_n", "id_o").alias("doc_a"),
-            F.greatest("id_n", "id_o").alias("doc_b"),
-            "hamming",
-        )
-    )
-    pairs = cross.distinct()
-    # one state file per batch: the delta is already materialized (the
-    # checkpoint above), so the append is a 1-task scan of memory — and
-    # every later ingest's index scan pays per-file open cost, so small
-    # batches must not leave a file per shuffle partition (guide §6)
-    delta.coalesce(1).write.mode("append").parquet(fp_path)
-    return pairs
+        pairs = cross.distinct()
+        # one state file per batch, committed when the transaction closes
+        # (or with dedup --stream's _pairs): the delta is already materialized
+        # (the checkpoint above), so the write is a 1-task scan of memory — and
+        # every later ingest's index scan pays per-file open cost, so small
+        # batches must not leave a file per shuffle partition (guide §6)
+        txn.append(delta.coalesce(1), fp_path)
+        return pairs

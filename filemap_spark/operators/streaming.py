@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from filemap_spark import state
 from filemap_spark.io import EVENTS_NORM_SQL, load_table
 from filemap_spark.registry import query
 
@@ -237,34 +238,33 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def upsert_latest_wins(spark: SparkSession, table_dir: str, batch: DataFrame) -> None:
     """SCD1 latest-wins upsert of an event batch into a parquet state table
     keyed by user_id: union current state with the batch, keep each key's
-    newest row by (ts_us, event_id), rewrite the table. The merged frame is
-    eagerly localCheckpoint-ed BEFORE the overwrite — the rewrite reads the
-    directory it replaces, and lazy evaluation would otherwise scan
-    half-deleted files. Idempotent: replaying a batch changes nothing.
+    newest row by (ts_us, event_id), replace the table. The table dir is a
+    state root (filemap_spark/state.py): the merged rows are written as new
+    files to staging, a manifest that lists only them is committed by one
+    rename, and only then are the old files deleted. The rewrite reads
+    files that stay in place until after the commit, and a crash
+    mid-write leaves the previous table. Idempotent: replaying a batch
+    changes nothing.
 
     Scale note: the rewrite is O(|state|) per batch — the no-lakehouse
     baseline. A real deployment bounds it by partitioning the state table
     on a stable key hash and rewriting ONLY partitions the batch touches
     (the sink_partition_overwrite_dynamic pattern composes directly)."""
-    import os
-
     cols = ["user_id", "event_id", "ts_us", "value"]
-    incoming = batch.select(*cols)
-    if os.path.exists(table_dir):
-        current = spark.read.parquet(table_dir)
-        merged = current.unionByName(incoming)
-    else:
-        merged = incoming
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts_us"), F.desc("event_id")
-    )
-    latest = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .localCheckpoint(eager=True)
-    )
-    latest.write.mode("overwrite").parquet(table_dir)
+    with state.transaction(table_dir) as txn:
+        merged = batch.select(*cols)
+        if txn.files(table_dir):
+            merged = spark.read.parquet(table_dir).unionByName(merged)
+        w = Window.partitionBy("user_id").orderBy(
+            F.desc("ts_us"), F.desc("event_id")
+        )
+        latest = (
+            merged.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+        txn.drop(table_dir)
+        txn.append(latest, table_dir)
 
 
 @query(

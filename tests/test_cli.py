@@ -4,8 +4,11 @@ and incremental (new-files-only) streaming runs."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from filemap_spark.cli import (
@@ -358,6 +361,30 @@ def test_pipeline_upgrades_whole_stage_marker(spark, tmp_path):
     _assert_matches_cold(spark, src, out, _WORDCOUNT, tmp_path, "cold")
 
 
+def test_pipeline_reduce_memo_keys_bucket_count(spark, tmp_path, capsys):
+    """A reduce stage's memo fingerprint covers its bucket count: a
+    memoized rerun with another bucket count misses and rewrites the
+    stage, and a rerun with the same count hits."""
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), [" ".join(f"w{i}" for i in range(64))])
+    src, out = str(src), str(tmp_path / "out")
+    final = os.path.join(out, "final")
+
+    def parts():
+        return [f for f in os.listdir(final) if f.startswith("part-")]
+
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=8, memo=True)
+    assert 2 < len(parts()) <= 8
+    capsys.readouterr()
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=2, memo=True)
+    assert "stage 1 (reduce) up to date" not in capsys.readouterr().err
+    assert len(parts()) <= 2
+    got = {r["value"] for r in spark.read.text(final).collect()}
+    assert got == {f"w{i} 1" for i in range(64)}
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=2, memo=True)
+    assert "stage 1 (reduce) up to date" in capsys.readouterr().err
+
+
 def test_stream_processes_only_new_files(spark, tmp_path):
     src = tmp_path / "in"
     out = str(tmp_path / "out")
@@ -370,6 +397,37 @@ def test_stream_processes_only_new_files(spark, tmp_path):
     assert n2 == 3
     vals = sorted(r["value"] for r in spark.read.text(os.path.join(out, "data")).collect())
     assert vals == ["one", "three", "two"]
+
+
+def test_stream_writes_each_batch_once(spark, tmp_path, monkeypatch, state_crash):
+    """`map --stream` commits each micro-batch's lines under its batch id:
+    a sink that dies after writing its lines, or after committing them,
+    is replayed by the next run, and the lines land once."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real_text = DataFrameWriter.text
+
+    def write_then_die(self, *args, **kwargs):
+        monkeypatch.setattr(DataFrameWriter, "text", real_text)
+        real_text(self, *args, **kwargs)
+        raise RuntimeError("after_write")
+
+    for crash in ("after_write", "after_commit"):
+        src = tmp_path / crash / "in"
+        _write_lines(str(src / "a.txt"), ["one", "two"])
+        _write_lines(str(src / "b.txt"), ["three"])
+        out = str(tmp_path / crash / "out")
+        if crash == "after_write":
+            monkeypatch.setattr(DataFrameWriter, "text", write_then_die)
+        else:
+            state_crash(crash)
+        with pytest.raises(Exception, match=crash):
+            run_map_stream(spark, str(src), out, "cat")
+        assert run_map_stream(spark, str(src), out, "cat") == 3, crash
+        vals = sorted(
+            r["value"] for r in spark.read.text(os.path.join(out, "data")).collect()
+        )
+        assert vals == ["one", "three", "two"], crash
 
 
 def test_query_verb_runs_sql_over_views(spark, sf_dir, tmp_path, capsys):
@@ -482,6 +540,49 @@ def test_dedup_verb_substring_cuts_masked_spans(spark, tmp_path):
     assert run_stats(spark, out)["n_docs"] == 5  # chainable
 
 
+_BASE = "the quick brown fox jumps over the lazy dog near the river bank"
+# the dedup --stream four-doc corpora: 2 is an exact duplicate of 1, 4 a
+# near duplicate of 1 in text, 3 unrelated
+_TEXT_DOCS = {
+    1: _BASE + " every single day without fail in the morning",
+    2: _BASE + " every single day without fail in the morning",
+    3: "completely different text about spark catalyst optimizer plans "
+       "and distributed shuffle exchange strategies at petabyte scale",
+    4: _BASE + " every single day without fail in the evening",
+}
+_MEDIA_DOCS = {
+    1: _BASE + " every single day without fail in the morning",
+    2: _BASE + " every single day without fail in the morning",
+    3: "completely different text about spark catalyst optimizer "
+       "plans and distributed shuffle exchange strategies",
+    4: _BASE + " every single day without fail in the evening",
+}
+
+
+def _write_docs(spark, corpus, docs: dict, ids) -> None:
+    """Append the docs `ids` to a corpus dir as one parquet file."""
+    rows = [(i, docs[i], "en", "test", len(docs[i])) for i in ids]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).coalesce(1).write.mode("append").parquet(str(corpus))
+
+
+def _doc_ids(spark, path: str) -> set[int]:
+    return {r["doc_id"] for r in spark.read.parquet(path).collect()}
+
+
+def _one_shot(spark, corpus, out: str, modality: str) -> set[int]:
+    """Survivors of a from-scratch batch `dedup` of the whole corpus."""
+    from filemap_spark.cli import run_dedup
+
+    union = os.path.join(out, "union")
+    spark.read.parquet(str(corpus)).write.mode("overwrite").parquet(
+        os.path.join(union, "documents.parquet")
+    )
+    run_dedup(spark, union, out, method="near", modality=modality)
+    return _doc_ids(spark, os.path.join(out, "documents.parquet"))
+
+
 def test_dedup_stream_incremental_two_batches(spark, tmp_path):
     """`dedup --stream` end-to-end (round 5, VERDICT r4 task 7): two-batch
     file arrival through the Structured-Streaming file source + persisted
@@ -493,14 +594,7 @@ def test_dedup_stream_incremental_two_batches(spark, tmp_path):
 
     from filemap_spark.cli import run_dedup, run_dedup_stream
 
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    docs = {
-        1: base + " every single day without fail in the morning",
-        2: base + " every single day without fail in the morning",  # dup of 1
-        3: "completely different text about spark catalyst optimizer plans "
-           "and distributed shuffle exchange strategies at petabyte scale",
-        4: base + " every single day without fail in the evening",  # near-dup
-    }
+    docs = _TEXT_DOCS
     corpus = tmp_path / "corpus"
     corpus.mkdir()
 
@@ -560,18 +654,24 @@ def test_dedup_stream_incremental_two_batches(spark, tmp_path):
     kept3, total3 = run_dedup_stream(spark, str(corpus), out)
     assert (kept3, total3) == (kept2, 4)
 
-    # crash-recovery (round 10): a _pairs compaction that died between
-    # its two swap renames leaves the accumulated pairs stranded in
-    # _pairs.compact_old — the next run must HEAL before the stream can
-    # append (a fresh append would recreate _pairs and the post-drain
-    # recovery would then delete the historical pairs), so the survivor
-    # corpus comes out unchanged
+    # crash-recovery: a commit that died after moving its files into
+    # _pairs, before its manifest rename, leaves a file the manifest does
+    # not list (here a copy of a committed one) — the next run must delete
+    # it before anything reads _pairs, so no pair is counted twice and the
+    # survivor corpus comes out unchanged
     pairs_dir = os.path.join(out, "_pairs")
-    os.rename(pairs_dir, pairs_dir + ".compact_old")
+    committed = sorted(f for f in os.listdir(pairs_dir) if f.endswith(".parquet"))
+    shutil.copy(
+        os.path.join(pairs_dir, committed[0]),
+        os.path.join(pairs_dir, "part-99999-moved-in.parquet"),
+    )
     kept4, total4 = run_dedup_stream(spark, str(corpus), out)
     assert (kept4, total4) == (kept2, 4)
-    assert os.path.isdir(pairs_dir)
-    assert not os.path.exists(pairs_dir + ".compact_old")
+    assert sorted(
+        f for f in os.listdir(pairs_dir) if f.endswith(".parquet")
+    ) == committed
+    pairs = spark.read.parquet(pairs_dir)
+    assert pairs.count() == pairs.select("doc_a", "doc_b").distinct().count()
 
 
 def test_dedup_stream_noop_leaves_survivors_untouched(spark, tmp_path):
@@ -610,6 +710,92 @@ def test_dedup_stream_noop_leaves_survivors_untouched(spark, tmp_path):
     assert run_dedup_stream(spark, str(corpus), out) == (2, 3)
     assert snapshot(docs) != before
     assert {r["doc_id"] for r in spark.read.parquet(docs).collect()} == {1, 2}
+
+
+@pytest.mark.parametrize("modality", ["text", "image"])
+def test_dedup_stream_crash_replays_batch(
+    spark, tmp_path, monkeypatch, state_crash, modality
+):
+    """`dedup --stream` dies inside its one micro-batch (all four docs in
+    one file), and the rerun replays that batch id. It dies after the
+    ingest returned, before `_pairs` was staged; after the batch's ledger,
+    index and `_pairs` files were moved in, before the manifest rename;
+    or after the commit, before Spark logged the batch. Each rerun's
+    survivors equal a one-shot `dedup` of the same corpus ([1, 3] for
+    text), and `_pairs` holds each pair once."""
+    from filemap_spark.cli import run_dedup_stream
+    from filemap_spark.functions import blocked
+    from filemap_spark.operators import text
+
+    docs = _TEXT_DOCS if modality == "text" else _MEDIA_DOCS
+    corpus = tmp_path / "corpus"
+    _write_docs(spark, corpus, docs, [1, 2, 3, 4])
+    want = _one_shot(spark, corpus, str(tmp_path / "one_shot"), modality)
+    if modality == "text":
+        assert want == {1, 3}
+    mod, name = (
+        (text, "incremental_lsh_ingest")
+        if modality == "text"
+        else (blocked, "incremental_fingerprint_ingest")
+    )
+    real_ingest = getattr(mod, name)
+
+    def ingest_then_die(*args, **kwargs):
+        monkeypatch.setattr(mod, name, real_ingest)
+        real_ingest(*args, **kwargs)
+        raise RuntimeError("after_ingest")
+
+    for crash in ("after_ingest", "before_rename", "after_commit"):
+        out = str(tmp_path / crash)
+        if crash == "after_ingest":
+            monkeypatch.setattr(mod, name, ingest_then_die)
+        else:
+            state_crash(crash)
+        with pytest.raises(Exception, match=crash):
+            run_dedup_stream(spark, str(corpus), out, modality=modality)
+        kept, total = run_dedup_stream(spark, str(corpus), out, modality=modality)
+        got = _doc_ids(spark, os.path.join(out, "documents.parquet"))
+        assert (got, kept, total) == (want, len(want), 4), crash
+        pairs = spark.read.parquet(os.path.join(out, "_pairs"))
+        n = pairs.count()
+        assert n and n == pairs.select("doc_a", "doc_b").distinct().count(), crash
+
+
+def test_dedup_stream_adopts_legacy_state(spark, tmp_path):
+    """State written before the manifest commit — plain parquet appends,
+    and OUTPUT/_filemap_memo.json holding only the survivor marker — is
+    adopted as committed by the next run, not collected: the ledger and
+    `_pairs` survive, and the next arrival ingests on top of them."""
+    from filemap_spark.cli import run_dedup_stream
+
+    corpus = tmp_path / "corpus"
+    _write_docs(spark, corpus, _TEXT_DOCS, [1, 3])
+    fresh, out = str(tmp_path / "fresh"), str(tmp_path / "legacy")
+    run_dedup_stream(spark, str(corpus), fresh)
+    # the older layout: each table one plain append per batch, and no
+    # manifest listing its files
+    tables = [
+        "_lsh_state/ingested.parquet",
+        "_lsh_state/shingles.parquet",
+        "_lsh_state/bands.parquet",
+        "_pairs",
+    ]
+    for t in tables:
+        spark.read.parquet(os.path.join(fresh, t)).write.mode("append").parquet(
+            os.path.join(out, t)
+        )
+    shutil.copytree(os.path.join(fresh, "_checkpoint"), os.path.join(out, "_checkpoint"))
+    with open(os.path.join(out, "_filemap_memo.json"), "w") as f:
+        json.dump({"fingerprint": "0"}, f)
+    ledger = os.path.join(out, "_lsh_state", "ingested.parquet")
+    assert _doc_ids(spark, ledger) == {1, 3}
+
+    _write_docs(spark, corpus, _TEXT_DOCS, [2, 4])
+    kept, total = run_dedup_stream(spark, str(corpus), out)
+    assert _doc_ids(spark, ledger) == {1, 2, 3, 4} and total == 4
+    assert _doc_ids(spark, os.path.join(out, "documents.parquet")) == {1, 3}
+    pairs = spark.read.parquet(os.path.join(out, "_pairs")).count()
+    assert pairs == 3  # (1, 2), (1, 4), (2, 4): batch 2's only
 
 
 def test_survivors_components_read_the_checkpointed_pairs(
@@ -795,22 +981,13 @@ def test_dedup_modality_batch_and_stream_chain(spark, tmp_path):
     exactly the arriving batch), (b) surface the exact-duplicate pair
     that spans the two batches, and (c) leave a survivors corpus
     identical to a from-scratch batch `dedup --modality X` of the union
-    — the chained-corpus invariant the text test pins. The ledger is
-    parked as an interrupted compaction leaves it between the two runs,
-    so (a)–(c) also pin that the stream heals it before ingesting."""
+    — the chained-corpus invariant the text test pins. Between the two
+    runs the ledger gets a file its manifest does not list, as a commit
+    that died before its manifest rename leaves it, so (a)–(c) also pin
+    that the stream deletes it before ingesting."""
     from filemap_spark.cli import run_dedup, run_dedup_stream
 
-    base = (
-        "the quick brown fox jumps over the lazy dog near the river bank "
-        "every single day without fail"
-    )
-    docs = {
-        1: base + " in the morning",
-        2: base + " in the morning",  # exact dup of 1, arrives in batch 2
-        3: "completely different text about spark catalyst optimizer "
-           "plans and distributed shuffle exchange strategies",
-        4: base + " in the evening",
-    }
+    docs = _MEDIA_DOCS  # 2, an exact dup of 1, arrives in batch 2
 
     for modality in ("image", "audio"):
         root = tmp_path / modality
@@ -834,10 +1011,14 @@ def test_dedup_modality_batch_and_stream_chain(spark, tmp_path):
         ledger = os.path.join(out, "_fp_state", "fingerprints.parquet")
         ids1 = {r["doc_id"] for r in spark.read.parquet(ledger).collect()}
         assert ids1 == {1, 3}
-        # a ledger compaction that died between its two renames leaves
-        # the ledger parked as .compact_old: the next run must heal it
-        # before the stream ingests, not start a fresh ledger
-        os.rename(ledger, ledger + ".compact_old")
+        # a commit that died after moving a ledger file in, before its
+        # manifest rename: the next run must delete the file before the
+        # stream ingests (else total2 counts its rows twice)
+        moved = sorted(f for f in os.listdir(ledger) if f.endswith(".parquet"))
+        shutil.copy(
+            os.path.join(ledger, moved[0]),
+            os.path.join(ledger, "part-99999-moved-in.parquet"),
+        )
 
         write_batch([2, 4])
         kept2, total2 = run_dedup_stream(

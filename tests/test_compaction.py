@@ -151,17 +151,20 @@ def test_zorder_bounds_both_dimensions(spark, sf_dir, tmp_path):
 
 
 def test_incremental_lsh_multibatch_soak_compaction_and_crashes(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, state_crash
 ):
     """Round-12 soak (VERDICT r11 task 4, carried from r10 task 5): a
-    long-running ingest loop — TEN batches (doc_id % 10) appended in
+    long-running ingest loop — TEN batches (doc_id % 10) ingested in
     sequence — with `compact_lsh_state` firing MID-STREAM (after batches
-    3 and 7) and a kill/restart simulated between batches (a compaction
-    crashed between its two swap renames — live dir gone, `.compact_old`
-    parked — which the next ingest must heal via _recover_compact_swap
-    before trusting state). Contract: the union of the ten delta outputs
-    equals the one-shot exact >=0.8-Jaccard pair set, every pair exactly
-    once, no matter where compaction or crashes interleave."""
+    3 and 7) and kills at both crash states of the state commit
+    (filemap_spark/state.py): batches 2, 5 and 8 first die with their
+    files moved in and the manifest not renamed, and are retried; the
+    compaction after batch 3 dies committed, with its old files not yet
+    deleted, which the next ingest's open deletes. Contract: the union of
+    the ten delta outputs equals the one-shot exact >=0.8-Jaccard pair
+    set, every pair exactly once, no matter where compaction or crashes
+    interleave, and re-ingesting the corpus is a no-op."""
+    import pytest
     from pyspark.sql import functions as F
 
     from filemap_spark.operators.text import (
@@ -175,27 +178,35 @@ def test_incremental_lsh_multibatch_soak_compaction_and_crashes(
     got: dict[tuple[int, int], float] = {}
     for k in range(10):
         batch = docs.where(F.col("doc_id") % 10 == k)
+        if k in (2, 5, 8):
+            # kill/restart: the batch dies before its manifest rename; the
+            # retry must see none of its rows and lose none of its pairs
+            state_crash("before_rename")
+            with pytest.raises(Exception, match="before_rename"):
+                incremental_lsh_ingest(spark, batch, state)
         delta = {
             (r["doc_a"], r["doc_b"]): r["jaccard"]
             for r in incremental_lsh_ingest(spark, batch, state).collect()
         }
         assert not set(delta) & set(got), f"batch {k} re-reported pairs"
         got.update(delta)
-        if k in (3, 7):
-            # mid-stream fold: force a real rewrite (slack=1, min_files=1)
+        if k == 3:
+            # mid-stream fold that commits and dies before deleting the
+            # old files (slack=1, min_files=1 force a real rewrite)
+            state_crash("before_delete")
+            with pytest.raises(Exception, match="before_delete"):
+                compact_lsh_state(
+                    spark, state, target_bytes=1 << 30, min_files=1, slack=1
+                )
+        if k == 7:
             report = compact_lsh_state(
                 spark, state, target_bytes=1 << 30, min_files=1, slack=1
             )
             before, after = report["bands.parquet"]
             assert after <= before
-        if k in (2, 5, 8):
-            # kill/restart: park the bands table as a compaction crashed
-            # between its two renames; the data is intact inside
-            # .compact_old and the NEXT ingest must restore it losslessly
-            tbl = os.path.join(state, "bands.parquet")
-            os.rename(tbl, tbl + ".compact_old")
     exact = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in all_queries()["dedup_near_jaccard"](spark, sf_dir).collect()
     }
     assert got == exact
+    assert incremental_lsh_ingest(spark, docs, state).count() == 0

@@ -408,54 +408,82 @@ import pytest as _pytest
 
 
 @_pytest.mark.parametrize(
-    ("live", "old", "tmp", "want_live_from"),
+    ("op", "boundary"),
     [
-        (True, False, False, "live"),   # healthy — no-op
-        (True, False, True, "live"),    # crash before first rename
-        (False, True, False, "old"),    # crash between the two renames
-        (False, True, True, "old"),     # same, rewrite output also present
-        (True, True, False, "live"),    # crash after swap, before cleanup
-        (True, True, True, "live"),     # pathological pile-up
+        ("append", "before_rename"),   # a batch's files moved in, no rename
+        ("append", "after_commit"),
+        ("replace", "before_rename"),  # a compaction's new files moved in
+        ("replace", "before_delete"),  # committed, old files still on disk
+        ("replace", "after_commit"),
+        ("rewrite", "before_rename"),  # a listed name mapped again
+        ("rewrite", "after_commit"),
     ],
 )
-def test_recover_compact_swap_state_machine(
-    tmp_path, live, old, tmp, want_live_from
+def test_state_commit_recovers_at_each_boundary(
+    tmp_path, state_crash, op, boundary
 ):
-    """Exhaustive pin of the compaction crash-recovery transitions: for
-    every reachable (live, .compact_old, .compact_tmp) presence combo,
-    recovery must end with exactly the right data live and both scratch
-    dirs gone. Pure-filesystem (no Spark) — the marker files tell which
-    directory's contents survived."""
+    """Exhaustive pin of the state commit's crash states
+    (filemap_spark/state.py), pure filesystem: a table holds two
+    committed files; a commit adds a third (append), replaces both with
+    one (replace, a compaction's or an upsert's commit) or maps a listed
+    name again (rewrite, a map stage's), and dies at `boundary`. Opening
+    the root again must leave exactly the last commit's files, on disk
+    and in the manifest — the old set before the manifest rename, the new
+    one after it — with nothing left in staging."""
     import os
 
-    from filemap_spark.operators.text import _recover_compact_swap
+    from filemap_spark import state
 
-    path = str(tmp_path / "table.parquet")
-    for present, name, marker in (
-        (live, path, "live"),
-        (old, path + ".compact_old", "old"),
-        (tmp, path + ".compact_tmp", "tmp"),
-    ):
-        if present:
-            os.makedirs(name)
-            open(os.path.join(name, f"{marker}.marker"), "w").close()
+    root = str(tmp_path / "root")
+    table = os.path.join(root, "t.parquet")
 
-    _recover_compact_swap(path)
+    def put(txn, name, body):
+        src = os.path.join(txn.staging(), name)
+        os.makedirs(os.path.dirname(src))
+        with open(src, "w") as f:
+            f.write(body)
+        txn.add(src, table)
 
-    assert os.path.isdir(path)
-    assert os.listdir(path) == [f"{want_live_from}.marker"]
-    assert not os.path.exists(path + ".compact_old")
-    assert not os.path.exists(path + ".compact_tmp")
+    with state.transaction(root, ("t.parquet",)) as txn:
+        put(txn, "a", "a")
+        put(txn, "b", "b")
+    old = {"a": "a", "b": "b"}
+    name, body = {"append": ("c", "c"), "replace": ("c", "ab"), "rewrite": ("a", "A")}[op]
+    new = {} if op == "replace" else dict(old)
+    new[name] = body
+
+    state_crash(boundary)
+    with _pytest.raises(Exception, match=boundary):
+        with state.transaction(root, ("t.parquet",)) as txn:
+            if op == "replace":
+                txn.drop(table)
+            put(txn, name, body)
+
+    txn = state.Transaction(root, ("t.parquet",))
+    want = old if boundary == "before_rename" else new
+    assert txn.files(table) == sorted(want)
+    on_disk = {}
+    for n in os.listdir(table):
+        with open(os.path.join(table, n)) as f:
+            on_disk[n] = f.read()
+    assert on_disk == want
+    assert not os.path.exists(os.path.join(root, state.STAGING))
 
 
-def test_compact_lsh_state_preserves_ingest_semantics(spark, sf_dir, tmp_path):
+def test_compact_lsh_state_preserves_ingest_semantics(
+    spark, sf_dir, tmp_path, state_crash
+):
     """State compaction (round 10): after several batch appends each
     state table holds one file set per batch; compacting must shrink
     file counts without changing ANY future ingest's behavior — same
-    delta pairs as an uncompacted twin state, re-ingest still a no-op."""
+    delta pairs as an uncompacted twin state, re-ingest still a no-op.
+    Both crash states of the compaction's commit are visited on the way:
+    new files moved in without the manifest rename, and a committed
+    compaction whose old files were not yet deleted."""
     import os
 
     from filemap_spark.operators.text import (
+        _LSH_STATE_TABLES,
         compact_lsh_state,
         incremental_lsh_ingest,
     )
@@ -483,20 +511,27 @@ def test_compact_lsh_state_preserves_ingest_semantics(spark, sf_dir, tmp_path):
         spark, s_compact, target_bytes=1 << 30, min_files=10_000
     )
     assert untouched["bands.parquet"] == (before, before)
-    report = compact_lsh_state(
-        spark, s_compact, target_bytes=1 << 30, min_files=1, slack=1
-    )
-    assert report["bands.parquet"][1] == 1  # tiny state -> single file
-    assert n_files(s_compact, "bands.parquet") == 1
-    assert not os.path.exists(
-        os.path.join(s_compact, "bands.parquet.compact_tmp")
-    )
-    # crash recovery: simulate dying between the two swap renames (live
-    # dir gone, data stranded in .compact_old) — the next ingest must
-    # HEAL the state, not mistake it for fresh
-    ing = os.path.join(s_compact, "ingested.parquet")
-    os.rename(ing, ing + ".compact_old")
-    assert not os.path.exists(ing)
+
+    def compact():
+        return compact_lsh_state(
+            spark, s_compact, target_bytes=1 << 30, min_files=1, slack=1
+        )
+
+    # the compacted files are moved in, and the rename never happens
+    state_crash("before_rename")
+    with _pytest.raises(Exception, match="before_rename"):
+        compact()
+    assert n_files(s_compact, "bands.parquet") == before + 1
+    # the rerun drops them, commits its own, and dies before deleting
+    # the old files
+    state_crash("before_delete")
+    with _pytest.raises(Exception, match="before_delete"):
+        compact()
+    assert n_files(s_compact, "bands.parquet") == before + 1
+    # the next open deletes the old files: each table is one file
+    report = compact()
+    assert report == {t: (1, 1) for t in _LSH_STATE_TABLES}
+    assert n_files(s_compact, "bands.parquet") == 1  # tiny state -> single file
 
     # the third batch behaves identically on compacted vs plain state
     def pairs(state):

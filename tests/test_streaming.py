@@ -410,6 +410,48 @@ def test_scd1_upsert_stream_converges_to_batch(spark, sf_dir, tmp_path):
     assert again == expect
 
 
+@pytest.mark.parametrize("crash", ["before_rename", "before_delete"])
+def test_scd1_upsert_survives_a_crash_in_its_replace(
+    spark, sf_dir, tmp_path, state_crash, crash
+):
+    """upsert_latest_wins commits its rewrite by replace: a crash after
+    the merged files are moved in but before the manifest rename leaves
+    the previous table, and one after the rename but before the old files
+    are deleted leaves the new one. Either way the next reader sees
+    exactly one committed table, and a replay of the batch converges to
+    latest-per-user over all events."""
+    from pyspark.sql.window import Window
+
+    from filemap_spark import state
+    from filemap_spark.io import load_table
+    from filemap_spark.operators.streaming import upsert_latest_wins
+
+    ev = load_table(spark, sf_dir, "events").withColumn("ts_us", F.unix_micros("ts"))
+    cut = F.col("event_id") % 2 == 0
+    table_dir = str(tmp_path / "state")
+    w = Window.partitionBy("user_id").orderBy(F.desc("ts_us"), F.desc("event_id"))
+    expect = sorted(
+        (r["user_id"], r["event_id"])
+        for r in ev.withColumn("rn", F.row_number().over(w)).where("rn = 1").collect()
+    )
+
+    def rows():
+        state.Transaction(table_dir)  # a reader opens the root first
+        return sorted(
+            (r["user_id"], r["event_id"]) for r in spark.read.parquet(table_dir).collect()
+        )
+
+    upsert_latest_wins(spark, table_dir, ev.where(cut))
+    first = rows()
+    assert first != expect
+    state_crash(crash)
+    with pytest.raises(Exception, match=crash):
+        upsert_latest_wins(spark, table_dir, ev.where(~cut))
+    assert rows() == (first if crash == "before_rename" else expect)
+    upsert_latest_wins(spark, table_dir, ev.where(~cut))  # the replay
+    assert rows() == expect
+
+
 def test_stream_stream_join_equals_batch(spark, sf_dir):
     """stream_stream_join's true two-unbounded-sides form: both sides
     watermarked, the same user-key + 30-minute range condition, append
