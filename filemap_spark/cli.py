@@ -21,45 +21,62 @@ over directories of text files), re-expressed on Spark.
         # 13-gram with the benchmark corpus (text_contamination_ngram)
 
 Semantics preserved from the reference:
-- dataset = a directory (or glob) of text files; `.gz` handled transparently
-  by Spark's text source, like filemap's transparent decompression;
-- map = a shell pipeline, lines in → lines out. The `map`/`mapreduce`
-  verbs fork it once per partition (`--partitions` sets how many); a
-  `pipeline` map stage forks it once per input file, like filemap;
+- dataset = a local directory (or glob, `{a,b}` alternatives included) of
+  text files, hidden names skipped; `.gz`, `.bz2` and `.deflate` read
+  decompressed, like filemap's transparent decompression. The stage's
+  tasks open the files themselves, so a path must be local (or a shared
+  POSIX mount): another file system's URI, a nested directory, two files
+  that would share an output name and a `.lz4`/`.snappy`/`.zst` input
+  raise before any output is touched;
+- map = a shell pipeline, lines in → lines out, forked once per input file
+  into a same-named output (less its codec extension), like filemap. One
+  job packs the files to map into at most `defaultParallelism` tasks, and
+  each task streams each file it holds through its own `sh -c CMD` fork;
 - reduce = shuffle records by their leading whitespace-delimited field into
   hash buckets, then one shell pipeline per bucket;
-- memoization: with `--memo`, a run whose (inputs, commands) fingerprint
-  already produced OUTPUT is skipped — filemap's make-like rule. The
-  fingerprint covers input file names/sizes/mtimes, both command
-  strings and the reduce's bucket count.
-- pipelines: the `pipeline` verb chains ANY number of --cmd / --reduce
-  stages in the order given on the command line (filemap's multi-stage
-  dataset DAG). Each stage materializes its own dataset directory
-  (OUTPUT/stage00, stage01, ... and OUTPUT/final). A map stage holds one
-  output file per input file, named after it, and a manifest of the
-  (size, mtime) each output was mapped from; with `--memo` a re-run maps
-  only the new or changed files and drops the outputs of deleted ones. A
-  reduce stage needs every key, so it carries one fingerprint (all of its
-  input files + command) and reruns whole. Either way a stage with nothing
-  to do writes nothing, so make-semantics cascade downstream exactly like
-  the reference's cached-dataset chain.
-- incremental: with `--stream`, the input is consumed through a
-  Structured-Streaming file source with `trigger(availableNow=True)` —
-  re-running after new files appear processes ONLY the new files
-  (checkpoint kept inside OUTPUT/_checkpoint), filemap's incremental model.
+- a command that exits with a status above 1 fails its stage and commits
+  nothing (1 passes: it is grep's "no lines selected");
+- stages: every verb runs the same stage kernel. `map IN OUT` is one map
+  stage whose output dir is OUT; `mapreduce --memo` maps into the hidden
+  OUT/_map and reduces into OUT, while without `--memo` the map's lines
+  stream straight into the reduce (no OUT/_map); `pipeline` chains ANY
+  number of --cmd / --reduce stages in command-line order (filemap's
+  multi-stage dataset DAG) through OUTPUT/stage00, stage01, ... and
+  OUTPUT/final; `map --stream` maps into OUT/data. Each stage dir is a
+  state root (filemap_spark/state.py): its outputs are staged under
+  _staging/ and committed by one rename of its manifest, and opening it
+  deletes any file the manifest does not list;
+- memoization (make's rule): a map stage's manifest records the command
+  and the (size, mtime) each output was mapped from, so with `--memo` a
+  re-run maps only the new or changed files and drops the outputs of
+  deleted ones. A reduce stage needs every key, so it carries one
+  fingerprint (all of its input files, its command and bucket count) and
+  reruns whole. Either way a stage with nothing to do writes nothing, so
+  invalidation cascades downstream exactly like the reference's
+  cached-dataset chain;
+- incremental: `map --stream` is the memoized map, so a re-run after new
+  files appear maps ONLY the new (or changed) files, filemap's incremental
+  model.
 """
 
 from __future__ import annotations
 
 import argparse
+import bz2
+import contextlib
+import gzip
 import hashlib
-import json
 import os
+import re
+import subprocess
 import sys
+import threading
+import urllib.parse
+import zlib
 from functools import partial
-from typing import NamedTuple
+from typing import Iterable, Iterator, NamedTuple
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from filemap_spark import state
@@ -81,80 +98,235 @@ def _fingerprint(input_path: str, cmds: list[str]) -> str:
     return h.hexdigest()
 
 
-# Hadoop's text source picks a decompression codec by file extension; a
-# map output is plain text, so its name drops the extension
-_CODEC_EXTS = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst")
+# the compression extensions a map stage reads decompressed (a map output
+# is plain text, so its name drops the extension), and Hadoop codecs'
+# extensions it refuses: their block formats have no stdlib reader
+_CODEC_EXTS = (".gz", ".bz2", ".deflate")
+_UNREADABLE = (".lz4", ".snappy", ".zst")
+
+# the exit statuses a shell stage accepts: 1 is grep's "no lines selected"
+_PASSING = (0, 1)
+
+_CHUNK = 1 << 20
+_BOM = b"\xef\xbb\xbf"
+_URI = re.compile(r"([A-Za-z][\w+.-]*):/")
 
 
 def _memo_hit(output: str, fp: str) -> bool:
     return state.read_manifest(output).get("fingerprint") == fp
 
 
-def _write_memo(output: str, fp: str) -> None:
-    marker = os.path.join(output, state.MANIFEST)
-    with open(marker, "w") as f:
-        json.dump({"fingerprint": fp}, f)
+def _local(path: str) -> str:
+    """PATH as a local path (a `file:` URI's path). Any other URI scheme
+    raises: a shell stage's tasks open their inputs and write their
+    outputs with POSIX calls, on a path every executor shares."""
+    uri = _URI.match(path)
+    if uri and uri.group(1).lower() != "file":
+        raise ValueError(
+            f"{path}: the shell stages read and write local (or shared "
+            f"POSIX) paths, not {uri.group(1)}: URIs"
+        )
+    return urllib.parse.urlparse(path).path if uri else path
 
 
-def _shell(cmd: str) -> str:
-    # RDD.pipe shlex-tokenizes and execs without a shell; wrap so pipes,
-    # redirects, and quoting behave exactly as in the reference.
-    return "sh -c " + _sq(cmd)
+def _fork(cmd: str, data: Iterable[bytes], what: str, out=subprocess.PIPE) -> Iterator[bytes]:
+    """Fork `sh -c CMD` once, feed it DATA (`\\n`-terminated lines, in
+    chunks) on stdin from a thread, and yield its output lines without
+    their `\\n`; given OUT, a file descriptor, the command writes there
+    and nothing is yielded. A status outside `_PASSING` raises, naming
+    WHAT (a file or a bucket)."""
+    failed: list[Exception] = []
+    with subprocess.Popen(["sh", "-c", cmd], stdin=subprocess.PIPE, stdout=out) as proc:
+
+        def feed() -> None:
+            try:
+                # a command may stop reading early (`head`)
+                with contextlib.suppress(BrokenPipeError), proc.stdin:
+                    for chunk in data:
+                        proc.stdin.write(chunk)
+            except Exception as e:  # the input failed: so does the stage
+                failed.append(e)
+
+        feeder = threading.Thread(target=feed, daemon=True)
+        feeder.start()
+        for line in proc.stdout or ():
+            yield line.rstrip(b"\n")
+        feeder.join()
+    if failed:
+        raise failed[0]
+    if proc.returncode not in _PASSING:
+        raise RuntimeError(f"{what}: sh -c {cmd!r} exited with status {proc.returncode}")
 
 
-def _sq(s: str) -> str:
-    return "'" + s.replace("'", "'\\''") + "'"
+def _chunks(path: str) -> Iterator[bytes]:
+    """PATH's bytes, decompressed by its extension, in chunks."""
+    ext = os.path.splitext(path)[1]
+    if ext == ".deflate":  # Hadoop's DefaultCodec: one zlib stream
+        z = zlib.decompressobj()
+        with open(path, "rb") as f:
+            yield from map(z.decompress, iter(partial(f.read, _CHUNK), b""))
+        yield z.flush()
+        return
+    with {".gz": gzip.open, ".bz2": bz2.open}.get(ext, open)(path, "rb") as f:
+        yield from iter(partial(f.read, _CHUNK), b"")
 
 
-def _pipe_stages(
-    spark: SparkSession,
-    input_path: str,
-    output: str,
-    stages: list[tuple[str, str]],
-    buckets: int,
-    partitions: int | None = None,
-) -> None:
-    """Read INPUT's lines, run the (kind, cmd) stages over them in ONE
-    job and write the result as a text dataset.
-    `map` pipes every partition's lines through the shell command;
-    `reduce` first shuffles lines into hash buckets by their leading
-    whitespace-delimited field, then pipes each bucket."""
-    lines = spark.read.text(input_path).rdd.map(lambda r: r[0])
-    if partitions:
-        lines = lines.repartition(partitions)
-    for kind, cmd in stages:
-        if kind == "reduce":
-            keyed = lines.map(lambda line: (line.split(" ", 1)[0], line))
-            lines = keyed.partitionBy(buckets).values()
-        lines = lines.pipe(_shell(cmd))
-    # Explicit schema: toDF() infers from data and raises on an EMPTY rdd
-    # (a map command emitting no lines, e.g. grep with no matches) — an
-    # empty pipeline must still write an empty output dataset.
-    out_df = spark.createDataFrame(lines.map(lambda line: Row(value=line)), "value string")
-    out_df.write.mode("overwrite").text(output)
+def _lines(path: str) -> Iterator[bytes]:
+    """PATH's lines in chunks of whole `\\n`-terminated lines, split as
+    Hadoop's line reader splits them: at `\\n`, `\\r\\n` or `\\r`, with a
+    leading UTF-8 byte-order mark skipped. A last line without a
+    terminator gets one."""
+    tail, last, head = b"", b"\n", True
+    for chunk in _chunks(path):
+        if head and chunk:
+            chunk, head = chunk.removeprefix(_BOM), False
+        chunk = tail + chunk
+        tail = b"\r" if chunk.endswith(b"\r") else b""  # may start a `\r\n`
+        chunk = chunk[: len(chunk) - len(tail)].replace(b"\r\n", b"\n").replace(b"\r", b"\n")
+        if chunk:
+            last = chunk[-1:]
+            yield chunk
+    if tail or last != b"\n":
+        yield b"\n"
+
+
+def _packed(sc, todo: list[tuple[str, str]]):
+    """TODO's (input path, output name) files as ONE RDD of at most
+    `defaultParallelism` lists of them, one list a task, balanced by size."""
+    n = max(1, min(len(todo), sc.defaultParallelism))
+    bins: list[list[tuple[str, str]]] = [[] for _ in range(n)]
+    load = [0] * n
+    for size, path, name in sorted(((os.path.getsize(p), p, nm) for p, nm in todo), reverse=True):
+        i = load.index(min(load))
+        bins[i].append((path, name))
+        load[i] += size
+    return sc.parallelize(bins, n)
+
+
+def _map_task(cmd: str, staged: str, files: list[tuple[str, str]]) -> None:
+    """Fork CMD once per (input path, output name) of FILES, streaming the
+    file in and its output straight into STAGED/name; a last output line
+    without `\\n` gets one."""
+    os.makedirs(staged, exist_ok=True)
+    for path, name in files:
+        fd = os.open(os.path.join(staged, name), os.O_RDWR | os.O_CREAT | os.O_TRUNC, 0o666)
+        try:
+            for _ in _fork(cmd, _lines(path), name, out=fd):
+                pass  # the command writes fd itself
+            end = os.fstat(fd).st_size
+            if end and os.pread(fd, 1, end - 1) != b"\n":
+                os.pwrite(fd, b"\n", end)
+        finally:
+            os.close(fd)
+
+
+def _map_lines(cmd: str, files: list[tuple[str, str]]) -> Iterator[str]:
+    """The output lines of CMD forked once per (input path, output name)
+    of FILES, decoded with undecodable bytes kept (as surrogates)."""
+    for path, name in files:
+        for line in _fork(cmd, _lines(path), name):
+            yield line.decode("utf-8", "surrogateescape")
+
+
+def _map_files(sc, txn: state.Transaction, cmd: str, todo: list[tuple[str, str]]) -> None:
+    """Map TODO's (input path, output name) files in ONE job of at most
+    `defaultParallelism` tasks (`_packed`), each forking CMD once per file
+    it holds into the stage's staging dir, then add the outputs to the
+    stage. A file streams through its fork, so none is held in memory
+    whole. The tasks open the inputs and write staging themselves, so
+    executors need the paths the driver sees."""
+    staged = txn.staging()
+    _packed(sc, todo).foreach(partial(_map_task, cmd, staged))
+    for _, name in todo:
+        txn.add(os.path.join(staged, name), txn.root, name)
+
+
+def _reduce(lines, txn: state.Transaction, cmd: str, buckets: int) -> None:
+    """Shuffle LINES (an RDD of str) into BUCKETS hash buckets by their
+    leading whitespace-delimited field, fork CMD once per bucket, and
+    replace the stage's part files with the non-empty outputs. Their
+    names carry the run's staging id, so a crashed run's parts never
+    share a committed name, and `part-NNNNN` keeps the bucket index."""
+    keyed = lines.map(lambda line: (line.split(" ", 1)[0], line))
+    staged = txn.staging()
+    keyed.partitionBy(buckets).values().mapPartitionsWithIndex(
+        lambda i, it: _fork(
+            cmd, (line.encode("utf-8", "surrogateescape") + b"\n" for line in it), f"bucket {i}"
+        )
+    ).saveAsTextFile(staged)
+    txn.drop(txn.root)
+    run = os.path.basename(staged)
+    for name in sorted(os.listdir(staged)):
+        part = os.path.join(staged, name)
+        if name.startswith("part-") and os.path.getsize(part):
+            txn.add(part, txn.root, f"{name}-{run}")
+
+
+def _commit(txn: state.Transaction) -> None:
+    txn.commit()
+    # Hadoop's marker of a completed output
+    open(os.path.join(txn.root, "_SUCCESS"), "w").close()
+
+
+def _braces(pattern: str) -> list[str]:
+    """PATTERN with Hadoop glob's `{a,b}` alternatives expanded (Python's
+    glob has none); an unclosed `{` is literal."""
+    depth = 0
+    for i, c in enumerate(pattern):
+        if c == "{":
+            if not depth:
+                brace, last, parts = i, i + 1, []
+            depth += 1
+        elif c == "," and depth == 1:
+            parts.append(pattern[last:i])
+            last = i + 1
+        elif c == "}" and depth:
+            depth -= 1
+            if not depth:
+                parts.append(pattern[last:i])
+                head, rest = pattern[:brace], pattern[i + 1 :]
+                return [x for p in parts for x in _braces(head + p + rest)]
+    return [pattern]
 
 
 def _input_files(input_path: str) -> dict[str, str]:
-    """Output name → absolute path of every file the text source reads
-    for INPUT (a directory, a file or a glob): each matched file and the
-    files directly inside each matched directory, hidden names skipped.
-    The output name is the file's own, less a compression extension."""
+    """Output name → absolute path of every file a map stage reads for
+    INPUT (a local directory, file or glob, Hadoop's `{a,b}` alternatives
+    included): each matched file and the files directly inside each
+    matched directory, hidden names skipped. The output name is the
+    file's own, less a compression extension. What the stage cannot map
+    file by file raises here, before any output is touched: no match, a
+    nested directory, two files that would share an output name, or a
+    codec with no stdlib reader."""
     import glob as globmod
 
-    roots = sorted(globmod.glob(input_path)) or [input_path]
+    pattern = _local(input_path)
+    roots = sorted({m for p in _braces(pattern) for m in globmod.glob(p)}) or [pattern]
     if not any(os.path.exists(r) for r in roots):
         raise FileNotFoundError(input_path)
     files: dict[str, str] = {}
     for root in roots:
-        if root != input_path and _hidden(os.path.basename(root)):
+        if root != pattern and _hidden(os.path.basename(root)):
             continue  # a glob match the text source skips
         paths = (
             [os.path.join(root, n) for n in os.listdir(root) if not _hidden(n)]
             if os.path.isdir(root)
             else [root]
         )
-        for path in filter(os.path.isfile, paths):
+        for path in paths:
+            if os.path.isdir(path):
+                raise ValueError(
+                    f"{path}: a map stage reads the files directly inside its "
+                    f"input dirs, not nested dirs; name those with a glob"
+                )
+            if not os.path.isfile(path):
+                continue
             name, ext = os.path.splitext(os.path.basename(path))
+            if ext in _UNREADABLE:
+                raise ValueError(
+                    f"{path}: a map stage reads plain, .gz, .bz2 and .deflate "
+                    f"files; decompress {ext} inputs first"
+                )
             if ext not in _CODEC_EXTS:
                 name += ext
             if name in files:
@@ -165,25 +337,39 @@ def _input_files(input_path: str) -> dict[str, str]:
     return files
 
 
-class _MapPlan(NamedTuple):
-    # the opened stage dir, with the outputs of deleted inputs dropped and
+class _Plan(NamedTuple):
+    # the opened stage dir, with what the stage drops already dropped and
     # the manifest to commit as its meta
     txn: state.Transaction
-    todo: list[tuple[str, str]]  # (input path, output name) to map
+    todo: list[tuple[str, str]]  # a map's (input path, output name) to map
 
 
-def _map_plan(input_path: str, output: str, cmd: str, memo: bool) -> _MapPlan | None:
-    """A map stage's per-file memo. Opens OUTPUT as a state root (which
-    deletes the data files its manifest does not list), then keeps each
-    output whose input file still has the (size, mtime_ns) it was mapped
-    from. Returns None when every output is current (a full hit, which
-    writes nothing), else what the stage must map and drop. Every file is
-    mapped when `memo` is off or the command changed."""
+def _plan(
+    kind: str, input_path: str, output: str, cmd: str, buckets: int, memo: bool
+) -> _Plan | None:
+    """A stage's memo. Opens OUTPUT as a state root, which deletes the
+    data files its manifest does not list (what a crashed run moved in),
+    also when the stage turns out to be up to date. Returns None when it
+    is (which writes nothing), else what the stage must do.
+
+    A reduce needs every key: it is up to date when the fingerprint of
+    all its input files, its command and its bucket count matches the
+    manifest's. A map keeps each output whose input file still has the
+    (size, mtime_ns) it was mapped from, drops the outputs of deleted
+    inputs and maps the rest. Everything reruns when `memo` is off or
+    the command changed."""
+    if kind == "reduce":
+        txn = state.Transaction(output)
+        fp = _fingerprint(input_path, [f"reduce\x00{cmd}\x00{buckets}"])
+        if memo and txn.meta.get("fingerprint") == fp:
+            return None
+        txn.meta = {"fingerprint": fp}
+        return _Plan(txn, [])
+    files = _input_files(input_path)
     txn = state.Transaction(output)
     old_inputs, listed = txn.meta.get("inputs", {}), set(txn.files(output))
     command = f"map\x00{cmd}"
     reuse = memo and txn.meta.get("command") == command
-    files = _input_files(input_path)
     inputs: dict[str, dict] = {}
     todo: list[tuple[str, str]] = []
     for name, path in sorted(files.items()):
@@ -197,37 +383,7 @@ def _map_plan(input_path: str, output: str, cmd: str, memo: bool) -> _MapPlan | 
     for name in gone:
         txn.drop(output, name)
     txn.meta = {"command": command, "inputs": inputs}
-    return _MapPlan(txn, todo)
-
-
-def _one_partition(sc, path: str):
-    """The lines of one file as ONE partition — an empty file too: Spark
-    drops its empty split, but it still gets its own fork and output."""
-    from pyspark.rdd import RDD
-
-    lines = sc.textFile(path, 1).coalesce(1)
-    if lines.getNumPartitions():
-        return lines
-    empty = sc._jsc.parallelize(sc._jvm.java.util.ArrayList(), 1)
-    return RDD(empty, sc, lines._jrdd_deserializer)
-
-
-def run_map(
-    spark: SparkSession,
-    input_path: str,
-    output: str,
-    cmd: str,
-    reduce_cmd: str | None = None,
-    buckets: int = 32,
-    partitions: int | None = None,
-) -> int:
-    """Execute map [+ reduce] shell stages as ONE job (no intermediate
-    dataset); returns output line count."""
-    stages = [("map", cmd)]
-    if reduce_cmd is not None:
-        stages.append(("reduce", reduce_cmd))
-    _pipe_stages(spark, input_path, output, stages, buckets, partitions)
-    return spark.read.text(output).count()
+    return _Plan(txn, todo)
 
 
 def run_stage(
@@ -237,27 +393,69 @@ def run_stage(
     kind: str,
     cmd: str,
     buckets: int = 32,
-    plan: _MapPlan | None = None,
+    plan: _Plan | None = None,
 ) -> None:
-    """One pipeline stage. A reduce stage rewrites OUTPUT whole
-    (`_pipe_stages`). A map stage carries out `plan` (see `_map_plan`; by
-    default every input file is mapped) as one state commit: ONE job maps
-    the files still to map, each in its own task (a union of per-file
-    single-partition RDDs, never a packed scan), into staging; each task's
-    output goes in under its file's name, the outputs of deleted inputs
-    go, and the stage's manifest is committed by one rename."""
-    if kind != "map":
-        return _pipe_stages(spark, input_path, output, [(kind, cmd)], buckets)
-    plan = plan or _map_plan(input_path, output, cmd, False)
-    sc = spark.sparkContext
-    if plan.todo:
-        tmp = plan.txn.staging()
-        per_file = sc.union([_one_partition(sc, p) for p, _ in plan.todo])
-        per_file.pipe(_shell(cmd)).saveAsTextFile(tmp)
-        for i, (_, name) in enumerate(plan.todo):
-            plan.txn.add(os.path.join(tmp, f"part-{i:05d}"), output, name)
-    open(os.path.join(output, "_SUCCESS"), "w").close()
-    plan.txn.commit()
+    """One shell stage, carried out as `plan` says (see `_plan`; by
+    default everything reruns) and committed to its dir OUTPUT by one
+    state commit. A map stage forks CMD once per input file still to map
+    (`_map_files`); a reduce stage replaces its part files
+    (`_reduce`)."""
+    plan = plan or _plan(kind, input_path, output, cmd, buckets, memo=False)
+    if kind == "reduce":
+        lines = spark.read.text(input_path).rdd.map(lambda r: r[0])
+        _reduce(lines, plan.txn, cmd, buckets)
+    elif plan.todo:
+        _map_files(spark.sparkContext, plan.txn, cmd, plan.todo)
+    _commit(plan.txn)
+
+
+def _run_stages(
+    spark: SparkSession,
+    input_path: str,
+    stages: list[tuple[str, str, str]],
+    buckets: int,
+    memo: bool,
+) -> int:
+    """Run (kind, cmd, dir) stages in order, each reading the dir of the
+    one before (the first reads INPUT), and return the last dir's line
+    count. A stage that is up to date is skipped. Every path is checked
+    to be local before any stage dir is opened."""
+    cur = _local(input_path)
+    stages = [(kind, cmd, _local(d)) for kind, cmd, d in stages]
+    for i, (kind, cmd, stage_out) in enumerate(stages):
+        plan = _plan(kind, cur, stage_out, cmd, buckets, memo)
+        if plan is None:
+            print(f"memo hit: stage {i} ({kind}) up to date", file=sys.stderr)
+        else:
+            run_stage(spark, cur, stage_out, kind, cmd, buckets=buckets, plan=plan)
+        cur = stage_out
+    return spark.read.text(cur).count()
+
+
+def run_map(
+    spark: SparkSession,
+    input_path: str,
+    output: str,
+    cmd: str,
+    reduce_cmd: str | None = None,
+    buckets: int = 32,
+) -> int:
+    """The `map` / `mapreduce` verbs without `--memo`; returns the output
+    line count. `map` is one map stage with OUTPUT as its dir. A
+    `mapreduce` keeps no map output it would not reuse: the per-file
+    forks' lines stream straight into the reduce's exchange, in one job,
+    and OUTPUT carries no fingerprint, so a later `--memo` run reduces
+    again."""
+    if reduce_cmd is None:
+        return _run_stages(spark, input_path, [("map", cmd, output)], buckets, False)
+    files = _input_files(input_path)
+    txn = state.Transaction(_local(output))
+    txn.meta = {}
+    todo = [(path, name) for name, path in sorted(files.items())]
+    lines = _packed(spark.sparkContext, todo).flatMap(partial(_map_lines, cmd))
+    _reduce(lines, txn, reduce_cmd, buckets)
+    _commit(txn)
+    return spark.read.text(txn.root).count()
 
 
 def run_pipeline(
@@ -272,71 +470,34 @@ def run_pipeline(
     return the line count of the last one.
 
     Stage i reads stage i-1's directory (stage 0 reads INPUT) and writes
-    OUTPUT/stage{i:02d}; the last stage writes OUTPUT/final. A map stage
-    memoizes per input file (`_map_plan`): with `memo`, a run maps only
-    the files that are new or changed since the stage's manifest and
-    drops the outputs of deleted ones. The stage dir is a state root
-    (filemap_spark/state.py): its outputs are staged, moved in, and
-    committed by one rename of the manifest, and opening it deletes any
-    output the manifest does not list. A reduce stage needs every key, so
-    with `memo` it is skipped only when its whole (input files, command,
-    bucket count) fingerprint matches the marker in its directory. A
-    stage with nothing to do writes nothing, and because each fingerprint covers the
-    PREVIOUS stage's files, invalidation cascades downstream exactly like
-    make: touch one input file and only that file is re-mapped before the
-    reduce reruns; edit stage 2's command and stages 2..n rerun while 0..1
-    are reused."""
+    OUTPUT/stage{i:02d}; the last stage writes OUTPUT/final. Each stage
+    dir is a state root (filemap_spark/state.py). With `memo`, a map stage
+    maps only the files that are new or changed since its manifest and
+    drops the outputs of deleted ones, and a reduce stage is skipped when
+    its whole (input files, command, bucket count) fingerprint matches
+    its manifest's (`_plan`). A stage with nothing to do writes nothing,
+    and because each fingerprint covers the PREVIOUS stage's files,
+    invalidation cascades downstream exactly like make: touch one input
+    file and only that file is re-mapped before the reduce reruns; edit
+    stage 2's command and stages 2..n rerun while 0..1 are reused."""
     if not stages:
         raise ValueError("pipeline needs at least one --cmd/--reduce stage")
-    cur = input_path
-    for i, (kind, cmd) in enumerate(stages):
-        is_last = i == len(stages) - 1
-        stage_out = os.path.join(output, "final" if is_last else f"stage{i:02d}")
-        plan = fp = None
-        if kind == "map":
-            plan = _map_plan(cur, stage_out, cmd, memo)
-            hit = plan is None
-        else:
-            fp = _fingerprint(cur, [f"{kind}\x00{cmd}\x00{buckets}"])
-            hit = memo and _memo_hit(stage_out, fp)
-        if hit:
-            print(f"memo hit: stage {i} ({kind}) up to date", file=sys.stderr)
-        else:
-            run_stage(spark, cur, stage_out, kind, cmd, buckets=buckets, plan=plan)
-            if memo and fp is not None:
-                _write_memo(stage_out, fp)
-        cur = stage_out
-    return spark.read.text(cur).count()
+    dirs = [f"stage{i:02d}" for i in range(len(stages) - 1)] + ["final"]
+    roots = [
+        (kind, cmd, os.path.join(output, d)) for (kind, cmd), d in zip(stages, dirs)
+    ]
+    return _run_stages(spark, input_path, roots, buckets, memo)
 
 
 def run_map_stream(
     spark: SparkSession, input_path: str, output: str, cmd: str
 ) -> int:
-    """Incremental map over a directory: only files not yet recorded in the
-    checkpoint's file-source log are processed (availableNow drain). Each
-    micro-batch's lines commit to OUTPUT/data through the state module
-    under the batch id, so a batch replayed after a crash is written once."""
-    checkpoint = os.path.join(output, "_checkpoint")
-    data_dir = os.path.join(output, "data")
-    stream = spark.readStream.format("text").load(input_path)
-    piped = stream.select(F.col("value"))
-
-    def sink(batch_df, batch_id):
-        with state.transaction(data_dir, batch=batch_id) as txn:
-            if not txn.replay:
-                lines = batch_df.rdd.map(lambda r: r[0]).pipe(_shell(cmd))
-                rows = lines.map(lambda line: Row(value=line))
-                txn.append(spark.createDataFrame(rows, "value string"), data_dir, "text")
-
-    q = (
-        piped.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    committed = state.Transaction(data_dir).files(data_dir)
-    return spark.read.text(data_dir).count() if committed else 0
+    """Incremental map over a directory: the memoized map stage into
+    OUTPUT/data, so a run maps only the files that are new or changed
+    since the last one (and drops the outputs of deleted ones). Returns
+    the line count of OUTPUT/data."""
+    stages = [("map", cmd, os.path.join(output, "data"))]
+    return _run_stages(spark, input_path, stages, 32, memo=True)
 
 
 def run_query(
@@ -1024,7 +1185,6 @@ def main(argv: list[str] | None = None) -> int:
         if verb == "mapreduce":
             p.add_argument("--reduce", required=True, help="reduce shell pipeline")
             p.add_argument("--buckets", type=int, default=32)
-        p.add_argument("--partitions", type=int, default=None)
         p.add_argument("--memo", action="store_true")
         p.add_argument("--stream", action="store_true")
 
@@ -1334,27 +1494,18 @@ def main(argv: list[str] | None = None) -> int:
         return 0
     reduce_cmd = getattr(args, "reduce", None)
     buckets = getattr(args, "buckets", 32)
-    cmds = [args.cmd] + ([reduce_cmd, str(buckets)] if reduce_cmd else [])
-    fp = _fingerprint(args.input, cmds)
-    if args.memo and _memo_hit(args.output, fp):
-        print(f"memo hit: {args.output} up to date", file=sys.stderr)
-        return 0
     if args.stream:
         if reduce_cmd:
             raise SystemExit("--stream supports map-only pipelines")
         n = run_map_stream(spark, args.input, args.output, args.cmd)
+    elif args.memo:
+        stages = [("map", args.cmd, args.output)]
+        if reduce_cmd is not None:  # the map's outputs kept for new-files-only reruns
+            stages = [("map", args.cmd, os.path.join(args.output, "_map")),
+                      ("reduce", reduce_cmd, args.output)]
+        n = _run_stages(spark, args.input, stages, buckets, memo=True)
     else:
-        n = run_map(
-            spark,
-            args.input,
-            args.output,
-            args.cmd,
-            reduce_cmd=reduce_cmd,
-            buckets=buckets,
-            partitions=args.partitions,
-        )
-    if args.memo:
-        _write_memo(args.output, fp)
+        n = run_map(spark, args.input, args.output, args.cmd, reduce_cmd, buckets)
     print(f"{n} lines -> {args.output}", file=sys.stderr)
     return 0
 

@@ -4,6 +4,7 @@ and incremental (new-files-only) streaming runs."""
 
 from __future__ import annotations
 
+import gzip
 import json
 import os
 import shutil
@@ -14,7 +15,6 @@ from pyspark.sql import functions as F
 from filemap_spark.cli import (
     _fingerprint,
     _memo_hit,
-    _write_memo,
     main,
     run_map,
     run_map_stream,
@@ -64,7 +64,8 @@ def test_memo_fingerprint_tracks_inputs_and_commands(tmp_path):
     out = str(tmp_path / "out")
     os.makedirs(out, exist_ok=True)
     fp1 = _fingerprint(str(src), ["grep x"])
-    _write_memo(out, fp1)
+    with open(os.path.join(out, "_filemap_memo.json"), "w") as f:
+        json.dump({"fingerprint": fp1}, f)
     assert _memo_hit(out, fp1)
     # command change -> miss
     assert not _memo_hit(out, _fingerprint(str(src), ["grep y"]))
@@ -212,6 +213,7 @@ _WORDCOUNT = [
     ("map", "tr ' ' '\\n'"),
     ("reduce", "sort | uniq -c | awk '{print $2, $1}'"),
 ]
+_WORDCOUNT_CMDS = [cmd for _, cmd in _WORDCOUNT]
 
 
 def _stage_files(d: str) -> dict[str, bytes]:
@@ -339,8 +341,6 @@ def test_pipeline_upgrades_whole_stage_marker(spark, tmp_path):
     part files and a {"fingerprint": ...} marker) lists no per-file output:
     the next memoized run re-maps every file, drops the old parts and
     leaves every stage equal to a cold run."""
-    from filemap_spark.cli import run_stage
-
     src = tmp_path / "in"
     _write_lines(str(src / "a.txt"), ["a b a", "b a c"])
     _write_lines(str(src / "b.txt"), ["c a"])
@@ -348,17 +348,243 @@ def test_pipeline_upgrades_whole_stage_marker(spark, tmp_path):
     stage00 = os.path.join(out, "stage00")
     final = os.path.join(out, "final")
     (kind0, cmd0), (kind1, cmd1) = _WORDCOUNT
-    # the old layout: a packed map job and a whole-stage marker per stage
-    run_map(spark, src, stage00, cmd0, partitions=1)
-    _write_memo(stage00, _fingerprint(src, [f"{kind0}\x00{cmd0}"]))
-    run_stage(spark, stage00, final, kind1, cmd1, buckets=4)
-    _write_memo(final, _fingerprint(stage00, [f"{kind1}\x00{cmd1}"]))
+    # the old layout: a packed Spark write and a whole-stage marker per stage
+    for d, inp, kind, cmd, lines in (
+        (stage00, src, kind0, cmd0, "a b a b a c c a".split()),
+        (final, stage00, kind1, cmd1, ["a 4", "b 2", "c 2"]),
+    ):
+        spark.createDataFrame([(v,) for v in lines], "value string").coalesce(1).write.text(d)
+        with open(os.path.join(d, "_filemap_memo.json"), "w") as f:
+            json.dump({"fingerprint": _fingerprint(inp, [f"{kind}\x00{cmd}"])}, f)
     assert any(f.startswith("part-") for f in os.listdir(stage00))
+    assert any(f.startswith(".part-") for f in os.listdir(stage00))
 
     run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
     assert sorted(_stage_files(stage00)) == ["a.txt", "b.txt"]
     assert not any(f.startswith(".part-") for f in os.listdir(stage00))
     _assert_matches_cold(spark, src, out, _WORDCOUNT, tmp_path, "cold")
+
+
+def _map_stage_outputs(spark, files: dict[str, bytes], cmd: str, tmp_path):
+    """Write FILES into a fresh input dir, run one memoized `pipeline` map
+    stage with CMD over it and return the stage's outputs by name."""
+    src = tmp_path / "in"
+    src.mkdir()
+    for name, body in files.items():
+        (src / name).write_bytes(body)
+    out = str(tmp_path / "out")
+    run_pipeline(spark, str(src), out, [("map", cmd)], memo=True)
+    return _stage_files(os.path.join(out, "final"))
+
+
+@pytest.mark.parametrize(
+    "files, cmd, want",
+    [
+        (
+            {"g.txt.gz": gzip.compress(b"x\ny\n"), "h.txt": b"z\n"},
+            "cat",
+            {"g.txt": b"x\ny\n", "h.txt": b"z\n"},
+        ),
+        ({"_x.txt": b"a\n", ".x.txt": b"b\n", "y.txt": b"c\n"}, "cat", {"y.txt": b"c\n"}),
+        ({"a.txt": b"a\n", "a.txt.gz": gzip.compress(b"a\n")}, "cat", ValueError),
+        (
+            {"crlf.txt": b"a b\r\nc d\r\n", "cr.txt": b"p\rq\n", "nonl.txt": b"x y\nz"},
+            "cat",
+            {"crlf.txt": b"a b\nc d\n", "cr.txt": b"p\nq\n", "nonl.txt": b"x y\nz\n"},
+        ),
+        (
+            {"e.txt": b"", "f.txt": b"1\n2\n", "g.txt": b"3"},
+            "printf k",
+            {"e.txt": b"k\n", "f.txt": b"k\n", "g.txt": b"k\n"},
+        ),
+        ({"bom.txt": b"\xef\xbb\xbfa\nb\n"}, "cat", {"bom.txt": b"a\nb\n"}),
+    ],
+    ids=[
+        "gz_drops_codec_ext", "hidden_skipped", "name_collision", "line_ends", "fork_per_file",
+        "utf8_bom_skipped",
+    ],
+)
+def test_map_stage_file_parity(spark, tmp_path, files, cmd, want):
+    """What one file becomes in a map stage: a `.gz` input is read
+    decompressed into an output without the codec extension, hidden names
+    are skipped, two inputs that would share an output name raise, every
+    line reaches the command `\\n`-terminated whatever ended it in the
+    file (a leading UTF-8 byte-order mark skipped, as Hadoop's line reader
+    skips it), and every file (an empty one too) gets its own fork and
+    output, whose last line gets a `\\n` if the command left it without
+    one."""
+    if want is ValueError:
+        with pytest.raises(ValueError, match="would both map to a.txt"):
+            _map_stage_outputs(spark, files, cmd, tmp_path)
+    else:
+        assert _map_stage_outputs(spark, files, cmd, tmp_path) == want
+
+
+@pytest.mark.parametrize("kind", ["map", "reduce"])
+@pytest.mark.parametrize("bad, status", [("exit 3", 3), ("no_such_cmd_xyz", 127)])
+def test_failed_fork_fails_the_stage(spark, tmp_path, kind, bad, status):
+    """A command that exits with a status above 1 fails its stage, naming
+    the file (or bucket) and the status, and the stage commits nothing: a
+    memoized rerun does not take the failure for a result, a good command
+    then maps every file, and a later failure leaves that commit as it
+    is. (Status 1 passes: it is grep's "no lines selected".)"""
+    from filemap_spark import state
+
+    src = tmp_path / "in"
+    for i in range(5):
+        _write_lines(str(src / f"f{i}.txt"), [f"w{i} x"])
+    src, out = str(src), str(tmp_path / "out")
+    stage = os.path.join(out, "stage00" if kind == "map" else "final")
+    broken = [("map", bad), _WORDCOUNT[1]] if kind == "map" else [_WORDCOUNT[0], ("reduce", bad)]
+    what = r"f\d\.txt" if kind == "map" else r"bucket \d+"
+
+    for _ in range(2):  # the rerun fails again: nothing was memoized
+        with pytest.raises(Exception, match=rf"{what}: sh -c .* exited with status {status}"):
+            run_pipeline(spark, src, out, broken, buckets=4, memo=True)
+        assert state.read_manifest(stage).get("files", []) == []
+
+    assert run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True) == 6
+    assert sorted(_stage_files(os.path.join(out, "stage00"))) == [f"f{i}.txt" for i in range(5)]
+    committed = open(os.path.join(stage, state.MANIFEST), "rb").read()
+    with pytest.raises(Exception, match=f"exited with status {status}"):
+        run_pipeline(spark, src, out, broken, buckets=4, memo=True)
+    assert open(os.path.join(stage, state.MANIFEST), "rb").read() == committed
+    _assert_matches_cold(spark, src, out, _WORDCOUNT, tmp_path, "cold")
+
+
+def test_map_stage_packs_many_files_into_one_scan(spark, tmp_path):
+    """Three hundred tiny files go through one map stage as ONE job of at
+    most `defaultParallelism` tasks, each file still forked on its own
+    into its own output."""
+    from filemap_spark.cli import run_stage
+
+    src = tmp_path / "in"
+    src.mkdir()
+    n = 300
+    for i in range(n):
+        (src / f"f{i:03d}.txt").write_text(f"{i} w{i % 7}\n" if i % 50 else "")
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    sc.setJobGroup("many_files", "one map stage over many files")
+    try:
+        run_stage(spark, str(src), out, "map", "tr ' ' '\\n'; echo end")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("many_files")
+    assert len(jobs) == 1, jobs
+    tasks = sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(jobs[0]).stageIds)
+    assert tasks <= sc.defaultParallelism, tasks
+    assert _stage_files(out) == {
+        f"f{i:03d}.txt": (f"{i}\nw{i % 7}\n" if i % 50 else "").encode() + b"end\n"
+        for i in range(n)
+    }
+
+
+def test_map_lines_stream_in_chunks(monkeypatch, tmp_path):
+    """A map stage streams each file through its fork in chunks, never
+    whole: a `\\r\\n` split across two chunks still ends one line, and
+    every codec reads the same lines."""
+    import bz2
+    import zlib
+
+    from filemap_spark import cli
+
+    monkeypatch.setattr(cli, "_CHUNK", 3)
+    body = b"ab\r\ncd\r\r\nef\rgh"
+    want = b"ab\ncd\n\nef\ngh\n"
+    for name, data in (
+        ("p.txt", body),
+        ("g.txt.gz", gzip.compress(body[:7]) + gzip.compress(body[7:])),
+        ("b.txt.bz2", bz2.compress(body)),
+        ("d.txt.deflate", zlib.compress(body)),
+    ):
+        (tmp_path / name).write_bytes(data)
+        assert b"".join(cli._lines(str(tmp_path / name))) == want, name
+
+
+def test_map_reads_names_with_glob_metacharacters(spark, tmp_path):
+    """Input names that Hadoop would split at (`,`) or read as a glob
+    (`[]{}*?`) map like any other: the tasks open the files the driver
+    listed, and no path goes through Hadoop's path parsing."""
+    names = ["a,b.txt", "x[1].txt", "y{2}.txt", "z*.txt", "q?.txt"]
+    src = tmp_path / "in"
+    for i, name in enumerate(names):
+        _write_lines(str(src / name), [f"w{i} v"])
+    out = str(tmp_path / "out")
+    assert run_map(spark, str(src), out, "cat") == len(names)
+    assert _stage_files(out) == {name: f"w{i} v\n".encode() for i, name in enumerate(names)}
+    n = run_map(spark, str(src), str(tmp_path / "wc"), *_WORDCOUNT_CMDS, buckets=4)
+    assert n == len(names) + 1
+
+
+@pytest.mark.parametrize(
+    "layout, input_path, output, error",
+    [
+        ({}, "s3a://bucket/in", "out", "not s3a: URIs"),
+        ({"in/a.txt": b"a\n"}, "in", "hdfs://nn/out", "not hdfs: URIs"),
+        ({"in/a.txt": b"a\n", "in/sub/b.txt": b"b\n"}, "in", "out", "not nested dirs"),
+        ({"d1/part-0": b"a\n", "d2/part-0": b"b\n"}, "d*", "out", "would both map to part-0"),
+        ({"in/a.txt.lz4": b"\0"}, "in", "out", "decompress .lz4 inputs first"),
+        ({}, "missing", "out", "missing"),
+    ],
+    ids=["uri_input", "uri_output", "nested_dir", "collision_across_dirs", "lz4", "no_match"],
+)
+@pytest.mark.parametrize("verb", ["map", "mapreduce"])
+def test_map_refuses_inputs_it_cannot_map_per_file(
+    spark, tmp_path, monkeypatch, verb, layout, input_path, output, error
+):
+    """What a map stage cannot map file by file fails loudly, before any
+    output dir is made: another file system's URI (the tasks read and
+    write with POSIX calls), a nested dir, two files (in different dirs)
+    that would share an output name, and a codec with no stdlib reader."""
+    for rel, body in layout.items():
+        os.makedirs(tmp_path / os.path.dirname(rel), exist_ok=True)
+        (tmp_path / rel).write_bytes(body)
+    monkeypatch.chdir(tmp_path)
+    before = sorted(os.listdir(tmp_path))
+    reduce_cmd = _WORDCOUNT_CMDS[1] if verb == "mapreduce" else None
+    with pytest.raises((ValueError, FileNotFoundError), match=error):
+        run_map(spark, input_path, output, "cat", reduce_cmd)
+    with pytest.raises((ValueError, FileNotFoundError), match=error):
+        main([verb, input_path, output, "--cmd", "cat", "--memo"]
+             + (["--reduce", reduce_cmd] if reduce_cmd else []))
+    assert sorted(os.listdir(tmp_path)) == before
+
+
+def test_map_reads_brace_globs_and_file_uris(spark, tmp_path):
+    """An input glob takes Hadoop's `{a,b}` alternatives, and a `file:`
+    URI names a local path."""
+    for month in ("jan", "feb", "mar"):
+        _write_lines(str(tmp_path / "logs" / month / f"{month}.txt"), [month])
+    out = str(tmp_path / "out")
+    assert run_map(spark, str(tmp_path / "logs" / "{jan,feb}"), out, "cat") == 2
+    assert _stage_files(out) == {"jan.txt": b"jan\n", "feb.txt": b"feb\n"}
+    assert run_map(spark, f"file://{tmp_path}/logs/mar", f"file://{out}", "cat") == 1
+    assert _stage_files(out) == {"mar.txt": b"mar\n"}
+
+
+def test_mapreduce_without_memo_keeps_no_map_output(spark, tmp_path, capsys):
+    """`mapreduce` without `--memo` streams its map's lines straight into
+    the reduce and keeps no OUT/_map; with `--memo` the map's outputs stay
+    in OUT/_map, so an unchanged rerun is a hit for both stages."""
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["a b a", "b a c"])
+    _write_lines(str(src / "b.txt"), ["c a"])
+    out = str(tmp_path / "out")
+    args = ["mapreduce", str(src), out, "--cmd", _WORDCOUNT_CMDS[0],
+            "--reduce", _WORDCOUNT_CMDS[1], "--buckets", "4"]
+    want = {"a 4", "b 2", "c 2"}
+    assert main(args) == 0
+    assert not os.path.exists(os.path.join(out, "_map"))
+    assert {r["value"] for r in spark.read.text(out).collect()} == want
+    for _ in range(2):
+        assert main(args + ["--memo"]) == 0
+    assert sorted(_stage_files(os.path.join(out, "_map"))) == ["a.txt", "b.txt"]
+    assert {r["value"] for r in spark.read.text(out).collect()} == want
+    err = capsys.readouterr().err
+    assert "memo hit: stage 0 (map)" in err and "memo hit: stage 1 (reduce)" in err
 
 
 def test_pipeline_reduce_memo_keys_bucket_count(spark, tmp_path, capsys):
@@ -385,6 +611,60 @@ def test_pipeline_reduce_memo_keys_bucket_count(spark, tmp_path, capsys):
     assert "stage 1 (reduce) up to date" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("boundary", ["before_rename", "before_delete", "after_commit"])
+def test_pipeline_reduce_commit_survives_a_crash(spark, tmp_path, state_crash, boundary):
+    """A reduce commits its part files and its fingerprint with one
+    manifest rename. Whichever side of it a run dies on, the rerun leaves
+    `final` equal to a cold run, holding only the part files its manifest
+    lists."""
+    from filemap_spark import state
+
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), [" ".join(f"w{i % 9}" for i in range(40))])
+    _write_lines(str(src / "b.txt"), ["w1 w2 x"])
+    src, out = str(src), str(tmp_path / "out")
+    final = os.path.join(out, "final")
+    run_pipeline(spark, src, out, _WORDCOUNT, buckets=2, memo=True)
+    state_crash(boundary)
+    # the map stage is up to date; the reduce reruns for its bucket count
+    with pytest.raises(Exception, match=boundary):
+        run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
+    assert run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True) == 10
+    listed = state.read_manifest(final)["files"]
+    assert sorted(_stage_files(final)) == sorted(listed)
+    assert listed and all(f.startswith("part-") for f in listed)
+    _assert_matches_cold(spark, src, out, _WORDCOUNT, tmp_path, "cold")
+
+
+def test_pipeline_reduce_hit_drops_uncommitted_parts(spark, tmp_path, state_crash, capsys):
+    """A reduce that died before its manifest rename leaves part files the
+    manifest does not list. A rerun whose inputs match the last commit is
+    a memo hit, and it still deletes them, so the next stage never maps
+    them."""
+    from filemap_spark import state
+
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["a b a", "b a c"])
+    src, out = str(src), str(tmp_path / "out")
+    stage01 = os.path.join(out, "stage01")
+    stages = _WORDCOUNT + [("map", "cat")]
+    run_pipeline(spark, src, out, stages, buckets=4, memo=True)
+    state_crash("before_rename")
+    with pytest.raises(Exception, match="before_rename"):
+        run_pipeline(spark, src, out, stages, buckets=2, memo=True)
+    listed = state.read_manifest(stage01)["files"]
+    assert set(_stage_files(stage01)) > set(listed)  # the crashed run's parts
+
+    capsys.readouterr()
+    assert run_pipeline(spark, src, out, stages, buckets=4, memo=True) == 3
+    assert "stage 1 (reduce) up to date" in capsys.readouterr().err
+    assert sorted(_stage_files(stage01)) == listed
+    cold = str(tmp_path / "cold")
+    run_pipeline(spark, src, cold, stages, buckets=4, memo=True)
+    for d in ("stage01", "final"):
+        assert _dataset_bytes(os.path.join(out, d)) == _dataset_bytes(os.path.join(cold, d)), d
+
+
 def test_stream_processes_only_new_files(spark, tmp_path):
     src = tmp_path / "in"
     out = str(tmp_path / "out")
@@ -399,28 +679,16 @@ def test_stream_processes_only_new_files(spark, tmp_path):
     assert vals == ["one", "three", "two"]
 
 
-def test_stream_writes_each_batch_once(spark, tmp_path, monkeypatch, state_crash):
-    """`map --stream` commits each micro-batch's lines under its batch id:
-    a sink that dies after writing its lines, or after committing them,
-    is replayed by the next run, and the lines land once."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    real_text = DataFrameWriter.text
-
-    def write_then_die(self, *args, **kwargs):
-        monkeypatch.setattr(DataFrameWriter, "text", real_text)
-        real_text(self, *args, **kwargs)
-        raise RuntimeError("after_write")
-
-    for crash in ("after_write", "after_commit"):
+def test_stream_writes_each_batch_once(spark, tmp_path, state_crash):
+    """`map --stream` commits a run's outputs once: a run that dies before
+    its manifest rename, or after committing, is finished by the next
+    run, and the lines land once."""
+    for crash in ("before_rename", "after_commit"):
         src = tmp_path / crash / "in"
         _write_lines(str(src / "a.txt"), ["one", "two"])
         _write_lines(str(src / "b.txt"), ["three"])
         out = str(tmp_path / crash / "out")
-        if crash == "after_write":
-            monkeypatch.setattr(DataFrameWriter, "text", write_then_die)
-        else:
-            state_crash(crash)
+        state_crash(crash)
         with pytest.raises(Exception, match=crash):
             run_map_stream(spark, str(src), out, "cat")
         assert run_map_stream(spark, str(src), out, "cat") == 3, crash
@@ -428,6 +696,27 @@ def test_stream_writes_each_batch_once(spark, tmp_path, monkeypatch, state_crash
             r["value"] for r in spark.read.text(os.path.join(out, "data")).collect()
         )
         assert vals == ["one", "three", "two"], crash
+
+
+def test_stream_remaps_legacy_batch_output(spark, tmp_path):
+    """`map --stream` output written by the streaming sink (OUT/data part
+    files listed under a batch id, no command, and a file-source
+    checkpoint) is re-mapped per input file on the next run, and the old
+    part files are dropped."""
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["one", "two"])
+    _write_lines(str(src / "b.txt"), ["three"])
+    out = tmp_path / "out"
+    data = out / "data"
+    old = "part-00000-0d5c3c7e-c000.txt"
+    _write_lines(str(data / old), ["ONE", "TWO", "THREE"])
+    (data / "_filemap_memo.json").write_text(json.dumps({"batch": 0, "files": [old]}))
+    (out / "_checkpoint" / "offsets").mkdir(parents=True)
+
+    assert run_map_stream(spark, str(src), str(out), "cat") == 3
+    assert _stage_files(str(data)) == {"a.txt": b"one\ntwo\n", "b.txt": b"three\n"}
+    _write_lines(str(src / "c.txt"), ["four"])
+    assert run_map_stream(spark, str(src), str(out), "cat") == 4
 
 
 def test_query_verb_runs_sql_over_views(spark, sf_dir, tmp_path, capsys):
