@@ -32,8 +32,10 @@ Semantics preserved from the reference:
   into a same-named output (less its codec extension), like filemap. One
   job packs the files to map into at most `defaultParallelism` tasks, and
   each task streams each file it holds through its own `sh -c CMD` fork;
-- reduce = shuffle records by their leading whitespace-delimited field into
-  hash buckets, then one shell pipeline per bucket;
+- reduce = shuffle lines by their key, the text before their first space (a
+  tab does not split it; a line without a space is its own key), into hash
+  buckets, then one shell pipeline per bucket, each writing its own part
+  file; every bucket forks, an empty one too;
 - a command that exits with a status above 1 fails its stage and commits
   nothing (1 passes: it is grep's "no lines selected");
 - stages: every verb runs the same stage kernel. `map IN OUT` is one map
@@ -76,8 +78,13 @@ import zlib
 from functools import partial
 from typing import Iterable, Iterator, NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from filemap_spark import state
 from filemap_spark.state import _hidden
@@ -108,6 +115,12 @@ _UNREADABLE = (".lz4", ".snappy", ".zst")
 _PASSING = (0, 1)
 
 _CHUNK = 1 << 20
+
+# the Arrow frames of the shell stages (schemas built here, not parsed by
+# the JVM): packed file lists, binary lines, a bucket's line count
+_FILES = T.StructType([T.StructField("files", T.ArrayType(T.ArrayType(T.StringType())))])
+_VALUE = T.StructType([T.StructField("value", T.BinaryType())])
+_LINES = T.StructType([T.StructField("lines", T.LongType())])
 _BOM = b"\xef\xbb\xbf"
 _URI = re.compile(r"([A-Za-z][\w+.-]*):/")
 
@@ -131,10 +144,10 @@ def _local(path: str) -> str:
 
 def _fork(cmd: str, data: Iterable[bytes], what: str, out=subprocess.PIPE) -> Iterator[bytes]:
     """Fork `sh -c CMD` once, feed it DATA (`\\n`-terminated lines, in
-    chunks) on stdin from a thread, and yield its output lines without
-    their `\\n`; given OUT, a file descriptor, the command writes there
-    and nothing is yielded. A status outside `_PASSING` raises, naming
-    WHAT (a file or a bucket)."""
+    chunks) on stdin from a thread, and yield its output in chunks; given
+    OUT, a file descriptor, the command writes there and nothing is
+    yielded. A status outside `_PASSING` raises, naming WHAT (a file or a
+    bucket)."""
     failed: list[Exception] = []
     with subprocess.Popen(["sh", "-c", cmd], stdin=subprocess.PIPE, stdout=out) as proc:
 
@@ -149,8 +162,8 @@ def _fork(cmd: str, data: Iterable[bytes], what: str, out=subprocess.PIPE) -> It
 
         feeder = threading.Thread(target=feed, daemon=True)
         feeder.start()
-        for line in proc.stdout or ():
-            yield line.rstrip(b"\n")
+        if proc.stdout:
+            yield from iter(partial(proc.stdout.read, _CHUNK), b"")
         feeder.join()
     if failed:
         raise failed[0]
@@ -190,8 +203,64 @@ def _lines(path: str) -> Iterator[bytes]:
         yield b"\n"
 
 
-def _packed(sc, todo: list[tuple[str, str]]):
-    """TODO's (input path, output name) files as ONE RDD of at most
+def _count(path: str) -> int:
+    """PATH's line count, as Spark's text source counts it (`_lines`)."""
+    return sum(chunk.count(b"\n") for chunk in _lines(path))
+
+
+def _write(cmd: str, data: Iterable[bytes], what: str, path: str) -> int:
+    """Fork CMD over DATA (see `_fork`) writing the file PATH itself, give
+    a last output line without `\\n` one, and return PATH's line count."""
+    fd = os.open(path, os.O_RDWR | os.O_CREAT | os.O_TRUNC, 0o666)
+    try:
+        for _ in _fork(cmd, data, what, out=fd):
+            pass  # the command writes fd itself
+        end = os.fstat(fd).st_size
+        if end and os.pread(fd, 1, end - 1) != b"\n":
+            os.pwrite(fd, b"\n", end)
+    finally:
+        os.close(fd)
+    return _count(path)
+
+
+def _batch(lines: bytes) -> pa.RecordBatch:
+    """LINES, `\\n`-terminated, as a batch of one binary `value` column
+    holding each line without its `\\n`."""
+    ends = np.flatnonzero(np.frombuffer(lines, np.uint8) == ord("\n"))
+    offsets = np.concatenate(([0], ends - np.arange(len(ends)))).astype(np.int32)
+    value = pa.Array.from_buffers(
+        pa.binary(), len(ends),
+        [None, pa.py_buffer(offsets), pa.py_buffer(lines.replace(b"\n", b""))],
+    )
+    return pa.RecordBatch.from_arrays([value], ["value"])
+
+
+def _batches(chunks: Iterable[bytes]) -> Iterator[pa.RecordBatch]:
+    """CHUNKS of `\\n`-separated lines as `_batch`es of whole lines; a last
+    line without `\\n` is kept."""
+    tail = b""
+    for chunk in chunks:
+        chunk = tail + chunk
+        cut = chunk.rfind(b"\n") + 1
+        chunk, tail = chunk[:cut], chunk[cut:]
+        if chunk:
+            yield _batch(chunk)
+    if tail:
+        yield _batch(tail + b"\n")
+
+
+def _terminated(batches: Iterable[pa.RecordBatch]) -> Iterator:
+    """The values of BATCHES' one binary column, each followed by `\\n`,
+    one joined buffer a batch."""
+    for batch in batches:
+        col = batch.column(0)
+        if len(col):
+            yield pc.binary_join(pa.ListArray.from_arrays([0, len(col)], col), b"\n")[0].as_buffer()
+            yield b"\n"
+
+
+def _packed(sc, todo: list[tuple[str, str]]) -> list[list[tuple[str, str]]]:
+    """TODO's (input path, output name) files as at most
     `defaultParallelism` lists of them, one list a task, balanced by size."""
     n = max(1, min(len(todo), sc.defaultParallelism))
     bins: list[list[tuple[str, str]]] = [[] for _ in range(n)]
@@ -200,72 +269,103 @@ def _packed(sc, todo: list[tuple[str, str]]):
         i = load.index(min(load))
         bins[i].append((path, name))
         load[i] += size
-    return sc.parallelize(bins, n)
+    return bins
 
 
-def _map_task(cmd: str, staged: str, files: list[tuple[str, str]]) -> None:
+def _map_task(cmd: str, staged: str, files: list[tuple[str, str]]) -> Iterator[tuple[str, int]]:
     """Fork CMD once per (input path, output name) of FILES, streaming the
-    file in and its output straight into STAGED/name; a last output line
-    without `\\n` gets one."""
-    os.makedirs(staged, exist_ok=True)
+    file in and its output straight into STAGED/name (`_write`), and
+    yield each name with its line count."""
     for path, name in files:
-        fd = os.open(os.path.join(staged, name), os.O_RDWR | os.O_CREAT | os.O_TRUNC, 0o666)
-        try:
-            for _ in _fork(cmd, _lines(path), name, out=fd):
-                pass  # the command writes fd itself
-            end = os.fstat(fd).st_size
-            if end and os.pread(fd, 1, end - 1) != b"\n":
-                os.pwrite(fd, b"\n", end)
-        finally:
-            os.close(fd)
+        yield name, _write(cmd, _lines(path), name, os.path.join(staged, name))
 
 
-def _map_lines(cmd: str, files: list[tuple[str, str]]) -> Iterator[str]:
-    """The output lines of CMD forked once per (input path, output name)
-    of FILES, decoded with undecodable bytes kept (as surrogates)."""
-    for path, name in files:
-        for line in _fork(cmd, _lines(path), name):
-            yield line.decode("utf-8", "surrogateescape")
+def _map_batches(cmd: str, batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """`mapInArrow` body of `mapreduce`'s streamed map: fork CMD once per
+    (input path, output name) of each file list in BATCHES, yielding its
+    output lines as binary `_batch`es."""
+    for batch in batches:
+        for files in batch.column(0).to_pylist():
+            for path, name in files:
+                yield from _batches(_fork(cmd, _lines(path), name))
 
 
-def _map_files(sc, txn: state.Transaction, cmd: str, todo: list[tuple[str, str]]) -> None:
+def _map_files(sc, txn: state.Transaction, cmd: str, todo: list[tuple[str, str]]) -> dict[str, int]:
     """Map TODO's (input path, output name) files in ONE job of at most
     `defaultParallelism` tasks (`_packed`), each forking CMD once per file
     it holds into the stage's staging dir, then add the outputs to the
-    stage. A file streams through its fork, so none is held in memory
-    whole. The tasks open the inputs and write staging themselves, so
-    executors need the paths the driver sees."""
+    stage and return their line counts by name. A file streams through
+    its fork, so none is held in memory whole. The tasks open the inputs
+    and write staging themselves, so executors need the paths the driver
+    sees."""
     staged = txn.staging()
-    _packed(sc, todo).foreach(partial(_map_task, cmd, staged))
+    os.makedirs(staged)
+    bins = _packed(sc, todo)
+    lines = dict(sc.parallelize(bins, len(bins)).flatMap(partial(_map_task, cmd, staged)).collect())
     for _, name in todo:
         txn.add(os.path.join(staged, name), txn.root, name)
+    return lines
 
 
-def _reduce(lines, txn: state.Transaction, cmd: str, buckets: int) -> None:
-    """Shuffle LINES (an RDD of str) into BUCKETS hash buckets by their
-    leading whitespace-delimited field, fork CMD once per bucket, and
-    replace the stage's part files with the non-empty outputs. Their
-    names carry the run's staging id, so a crashed run's parts never
-    share a committed name, and `part-NNNNN` keeps the bucket index."""
-    keyed = lines.map(lambda line: (line.split(" ", 1)[0], line))
+def _reduce_bucket(cmd: str, staged: str, i: int, batches: Iterable[pa.RecordBatch]) -> int:
+    """Fork CMD once over bucket I's lines (BATCHES of one binary column)
+    into STAGED/part-I (`_write`); returns its line count."""
+    return _write(cmd, _terminated(batches), f"bucket {i}", os.path.join(staged, f"part-{i:05d}"))
+
+
+def _reduce_task(cmd: str, staged: str, batches) -> Iterator[pa.RecordBatch]:
+    """`mapInArrow` body of a reduce: this task's bucket, one row of its
+    line count."""
+    n = _reduce_bucket(cmd, staged, TaskContext.get().partitionId(), batches)
+    yield pa.RecordBatch.from_pydict({"lines": [n]})
+
+
+def _reduce(lines, txn: state.Transaction, cmd: str, buckets: int) -> int:
+    """Shuffle LINES (a DataFrame of one `value` column, string or binary)
+    into BUCKETS hash buckets by their key, the text before their first
+    space (a whole line without one), fork CMD once per bucket, empty ones
+    too, over its lines in binary Arrow batches into the bucket's own part
+    file, and replace the stage's part files with the non-empty ones.
+    Returns the line count of the parts. Their names carry the run's
+    staging id, so a crashed run's parts never share a committed name,
+    and `part-NNNNN` keeps the bucket index."""
     staged = txn.staging()
-    keyed.partitionBy(buckets).values().mapPartitionsWithIndex(
-        lambda i, it: _fork(
-            cmd, (line.encode("utf-8", "surrogateescape") + b"\n" for line in it), f"bucket {i}"
-        )
-    ).saveAsTextFile(staged)
+    os.makedirs(staged)
+    value = F.col("value")
+    counts = (
+        lines.repartition(buckets, F.substring_index(value.cast("string"), " ", 1))
+        .select(value.cast("binary"))
+        .mapInArrow(partial(_reduce_task, cmd, staged), _LINES)
+        .collect()
+    )
+    # AQE runs no task over a shuffle it finds empty: its buckets fork here
+    n = sum(r.lines for r in counts) if counts else sum(
+        _reduce_bucket(cmd, staged, i, ()) for i in range(buckets)
+    )
     txn.drop(txn.root)
     run = os.path.basename(staged)
     for name in sorted(os.listdir(staged)):
         part = os.path.join(staged, name)
-        if name.startswith("part-") and os.path.getsize(part):
+        if os.path.getsize(part):
             txn.add(part, txn.root, f"{name}-{run}")
+    return n
 
 
 def _commit(txn: state.Transaction) -> None:
     txn.commit()
     # Hadoop's marker of a completed output
     open(os.path.join(txn.root, "_SUCCESS"), "w").close()
+
+
+def _total(root: str) -> int:
+    """The line count of stage dir ROOT's last commit, from its manifest: a
+    reduce's total, or the sum of a map's per-output counts. A file with
+    no count (its manifest written by an older layout) is counted here."""
+    manifest = state.read_manifest(root)
+    lines = manifest.get("lines", {})
+    if isinstance(lines, int):
+        return lines
+    return sum(lines[f] if f in lines else _count(os.path.join(root, f)) for f in manifest["files"])
 
 
 def _braces(pattern: str) -> list[str]:
@@ -382,7 +482,9 @@ def _plan(
         return None
     for name in gone:
         txn.drop(output, name)
-    txn.meta = {"command": command, "inputs": inputs}
+    # the line counts of the outputs kept
+    lines = txn.meta.get("lines", {}) if reuse else {}
+    txn.meta = {"command": command, "inputs": inputs, "lines": lines}
     return _Plan(txn, todo)
 
 
@@ -394,19 +496,27 @@ def run_stage(
     cmd: str,
     buckets: int = 32,
     plan: _Plan | None = None,
-) -> None:
+) -> int:
     """One shell stage, carried out as `plan` says (see `_plan`; by
     default everything reruns) and committed to its dir OUTPUT by one
-    state commit. A map stage forks CMD once per input file still to map
-    (`_map_files`); a reduce stage replaces its part files
-    (`_reduce`)."""
+    state commit; returns the dir's line count. A map stage forks CMD once
+    per input file still to map (`_map_files`); a reduce stage replaces
+    its part files (`_reduce`). The manifest keeps the count of each map
+    output, or a reduce's total, as the tasks that wrote them counted."""
     plan = plan or _plan(kind, input_path, output, cmd, buckets, memo=False)
+    txn = plan.txn
     if kind == "reduce":
-        lines = spark.read.text(input_path).rdd.map(lambda r: r[0])
-        _reduce(lines, plan.txn, cmd, buckets)
-    elif plan.todo:
-        _map_files(spark.sparkContext, plan.txn, cmd, plan.todo)
-    _commit(plan.txn)
+        txn.meta["lines"] = _reduce(spark.read.text(input_path), txn, cmd, buckets)
+    else:
+        lines = txn.meta["lines"]  # the kept outputs'
+        if plan.todo:
+            lines.update(_map_files(spark.sparkContext, txn, cmd, plan.todo))
+        txn.meta["lines"] = {
+            n: lines[n] if n in lines else _count(os.path.join(txn.root, n))
+            for n in txn.files(txn.root)
+        }
+    _commit(txn)
+    return _total(txn.root)
 
 
 def _run_stages(
@@ -422,14 +532,16 @@ def _run_stages(
     to be local before any stage dir is opened."""
     cur = _local(input_path)
     stages = [(kind, cmd, _local(d)) for kind, cmd, d in stages]
+    n = None
     for i, (kind, cmd, stage_out) in enumerate(stages):
         plan = _plan(kind, cur, stage_out, cmd, buckets, memo)
         if plan is None:
             print(f"memo hit: stage {i} ({kind}) up to date", file=sys.stderr)
+            n = None
         else:
-            run_stage(spark, cur, stage_out, kind, cmd, buckets=buckets, plan=plan)
+            n = run_stage(spark, cur, stage_out, kind, cmd, buckets=buckets, plan=plan)
         cur = stage_out
-    return spark.read.text(cur).count()
+    return _total(cur) if n is None else n
 
 
 def run_map(
@@ -443,19 +555,20 @@ def run_map(
     """The `map` / `mapreduce` verbs without `--memo`; returns the output
     line count. `map` is one map stage with OUTPUT as its dir. A
     `mapreduce` keeps no map output it would not reuse: the per-file
-    forks' lines stream straight into the reduce's exchange, in one job,
-    and OUTPUT carries no fingerprint, so a later `--memo` run reduces
-    again."""
+    forks' lines stream straight into the reduce's exchange as binary
+    Arrow batches (`mapInArrow` over the packed file lists), and OUTPUT
+    carries no fingerprint, so a later `--memo` run reduces again."""
     if reduce_cmd is None:
         return _run_stages(spark, input_path, [("map", cmd, output)], buckets, False)
     files = _input_files(input_path)
     txn = state.Transaction(_local(output))
-    txn.meta = {}
     todo = [(path, name) for name, path in sorted(files.items())]
-    lines = _packed(spark.sparkContext, todo).flatMap(partial(_map_lines, cmd))
-    _reduce(lines, txn, reduce_cmd, buckets)
+    # a local frame of n rows scans as n tasks, one file list each
+    packed = [(bin,) for bin in _packed(spark.sparkContext, todo)]
+    lines = spark.createDataFrame(packed, _FILES).mapInArrow(partial(_map_batches, cmd), _VALUE)
+    txn.meta = {"lines": _reduce(lines, txn, reduce_cmd, buckets)}
     _commit(txn)
-    return spark.read.text(txn.root).count()
+    return txn.meta["lines"]
 
 
 def run_pipeline(

@@ -228,8 +228,8 @@ def udf_pipe_shell(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipe_map_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full filemap pipeline as shell stages: map = `tr ' ' '\\n'`
-    (tokenize, one subprocess per partition), shuffle = repartition by the
-    emitted key, reduce = `sort | uniq -c` per bucket — the reference's
+    (tokenize, one subprocess per partition), shuffle = `RDD.partitionBy(32)`
+    on the emitted word, reduce = `sort | uniq -c` per bucket — the reference's
     canonical wordcount, executed with REAL Unix subprocesses at every
     stage, graded against the SQL wordcount oracle.
 

@@ -504,6 +504,22 @@ def test_map_lines_stream_in_chunks(monkeypatch, tmp_path):
         assert b"".join(cli._lines(str(tmp_path / name))) == want, name
 
 
+@pytest.mark.parametrize("cut", [1, 2, 5, 64])
+def test_arrow_line_batches_match_a_plain_split(cut):
+    """The Arrow line batches a streamed map yields (`_batches`, offsets
+    built with numpy) hold what a plain split at `\\n` gives, whatever
+    chunks the output comes in, and the reduce's feed (`_terminated`)
+    turns them back into the same bytes."""
+    from filemap_spark import cli
+
+    out = b"a b\n\n\xff\xfe c\r\nlong line here\nlast"
+    chunks = [out[i : i + cut] for i in range(0, len(out), cut)]
+    batches = list(cli._batches(chunks))
+    got = [v for b in batches for v in b.column(0).to_pylist()]
+    assert got == out.split(b"\n")
+    assert b"".join(bytes(x) for x in cli._terminated(batches)) == out + b"\n"
+
+
 def test_map_reads_names_with_glob_metacharacters(spark, tmp_path):
     """Input names that Hadoop would split at (`,`) or read as a glob
     (`[]{}*?`) map like any other: the tasks open the files the driver
@@ -663,6 +679,88 @@ def test_pipeline_reduce_hit_drops_uncommitted_parts(spark, tmp_path, state_cras
     run_pipeline(spark, src, cold, stages, buckets=4, memo=True)
     for d in ("stage01", "final"):
         assert _dataset_bytes(os.path.join(out, d)) == _dataset_bytes(os.path.join(cold, d)), d
+
+
+def _parts(d: str) -> list[bytes]:
+    """The lines of a stage dir's part files, sorted, as bytes."""
+    return sorted(
+        line for f, body in _stage_files(d).items() if f.startswith("part-")
+        for line in body.splitlines()
+    )
+
+
+def test_reduce_keeps_the_bytes_its_input_holds(spark, tmp_path):
+    """Bytes that are not UTF-8 reach the reduce's command and its part
+    files as they are, through `pipeline` and through `mapreduce`'s
+    streamed map alike."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.txt").write_bytes(b"k \xff\xfe caf\xc3\xa9\nk plain\n")
+    want = sorted([b"k \xff\xfe caf\xc3\xa9", b"k plain"])
+    out = str(tmp_path / "pipe")
+    run_pipeline(spark, str(src), out, [("map", "cat"), ("reduce", "cat")], buckets=2)
+    assert _stage_files(os.path.join(out, "stage00")) == {"a.txt": (src / "a.txt").read_bytes()}
+    assert _parts(os.path.join(out, "final")) == want
+    out = str(tmp_path / "mr")
+    assert run_map(spark, str(src), out, "cat", reduce_cmd="cat", buckets=2) == 2
+    assert _parts(out) == want
+
+
+@pytest.mark.parametrize(
+    "buckets, body", [(3, b"x 1\nx 2\ny 3\n"), (8, b"x 1\nx 2\ny 3\n"), (3, b"")],
+    ids=["3", "8", "empty_input"],
+)
+def test_reduce_forks_every_bucket(spark, tmp_path, buckets, body):
+    """A reduce forks its command once per bucket, an empty bucket too (and
+    every bucket of an empty input, where Spark runs no task), so `wc -l`
+    leaves exactly one part file a bucket, and its counts add up to the
+    input's lines."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.txt").write_bytes(body)
+    out = str(tmp_path / "out")
+    assert run_pipeline(spark, str(src), out, [("reduce", "wc -l")], buckets=buckets) == buckets
+    parts = _stage_files(os.path.join(out, "final"))
+    assert len(parts) == buckets and all(f.startswith("part-") for f in parts)
+    assert sum(int(body) for body in parts.values()) == body.count(b"\n")
+
+
+# a command whose output ends its lines every way Hadoop's line reader
+# knows, opens with a byte-order mark and holds blank lines
+_ODD_LINES = r"printf '\357\273\277head\r\n'; cat; printf 'a\r\nb\rc\n\n\r\rlast'"
+
+
+@pytest.mark.parametrize(
+    "stages",
+    [[("map", _ODD_LINES)], [("map", "cat"), ("reduce", _ODD_LINES)]],
+    ids=["map", "reduce"],
+)
+def test_verbs_count_lines_as_spark_reads_them(spark, tmp_path, stages):
+    """A verb returns its last stage's line count as the tasks that wrote
+    it counted it, equal to `spark.read.text` on the stage dir: on a run,
+    on a memo hit, and on a hit whose manifest has no counts (one an older
+    layout wrote), which the driver counts."""
+    from filemap_spark import state
+
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["k 1", "", "j 2"])
+    _write_lines(str(src / "b.txt"), ["k 3"])
+    src, out = str(src), str(tmp_path / "out")
+    final = os.path.join(out, "final")
+    n = run_pipeline(spark, src, out, stages, buckets=2, memo=True)
+    assert n == spark.read.text(final).count() > 0
+    assert run_pipeline(spark, src, out, stages, buckets=2, memo=True) == n
+    manifest = state.read_manifest(final)
+    assert "lines" in manifest
+    del manifest["lines"]
+    with open(os.path.join(final, state.MANIFEST), "w") as f:
+        json.dump(manifest, f)
+    assert run_pipeline(spark, src, out, stages, buckets=2, memo=True) == n
+    if len(stages) == 1:
+        assert run_map(spark, src, str(tmp_path / "m"), _ODD_LINES) == n
+    else:
+        mr = str(tmp_path / "mr")
+        assert run_map(spark, src, mr, "cat", _ODD_LINES, buckets=2) == spark.read.text(mr).count()
 
 
 def test_stream_processes_only_new_files(spark, tmp_path):

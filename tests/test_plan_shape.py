@@ -1599,3 +1599,32 @@ def test_dsir_ops_single_tokenize(spark, sf_dir):
         plan = _final_adaptive_plan(spark, sf_dir, name)
         assert plan.count("Generate explode(") == 1, (name, plan)
         assert plan.count("ReusedExchange") >= 1, name
+
+
+def test_shell_reduce_one_exchange_on_key_per_bucket(spark, tmp_path, monkeypatch):
+    """A `pipeline` reduce over a text scan shuffles ONCE, hash-partitioned
+    on `substring_index(value, ' ', 1)` into exactly `--buckets`
+    partitions, and feeds each bucket's fork through `mapInArrow`. Its
+    action is a `collect()` of the per-bucket line counts, so no second
+    (aggregate) exchange follows."""
+    from filemap_spark.cli import run_pipeline
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.txt").write_text("x 1\ny 2\nx 3\n")
+    cls = type(spark.range(1))
+    real = cls.collect
+    plans = []
+
+    def spy(df):
+        rows = real(df)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    assert run_pipeline(spark, str(src), str(tmp_path / "out"), [("reduce", "sort")], buckets=7) == 3
+    (plan,) = plans
+    final = plan.split("== Initial Plan ==")[0]
+    assert "FileScan text" in final and "MapInArrow" in final, final
+    assert final.count("Exchange") == 1, final
+    assert re.search(r"Exchange hashpartitioning\(substring_index\(value#\d+,  , 1\), 7\)", final), final
