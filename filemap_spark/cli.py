@@ -75,7 +75,7 @@ import sys
 import threading
 import urllib.parse
 import zlib
-from functools import partial
+from functools import partial, wraps
 from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
@@ -87,6 +87,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from filemap_spark import state
+from filemap_spark.session import job_phase
 from filemap_spark.state import _hidden
 
 
@@ -772,6 +773,28 @@ def run_dedup(
     return spark.read.parquet(out).count(), n_total
 
 
+def _releasing(verb):
+    """Wrap a verb so it unpersists, on return, every RDD persisted while
+    it ran: its localCheckpoints, once the writes that read them are
+    done. None goes earlier, since a checkpoint has no lineage to
+    recompute from. RDDs another thread of the same session persists
+    meanwhile go too."""
+
+    @wraps(verb)
+    def run(spark, *args, **kwargs):
+        jsc = spark.sparkContext._jsc
+        held = set(jsc.getPersistentRDDs().keys())
+        try:
+            return verb(spark, *args, **kwargs)
+        finally:
+            for rid, rdd in jsc.getPersistentRDDs().items():
+                if rid not in held:
+                    rdd.unpersist(False)
+
+    return run
+
+
+@_releasing
 def run_dedup_stream(
     spark,
     input_dir: str,
@@ -856,8 +879,10 @@ def run_dedup_stream(
     def sink(batch_df, batch_id):
         with state.transaction(output, tables, batch=batch_id) as txn:
             if not txn.replay:
-                pairs = ingest(spark, batch_df.select("doc_id", "text"), state_dir=state_dir)
-                txn.append(pairs.drop("hamming"), pairs_dir)
+                with job_phase(spark, "ingest", "dedup_stream"):
+                    pairs = ingest(spark, batch_df.select("doc_id", "text"), state_dir=state_dir)
+                with job_phase(spark, "stage", "dedup_stream"):
+                    txn.append(pairs.drop("hamming"), pairs_dir)
 
     q = (
         spark.readStream.schema(spark.read.parquet(input_dir).schema)
@@ -874,7 +899,7 @@ def run_dedup_stream(
     # the next run's probes and pair re-reads pay for; the hysteresis in
     # compact_parquet_dir keeps this from rewriting the full state on
     # every drain
-    with state.transaction(output, tables) as txn:
+    with state.transaction(output, tables) as txn, job_phase(spark, "compact", "dedup_stream"):
         if modality == "text":
             compact_lsh_state(spark, state_dir)
         else:
@@ -882,20 +907,22 @@ def run_dedup_stream(
         compact_parquet_dir(spark, pairs_dir)
     if not txn.files(ledger):  # empty input dir, nothing ingested
         return 0, 0
-    n_total = spark.read.parquet(ledger).count()
-    out = os.path.join(output, "documents.parquet")
-    # survivors are a function of the input files and the pairs alone
-    fp = _fingerprint(input_dir, ["survivors", _fingerprint(pairs_dir, [])])
-    if not (_memo_hit(output, fp) and os.path.exists(os.path.join(out, "_SUCCESS"))):
-        edges = spark.read.parquet(pairs_dir).select(
-            F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-        )
-        clean = _survivors_from_pairs(spark.read.parquet(input_dir), edges)
-        clean.write.mode("overwrite").parquet(out)
-        # a rebuild cut short leaves no _SUCCESS, so it never reads as current
-        with state.transaction(output, tables) as txn:
-            txn.meta["fingerprint"] = fp
-    return spark.read.parquet(out).count(), n_total
+    with job_phase(spark, "survivors", "dedup_stream"):
+        n_total = spark.read.parquet(ledger).count()
+        out = os.path.join(output, "documents.parquet")
+        # survivors are a function of the input files and the pairs alone
+        fp = _fingerprint(input_dir, ["survivors", _fingerprint(pairs_dir, [])])
+        if not (_memo_hit(output, fp) and os.path.exists(os.path.join(out, "_SUCCESS"))):
+            edges = spark.read.parquet(pairs_dir).select(
+                F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
+            )
+            clean = _survivors_from_pairs(spark.read.parquet(input_dir), edges)
+            clean.write.mode("overwrite").parquet(out)
+            # a rebuild cut short leaves no _SUCCESS, so it never reads as
+            # current
+            with state.transaction(output, tables) as txn:
+                txn.meta["fingerprint"] = fp
+        return spark.read.parquet(out).count(), n_total
 
 
 # The 22 canonical TPC-H query shapes → registry ids (corpus-adapted

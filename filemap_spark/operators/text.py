@@ -29,6 +29,7 @@ from filemap_spark.functions.numeric import (
 from filemap_spark.functions.ranks import with_global_ntile
 from filemap_spark.io import load_table, spread_single_split
 from filemap_spark.registry import query
+from filemap_spark.session import job_phase
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
@@ -861,6 +862,20 @@ def _shingle_frame(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
 
 
+def _by_doc(docs: DataFrame) -> DataFrame:
+    """docs hash-clustered on doc_id into defaultParallelism partitions.
+
+    Every row _shingle_frame, and _band_buckets after it, derives from a
+    doc comes from that doc's own row, so over clustered docs the
+    signature's min on (doc_id, i) and the collect_list that rebuilds the
+    signature array plan no exchange. The one shuffle left moves each
+    doc's text once, in place of the 128 partial mins and the 128-slot
+    array every doc's signature moved before. The partition count is
+    fixed on purpose: a repartition with no count lets AQE coalesce it to
+    one partition, and the whole signature then runs as one task."""
+    return docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc_id")
+
+
 # LSH geometry shared by dedup_minhash_lsh and the incremental ingest:
 # r = 4 rows/band over 128 deterministic permutations → catches jaccard ≥ ~0.6
 _LSH_HASHES, _LSH_BANDS = 128, 32
@@ -978,14 +993,13 @@ def _band_buckets(shingles: DataFrame) -> DataFrame:
     This form explodes ONE codegen'd 128-element hash array to
     (doc_id, i, h) rows (a lambda-free F.array — higher-order `transform`
     would evaluate xxhash64 interpreted, measured 3× slower on the hash
-    leg), computes the signature with a streaming keyed min-agg on
-    (doc_id, i) (bounded state, map-side partial min), and reassembles
-    the bounded 128-element signature array per doc for the band hash.
-    Shuffle volume is the same docs×128 longs the wide-column partial-agg
-    moved (the explode's 128× row blow-up collapses in the map-side
-    partial min before the exchange); end-to-end, the incremental delta
-    ingest this stage dominates dropped 3.2 s → 2.2 s warm at sf0.1. On
-    a FULL-corpus pass the explode's CPU cost and the old form's fixed
+    leg), takes the min per (doc_id, i), and reassembles the bounded
+    128-element signature array per doc for the band hash. Both aggs are
+    keyed by doc_id, so over shingles of docs clustered by _by_doc they
+    run in place with no exchange; over unclustered shingles Spark adds
+    one exchange per agg. End-to-end, the incremental delta ingest this
+    stage dominates dropped 3.2 s → 2.2 s warm at sf0.1. On a
+    FULL-corpus pass the explode's CPU cost and the old form's fixed
     analysis cost are comparable (~2-4 s either way at sf0.1) — the
     exploded form wins on delta-sized batches, which is the shape the
     ingest path exists for."""
@@ -1076,15 +1090,17 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once: the rep relation feeds shingling, the sigworthy
     # filter, and both expansion joins
     reps = _dup_groups(keyed).localCheckpoint()
-    # materialized once: the signature agg, the candidate verify join
-    # (both sides), and the shingle counts all rescan this frame
-    shingles = _shingle_frame(
-        reps.select(F.col("rep_id").alias("doc_id"), "text")
-    ).localCheckpoint()
+    rep_docs = reps.select(F.col("rep_id").alias("doc_id"), "text")
+    # materialized once: the candidate verify join (both sides) and the
+    # shingle counts rescan this frame
+    shingles = _shingle_frame(rep_docs).localCheckpoint()
     # materialized once too (round 9): BOTH self-join sides read the band
     # relation — un-checkpointed, the minhash pipeline runs twice
-    # (measured ~5.4 s vs ~1 s for the band stage itself at sf0.1)
-    stacked = _band_buckets(shingles).localCheckpoint()
+    # (measured ~5.4 s vs ~1 s for the band stage itself at sf0.1). The
+    # signature re-shingles the reps clustered by doc_id rather than
+    # reading the shingle checkpoint, which keeps no partitioning: the
+    # text moves once and the signature aggs move nothing.
+    stacked = _band_buckets(_shingle_frame(_by_doc(rep_docs))).localCheckpoint()
     a = stacked.alias("a")
     b = stacked.alias("b")
     candidates = (
@@ -1164,16 +1180,21 @@ def incremental_lsh_ingest(
     the index exchanged). The saving grows with how much smaller the
     arrival is than the index (measured at sf0.1, local[4]: a 5% arrival
     wrote 16x fewer shuffle records, a 50% arrival 2.7x fewer, same
-    pairs). The exchanges that remain move the batch's signature
-    fragments, the candidate pairs and their shingles, plus the ledger
-    rows for pair expansion; the index files are scanned (streamed), not
-    re-partitioned. The stateless first ingest keeps plain shuffle joins
-    (its probe is the whole corpus). The index is a columnar table that
-    ingest only adds files to, growing with distinct texts. (The
-    separate `compact_lsh_state` utility DOES rewrite, to fold
-    accumulated per-batch file sets; its hysteresis amortizes that cost
-    over ≥ (slack−1)·ideal appends.) Deterministic seeded permutations
-    make signatures from different batches comparable by construction."""
+    pairs). The batch's signatures move nothing: its reps are clustered
+    by doc_id (_by_doc) before shingling, so the one exchange there moves
+    each novel rep's text once. The exchanges that remain move the
+    batch's dup groups, the candidate pairs and their shingles, plus the
+    ledger rows for pair expansion; the index files are scanned
+    (streamed), not re-partitioned. Each phase's jobs are described
+    `<op>:<phase>` (signature, probe, verify, expand, stage) when a verb
+    names the op (session.job_phase). The stateless first ingest keeps
+    plain shuffle joins (its probe is the whole corpus). The index is a
+    columnar table that ingest only adds files to, growing with distinct
+    texts. (The separate `compact_lsh_state` utility DOES rewrite, to
+    fold accumulated per-batch file sets; its hysteresis amortizes that
+    cost over ≥ (slack−1)·ideal appends.) Deterministic seeded
+    permutations make signatures from different batches comparable by
+    construction."""
 
     ing_path, sh_path, band_path = [os.path.join(state_dir, t) for t in _LSH_STATE_TABLES]
     with state.transaction(state_dir, _LSH_STATE_TABLES) as txn:
@@ -1192,8 +1213,9 @@ def incremental_lsh_ingest(
         # pin the delta (the ledger commit must not flip the anti-join);
         # thash rides along so the dup-collapse never rehashes text. The
         # count materializes the checkpoint and sizes the probe below.
-        keyed = _keyed_by_text(new_docs).localCheckpoint(eager=False)
-        n_new = keyed.count()
+        with job_phase(spark, "signature"):
+            keyed = _keyed_by_text(new_docs).localCheckpoint(eager=False)
+            n_new = keyed.count()
         if not n_new:
             # nothing unseen: skip the whole band/verify machinery (a no-op
             # batch otherwise pays ~5 s of plan overhead — measured sf0.1)
@@ -1212,7 +1234,13 @@ def incremental_lsh_ingest(
         else:
             old_reps = None
             novel = keyed
-        batch_reps = _dup_groups(novel)
+        # The batch's reps, built ONCE for the shingle, band and ledger legs
+        # below: as a plain frame, each leg prunes its columns differently
+        # and plans its own copy of _dup_groups' thash exchange. The lazy
+        # checkpoint runs that exchange here; its rows materialize inside
+        # the joint job.
+        with job_phase(spark, "signature"):
+            batch_reps = _dup_groups(novel).localCheckpoint(eager=False)
         rep_docs = batch_reps.select(F.col("rep_id").alias("doc_id"), "text")
 
         # The batch's ledger rows: every new doc annotated with its group rep
@@ -1238,8 +1266,10 @@ def incremental_lsh_ingest(
         # classification joins would otherwise re-run for every expansion
         # branch AND the append — measured ~4x). Tags by nullness: non-null
         # shingle = the shingle relation; non-null band = the LSH index
-        # rows; non-null thash = the ledger rows.
-        sh = _shingle_frame(rep_docs)
+        # rows; non-null thash = the ledger rows. The reps are clustered by
+        # doc_id (_by_doc) once — the shingle and band legs read the same
+        # exchange — so the signature's per-doc aggs move nothing.
+        sh = _shingle_frame(_by_doc(rep_docs))
         _null = lambda t, name: F.lit(None).cast(t).alias(name)  # noqa: E731
         joint = (
             sh.select(
@@ -1260,8 +1290,9 @@ def incremental_lsh_ingest(
                     _null("int", "bucket"), "thash", "rep_id", "sigworthy",
                 )
             )
-            .localCheckpoint()
         )
+        with job_phase(spark, "signature"):
+            joint = joint.localCheckpoint()
         new_sh = joint.where(F.col("shingle").isNotNull()).select("doc_id", "shingle")
         new_bands = joint.where(F.col("band").isNotNull()).select(
             "doc_id", "band", "bucket"
@@ -1328,13 +1359,20 @@ def incremental_lsh_ingest(
             # checkpoint. The id set is two rows per candidate pair (not
             # deduplicated: that would be one more exchange); past
             # _LSH_BROADCAST_ROWS verify joins the unpruned shingles.
-            candidates = candidates.localCheckpoint(eager=False)
-            if 2 * candidates.count() <= _LSH_BROADCAST_ROWS:
+            with job_phase(spark, "probe"):
+                candidates = candidates.localCheckpoint(eager=False)
+                n_cand = candidates.count()
+            if 2 * n_cand <= _LSH_BROADCAST_ROWS:
                 cand_ids = candidates.select(
                     F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
                 )
                 all_sh = all_sh.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-        rep_pairs = _jaccard_verify(candidates, all_sh, threshold)
+        # lazy: the verify exchanges run here, its last stage in the
+        # expansion's job
+        with job_phase(spark, "verify"):
+            rep_pairs = _jaccard_verify(candidates, all_sh, threshold).localCheckpoint(
+                eager=False
+            )
 
         # Expansion universe: all members (old + new) keyed directly on
         # rep_id — a rep-level pair expands to member pairs touching the
@@ -1382,7 +1420,8 @@ def incremental_lsh_ingest(
                 F.lit(1.0).alias("jaccard"),
             )
         )
-        pairs = cross.unionByName(same).localCheckpoint()
+        with job_phase(spark, "expand"):
+            pairs = cross.unionByName(same).localCheckpoint()
 
         # Stage the batch AFTER the pairs are materialized; it commits as ONE
         # manifest rename when the transaction closes (or with the enclosing
@@ -1397,9 +1436,14 @@ def incremental_lsh_ingest(
         # probes pay per-file open cost).
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        from pyspark import inheritable_thread_target
+
+        with job_phase(spark, "stage"), ThreadPoolExecutor(max_workers=3) as pool:
+            # one wrapper per write: each hands its thread its own copy of
+            # this thread's job properties, so the writes carry the phase
+            appends = [inheritable_thread_target(spark)(txn.append) for _ in range(3)]
             writes = (new_rows, new_sh, new_bands), (ing_path, sh_path, band_path)
-            list(pool.map(lambda df, p: txn.append(df.coalesce(1), p), *writes))
+            list(pool.map(lambda f, df, p: f(df.coalesce(1), p), appends, *writes))
         return pairs
 
 

@@ -10,6 +10,8 @@ AQE for runtime re-planning at scale (SURVEY §4.2).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -62,3 +64,31 @@ def get_spark(app_name: str = "filemap-spark", master: str | None = None) -> Spa
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
     return ensure_runtime_confs(builder.getOrCreate())
+
+
+_OP = "filemap.op"
+
+
+@contextmanager
+def job_phase(spark: SparkSession, phase: str, op: str | None = None) -> Iterator[None]:
+    """Describe every Spark job started inside as `<op>:<phase>`, so a
+    stage's metrics map to the phase of the verb that ran it.
+
+    `op` defaults to the op of the innermost enclosing job_phase on this
+    thread; with none, the description is left alone, so an engine
+    function names its phases only when a verb runs it. The previous
+    description and op are restored on exit; the job group is never
+    touched. Both are thread-local properties: a Python thread that runs
+    a phase's jobs takes them through `inheritable_thread_target`."""
+    sc = spark.sparkContext
+    prev_op = sc.getLocalProperty(_OP)
+    prev = sc.getLocalProperty("spark.job.description")
+    op = op or prev_op
+    if op:
+        sc.setLocalProperty(_OP, op)
+        sc.setJobDescription(f"{op}:{phase}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_OP, prev_op)
+        sc.setLocalProperty("spark.job.description", prev)

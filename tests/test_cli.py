@@ -1099,6 +1099,72 @@ def test_dedup_stream_noop_leaves_survivors_untouched(spark, tmp_path):
     assert {r["doc_id"] for r in spark.read.parquet(docs).collect()} == {1, 2}
 
 
+def test_dedup_stream_releases_what_it_persists(spark, tmp_path):
+    """Two `dedup --stream` arrivals leave the session's persisted RDDs
+    as they found them: each run releases its localCheckpoints (the
+    ingest's frames, the survivor rebuild's edges and components) once
+    its writes are done, and keeps an RDD persisted before the call.
+    (An RDD of an earlier test may leave meanwhile: Spark's cleaner
+    unpersists the RDDs of collected frames.)"""
+    from filemap_spark.cli import run_dedup_stream
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    mine = spark.range(3).localCheckpoint()
+    before = persisted()
+    corpus, out = tmp_path / "corpus", str(tmp_path / "out")
+    try:
+        _write_docs(spark, corpus, _TEXT_DOCS, [1, 3])
+        assert run_dedup_stream(spark, str(corpus), out) == (2, 2)
+        assert persisted() <= before
+        _write_docs(spark, corpus, _TEXT_DOCS, [2, 4])
+        kept, total = run_dedup_stream(spark, str(corpus), out)
+        assert total == 4 and kept < 4  # pairs found: the rebuild checkpointed
+        assert persisted() <= before
+        assert mine.count() == 3  # its checkpoint blocks are still there
+    finally:
+        mine.unpersist()
+
+
+def test_dedup_stream_names_its_phases(spark, tmp_path):
+    """An arrival's jobs are described `dedup_stream:<phase>` for each
+    phase of the ingest and the survivor rebuild, and the caller's job
+    group and description are back once the verb returns."""
+    from py4j.protocol import Py4JJavaError
+
+    from filemap_spark.cli import run_dedup_stream
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    dag, store, bus = jsc.dagScheduler(), jsc.statusStore(), jsc.listenerBus()
+    corpus, out = tmp_path / "corpus", str(tmp_path / "out")
+    _write_docs(spark, corpus, _TEXT_DOCS, [1, 3])
+    run_dedup_stream(spark, str(corpus), out)
+    _write_docs(spark, corpus, _TEXT_DOCS, [2, 4])
+    sc.setJobGroup("caller", "the caller's jobs")
+    try:
+        bus.waitUntilEmpty(60000)
+        lo = int(dag.nextJobId())
+        run_dedup_stream(spark, str(corpus), out)
+        bus.waitUntilEmpty(60000)
+        hi = int(dag.nextJobId())
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "the caller's jobs"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    phases = set()
+    for j in range(lo, hi):
+        try:
+            desc = store.job(j).description()
+        except Py4JJavaError:  # not registered: no description to read
+            continue
+        if desc.isDefined() and desc.get().startswith("dedup_stream:"):
+            phases.add(desc.get().split(":", 1)[1])
+    assert {"signature", "probe", "verify", "expand", "stage", "survivors"} <= phases, phases
+
+
 @pytest.mark.parametrize("modality", ["text", "image"])
 def test_dedup_stream_crash_replays_batch(
     spark, tmp_path, monkeypatch, state_crash, modality

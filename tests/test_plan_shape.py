@@ -1628,3 +1628,50 @@ def test_shell_reduce_one_exchange_on_key_per_bucket(spark, tmp_path, monkeypatc
     assert "FileScan text" in final and "MapInArrow" in final, final
     assert final.count("Exchange") == 1, final
     assert re.search(r"Exchange hashpartitioning\(substring_index\(value#\d+,  , 1\), 7\)", final), final
+
+
+def test_incremental_lsh_delta_signature_plans_no_exchange(spark, sf_dir, tmp_path, monkeypatch):
+    """A stateful delta incremental_lsh_ingest clusters its batch reps by
+    doc_id once, before shingling. In the executed plan of every frame it
+    materializes: no `Exchange hashpartitioning(doc_id, i)` runs under
+    the signature min; the signature's collect_list reads its partial
+    aggregate directly, with no exchange between; the fused checkpoint's
+    only shuffle is the doc_id repartition (its shingle and band legs
+    share it); and _dup_groups' text aggregate runs once."""
+    from pyspark.sql import functions as F
+
+    from filemap_spark.io import load_table
+    from filemap_spark.operators.text import incremental_lsh_ingest
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    state = str(tmp_path / "lsh_state")
+    incremental_lsh_ingest(spark, docs.where(F.col("doc_id") % 20 != 0), state)
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    frames = []
+
+    def spy(df, *args, **kwargs):
+        frames.append(df)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    assert incremental_lsh_ingest(
+        spark, docs.where(F.col("doc_id") % 20 == 0), state
+    ).collect()
+    finals = [
+        df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+        for df in frames
+    ]
+    assert not any(
+        re.search(r"Exchange hashpartitioning\(doc_id#\d+L?, i#\d+", p) for p in finals
+    ), finals
+    (signed,) = [p for p in finals if "functions=[collect_list(struct(i" in p]
+    lines = signed.splitlines()
+    at = next(i for i, ln in enumerate(lines) if "functions=[collect_list(struct(i" in ln)
+    assert "functions=[partial_collect_list(" in lines[at + 1], signed
+    shuffles = [
+        ln for ln in lines
+        if "Exchange" in ln and "ReusedExchange" not in ln and "BroadcastExchange" not in ln
+    ]
+    assert len(shuffles) == 1 and "REPARTITION_BY_NUM" in shuffles[0], signed
+    assert sum(p.count("partial_min_by(text") for p in finals) == 1, finals

@@ -301,6 +301,26 @@ def test_incremental_lsh_delta_shuffles_less_than_the_index(spark, sf_dir, tmp_p
     assert shuffled < index_rows, (shuffled, index_rows)
 
 
+def test_incremental_lsh_delta_signature_moves_no_slots(spark, sf_dir, tmp_path):
+    """The delta's reps are clustered by doc_id before shingling, so the
+    signature's 128 per-doc mins never cross an exchange: the whole delta
+    ingest writes fewer shuffle records than _LSH_HASHES per novel rep,
+    the count one keyed min on (doc_id, i) alone would write."""
+    import os
+
+    from filemap_spark.operators.text import _LSH_HASHES
+
+    state = str(tmp_path / "lsh_state")
+    shuffled, _ = _lsh_delta_ingest_shuffle(spark, sf_dir, state)
+    ledger = spark.read.parquet(os.path.join(state, "ingested.parquet"))
+    novel_reps = ledger.where(
+        (F.col("doc_id") % 20 == 0)
+        & (F.col("doc_id") == F.col("rep_id"))
+        & F.col("sigworthy")
+    ).count()
+    assert novel_reps and shuffled < _LSH_HASHES * novel_reps, (shuffled, novel_reps)
+
+
 def test_incremental_lsh_past_broadcast_cap_shuffles_same_pairs(
     spark, sf_dir, tmp_path, monkeypatch
 ):
