@@ -75,19 +75,19 @@ import sys
 import threading
 import urllib.parse
 import zlib
-from functools import partial, wraps
+from functools import partial
 from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark import TaskContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from filemap_spark import state
-from filemap_spark.session import job_phase
+from filemap_spark.session import job_phase, releasing
 from filemap_spark.state import _hidden
 
 
@@ -118,10 +118,12 @@ _PASSING = (0, 1)
 _CHUNK = 1 << 20
 
 # the Arrow frames of the shell stages (schemas built here, not parsed by
-# the JVM): packed file lists, binary lines, a bucket's line count
+# the JVM): packed file lists, binary lines, a bucket's line count, a map
+# output's line count
 _FILES = T.StructType([T.StructField("files", T.ArrayType(T.ArrayType(T.StringType())))])
 _VALUE = T.StructType([T.StructField("value", T.BinaryType())])
 _LINES = T.StructType([T.StructField("lines", T.LongType())])
+_COUNTS = T.StructType([T.StructField("name", T.StringType()), T.StructField("lines", T.LongType())])
 _BOM = b"\xef\xbb\xbf"
 _URI = re.compile(r"([A-Za-z][\w+.-]*):/")
 
@@ -260,38 +262,47 @@ def _terminated(batches: Iterable[pa.RecordBatch]) -> Iterator:
             yield b"\n"
 
 
-def _packed(sc, todo: list[tuple[str, str]]) -> list[list[tuple[str, str]]]:
-    """TODO's (input path, output name) files as at most
-    `defaultParallelism` lists of them, one list a task, balanced by size."""
-    n = max(1, min(len(todo), sc.defaultParallelism))
+def _packed(spark: SparkSession, todo: list[tuple[str, str]]) -> DataFrame:
+    """TODO's (input path, output name) files as a local frame of at most
+    `defaultParallelism` rows, each one list of them, balanced by size; a
+    local frame of n rows scans as n tasks, one file list each."""
+    n = max(1, min(len(todo), spark.sparkContext.defaultParallelism))
     bins: list[list[tuple[str, str]]] = [[] for _ in range(n)]
     load = [0] * n
     for size, path, name in sorted(((os.path.getsize(p), p, nm) for p, nm in todo), reverse=True):
         i = load.index(min(load))
         bins[i].append((path, name))
         load[i] += size
-    return bins
+    return spark.createDataFrame([(b,) for b in bins], _FILES)
 
 
-def _map_task(cmd: str, staged: str, files: list[tuple[str, str]]) -> Iterator[tuple[str, int]]:
-    """Fork CMD once per (input path, output name) of FILES, streaming the
-    file in and its output straight into STAGED/name (`_write`), and
-    yield each name with its line count."""
-    for path, name in files:
-        yield name, _write(cmd, _lines(path), name, os.path.join(staged, name))
+def _files(batches: Iterable[pa.RecordBatch]) -> Iterator[list[str]]:
+    """Each (input path, output name) of the `_packed` file lists in
+    BATCHES."""
+    for batch in batches:
+        for files in batch.column(0).to_pylist():
+            yield from files
+
+
+def _map_task(cmd: str, staged: str, batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """`mapInArrow` body of a map stage: fork CMD once per file of BATCHES
+    (`_files`), streaming the file in and its output straight into
+    STAGED/name (`_write`), and yield a row of each name and its line
+    count."""
+    for path, name in _files(batches):
+        n = _write(cmd, _lines(path), name, os.path.join(staged, name))
+        yield pa.RecordBatch.from_pydict({"name": [name], "lines": [n]})
 
 
 def _map_batches(cmd: str, batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """`mapInArrow` body of `mapreduce`'s streamed map: fork CMD once per
-    (input path, output name) of each file list in BATCHES, yielding its
-    output lines as binary `_batch`es."""
-    for batch in batches:
-        for files in batch.column(0).to_pylist():
-            for path, name in files:
-                yield from _batches(_fork(cmd, _lines(path), name))
+    file of BATCHES (`_files`), yielding its output lines as binary
+    `_batch`es."""
+    for path, name in _files(batches):
+        yield from _batches(_fork(cmd, _lines(path), name))
 
 
-def _map_files(sc, txn: state.Transaction, cmd: str, todo: list[tuple[str, str]]) -> dict[str, int]:
+def _map_files(spark: SparkSession, txn: state.Transaction, cmd: str, todo: list[tuple[str, str]]) -> dict[str, int]:
     """Map TODO's (input path, output name) files in ONE job of at most
     `defaultParallelism` tasks (`_packed`), each forking CMD once per file
     it holds into the stage's staging dir, then add the outputs to the
@@ -301,8 +312,7 @@ def _map_files(sc, txn: state.Transaction, cmd: str, todo: list[tuple[str, str]]
     sees."""
     staged = txn.staging()
     os.makedirs(staged)
-    bins = _packed(sc, todo)
-    lines = dict(sc.parallelize(bins, len(bins)).flatMap(partial(_map_task, cmd, staged)).collect())
+    lines = dict(_packed(spark, todo).mapInArrow(partial(_map_task, cmd, staged), _COUNTS).collect())
     for _, name in todo:
         txn.add(os.path.join(staged, name), txn.root, name)
     return lines
@@ -511,7 +521,7 @@ def run_stage(
     else:
         lines = txn.meta["lines"]  # the kept outputs'
         if plan.todo:
-            lines.update(_map_files(spark.sparkContext, txn, cmd, plan.todo))
+            lines.update(_map_files(spark, txn, cmd, plan.todo))
         txn.meta["lines"] = {
             n: lines[n] if n in lines else _count(os.path.join(txn.root, n))
             for n in txn.files(txn.root)
@@ -564,9 +574,7 @@ def run_map(
     files = _input_files(input_path)
     txn = state.Transaction(_local(output))
     todo = [(path, name) for name, path in sorted(files.items())]
-    # a local frame of n rows scans as n tasks, one file list each
-    packed = [(bin,) for bin in _packed(spark.sparkContext, todo)]
-    lines = spark.createDataFrame(packed, _FILES).mapInArrow(partial(_map_batches, cmd), _VALUE)
+    lines = _packed(spark, todo).mapInArrow(partial(_map_batches, cmd), _VALUE)
     txn.meta = {"lines": _reduce(lines, txn, reduce_cmd, buckets)}
     _commit(txn)
     return txn.meta["lines"]
@@ -614,6 +622,7 @@ def run_map_stream(
     return _run_stages(spark, input_path, stages, 32, memo=True)
 
 
+@releasing
 def run_query(
     spark, sf_dir: str, sql: str, output: str | None = None, limit: int = 100
 ) -> int:
@@ -667,6 +676,7 @@ def _survivors_from_pairs(docs, edges):
     return docs.join(removed, "doc_id", "left_anti")
 
 
+@releasing
 def run_dedup(
     spark,
     input_dir: str,
@@ -773,28 +783,7 @@ def run_dedup(
     return spark.read.parquet(out).count(), n_total
 
 
-def _releasing(verb):
-    """Wrap a verb so it unpersists, on return, every RDD persisted while
-    it ran: its localCheckpoints, once the writes that read them are
-    done. None goes earlier, since a checkpoint has no lineage to
-    recompute from. RDDs another thread of the same session persists
-    meanwhile go too."""
-
-    @wraps(verb)
-    def run(spark, *args, **kwargs):
-        jsc = spark.sparkContext._jsc
-        held = set(jsc.getPersistentRDDs().keys())
-        try:
-            return verb(spark, *args, **kwargs)
-        finally:
-            for rid, rdd in jsc.getPersistentRDDs().items():
-                if rid not in held:
-                    rdd.unpersist(False)
-
-    return run
-
-
-@_releasing
+@releasing
 def run_dedup_stream(
     spark,
     input_dir: str,
@@ -953,6 +942,7 @@ TPCH_QUERIES = {
 }
 
 
+@releasing
 def run_tpch(
     spark, sf_dir: str, which: list[str] | None = None, output: str | None = None
 ) -> list[tuple[str, str, int, float]]:
@@ -981,6 +971,7 @@ def run_tpch(
     return rows_out
 
 
+@releasing
 def run_stats(spark, input_dir: str) -> dict[str, float]:
     """Corpus-health report (round 5) — the numbers a curation run prints
     first, over any corpus dir with documents.parquet (including the
@@ -1004,7 +995,7 @@ def run_stats(spark, input_dir: str) -> dict[str, float]:
         .agg(F.coalesce(F.sum("count"), F.lit(0)).alias("d"))
         .collect()[0]["d"]
     )
-    from filemap_spark.functions.ranks import release_rank_cache, with_global_rank
+    from filemap_spark.functions.ranks import with_global_rank
 
     ranked = with_global_rank(
         docs.select("doc_id", "n_chars"), "n_chars", "doc_id",
@@ -1020,7 +1011,6 @@ def run_stats(spark, input_dir: str) -> dict[str, float]:
             6,
         ).alias("gini")
     ).collect()[0]["gini"]
-    release_rank_cache()
     return {
         "n_docs": int(base["n_docs"]),
         "n_tokens": int(base["n_tokens"]),
@@ -1057,6 +1047,7 @@ def run_compact(
     return before, after, rows
 
 
+@releasing
 def run_quality(
     spark, input_dir: str, output: str, clean_lines: bool = False,
     gate: str = "rules", scores_out: str | None = None,
@@ -1247,6 +1238,7 @@ def run_quality(
     }
 
 
+@releasing
 def run_decontam(
     spark,
     input_dir: str,

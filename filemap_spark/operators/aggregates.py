@@ -1261,8 +1261,8 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the global rank is the functions/ranks.py distributed
     decomposition (range exchange + partition-local row_number + bounded
     offset join) — NO single-partition window, unlike the oracle's
-    spelling; then one hash agg. The rank relation is released after use
-    via release_rank_cache in long sessions."""
+    spelling; then one hash agg. The rank relation stays persisted until
+    the caller's `session.release_scope` closes."""
     from filemap_spark.functions.ranks import with_global_rank
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -3920,9 +3920,9 @@ def ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ADVICE r7) keeping the pre-cache segment IN the logical plan,
         # so plan_audit/test_plan_shape still sweep the scan+agg+join for
         # CartesianProduct/window violations, and building the plan runs
-        # no job. Cache lives until session end (same bounded-leak
-        # posture as functions/ranks.py); eviction recompute is safe —
-        # the cells are deterministic aggregates.
+        # no job. The caller's session.release_scope uncaches it;
+        # eviction recompute is safe — the cells are deterministic
+        # aggregates.
         .persist()
     )
     lags = spark.range(1, 8).select(F.col("id").cast("int").alias("lag"))

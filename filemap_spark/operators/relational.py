@@ -31,6 +31,7 @@ from filemap_spark.operators.text import (
     JACCARD_PAIR_CTES,
     SHINGLE_CTE,
     _shingle_frame,
+    dedup_near_jaccard,
 )
 from filemap_spark.registry import query
 
@@ -369,44 +370,24 @@ def merge_component_labels(labels: DataFrame, delta_pairs: DataFrame) -> DataFra
     return untouched.unionByName(updated)
 
 
-# One-entry cache of the Jaccard-CC label frame: dedup_apply_survivors is a
-# strict composition of dedup_connected_components, and grading runs both —
-# without this the expensive pair generation + star rounds run twice.
-# Bounded (size 1) by construction; keyed by (application id, sf_dir, input
-# file-state fingerprint): a rewritten documents.parquet misses and
-# recomputes instead of serving stale labels, and applicationId — unlike
-# id(spark), which a GC'd session can recycle — can never pair a dead
-# localCheckpoint with a different live context.
-_CC_LABELS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _jaccard_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from filemap_spark.io import table_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "documents"),
+    """Every doc's connected-component label over the shingle-Jaccard
+    pair graph (`dedup_near_jaccard` pairs through
+    `alternating_star_components`; a doc in no pair is its own component),
+    checkpointed locally, so the ops that read it plan over the labels,
+    not over the pair generation and the star rounds. Each call computes
+    the labels anew: nothing is shared between ops, and the checkpoint
+    lives until the caller's `session.release_scope` closes."""
+    pairs = dedup_near_jaccard(spark, sf_dir).select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    if key not in _CC_LABELS_CACHE:
-        from filemap_spark.operators.text import dedup_near_jaccard
-
-        pairs = dedup_near_jaccard(spark, sf_dir).select(
-            F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-        )
-        comp = alternating_star_components(pairs)
-        docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        labels = (
-            docs.join(comp, docs.doc_id == comp.node, "left")
-            .select(
-                "doc_id",
-                F.coalesce("component", "doc_id").alias("component"),
-            )
-            .localCheckpoint()
-        )
-        _CC_LABELS_CACHE.clear()
-        _CC_LABELS_CACHE[key] = labels
-    return _CC_LABELS_CACHE[key]
+    comp = alternating_star_components(pairs)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    return (
+        docs.join(comp, docs.doc_id == comp.node, "left")
+        .select("doc_id", F.coalesce("component", "doc_id").alias("component"))
+        .localCheckpoint()
+    )
 
 
 @query(
@@ -469,9 +450,8 @@ def dedup_apply_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup pipeline's OUTPUT step: collapse each ≥0.8-Jaccard
     connected component to its min-doc_id survivor, reporting cluster size
     and rows removed — what a corpus-dedup job actually materializes
-    (composition of dedup_connected_components + one aggregate; the label
-    frame is the cached localCheckpoint, so grading both ops computes the
-    pairs and star rounds once)."""
+    (composition of dedup_connected_components' labels + one
+    aggregate)."""
     labels = _jaccard_cc_labels(spark, sf_dir)
     return (
         labels.groupBy(F.col("component").alias("survivor_id"))
@@ -583,8 +563,7 @@ def dedup_materialize_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     training run actually consumes, not just a report). Survivor rule:
     keep each component's min-doc_id member; singletons keep themselves.
 
-    Reuses the cached component labels (one graph computation across the
-    three graded dedup_* ops in a session). The write is a plain
+    The labels are `_jaccard_cc_labels`'. The write is a plain
     parquet sink — at 100 TB this is the same one-shuffle-free append the
     sink ops use, and the re-read restores scan-level pruning for every
     downstream consumer."""
@@ -661,8 +640,6 @@ def dedup_survivor_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_kernels.py pins pagerank_undirected against a numpy power
     iteration on random seeded graphs, and the survivor-pick rule against
     an independent recomputation."""
-    from filemap_spark.operators.text import dedup_near_jaccard
-
     edges = dedup_near_jaccard(spark, sf_dir).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
@@ -731,8 +708,7 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed X% concentrated in clusters of size k'), and the input to
     choosing between min-id and centrality survivor rules.
 
-    Reuses the session-cached component labels (one graph computation
-    across every graded dedup_* op); the histogram itself is two keyed
+    The labels are `_jaccard_cc_labels`'; the histogram itself is two keyed
     aggs over one row per doc then one row per component — O(corpus) then
     O(clusters) shuffle, nothing new at 100 TB."""
     labels = _jaccard_cc_labels(spark, sf_dir)

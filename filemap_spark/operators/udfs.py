@@ -183,12 +183,13 @@ def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("split_words", SplitWords)
     docs = load_table(spark, sf_dir, "documents")
-    docs.where(F.col("doc_id") < 50).createOrReplaceTempView("_udtf_docs")
+    # a DataFrame argument, not a temp view: the op leaves no view behind
     return spark.sql(
         """
         SELECT d.doc_id, t.pos, t.word
-        FROM _udtf_docs d, LATERAL split_words(d.text) t
-        """
+        FROM {d} d, LATERAL split_words(d.text) t
+        """,
+        d=docs.where(F.col("doc_id") < 50),
     )
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
+from functools import wraps
 from typing import Iterator
 
 from pyspark.sql import SparkSession
@@ -92,3 +93,45 @@ def job_phase(spark: SparkSession, phase: str, op: str | None = None) -> Iterato
     finally:
         sc.setLocalProperty(_OP, prev_op)
         sc.setLocalProperty("spark.job.description", prev)
+
+
+@contextmanager
+def release_scope(spark: SparkSession) -> Iterator[None]:
+    """Leave the session's cache as it was on entry: on exit, uncache every
+    `CacheManager` entry added inside (a `DataFrame.persist()`), then
+    unpersist every RDD persisted inside (a `localCheckpoint`). Entries
+    and RDDs that were there on entry stay.
+
+    Exit comes only after the work inside has materialized what reads
+    those frames (collected or written it): a checkpoint has no lineage
+    to recompute from. The scope sees the whole session, not one thread,
+    so it releases whatever ANY thread persisted while it was open; wrap
+    serial runners only (a verb, one op of a census), never one of
+    several ops running concurrently on one session."""
+    jss = spark._jsparkSession
+    cache = jss.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+    cached = cache.cachedData()  # an immutable Scala Seq: a snapshot
+    held = set(jsc.getPersistentRDDs().keys())
+    try:
+        yield
+    finally:
+        now = cache.cachedData()
+        for entry in map(now.apply, range(now.size())):
+            if not cached.contains(entry):
+                cache.uncacheQuery(jss, entry.plan(), False, False)
+        for rid, rdd in jsc.getPersistentRDDs().items():
+            if rid not in held:
+                rdd.unpersist(False)
+
+
+def releasing(verb):
+    """VERB(spark, ...) run inside a `release_scope(spark)`: a verb
+    returns once its writes are done, and leaves nothing persisted."""
+
+    @wraps(verb)
+    def run(spark, *args, **kwargs):
+        with release_scope(spark):
+            return verb(spark, *args, **kwargs)
+
+    return run

@@ -1,5 +1,7 @@
 #!/usr/bin/env python
-"""Run the driver's differential check locally over all registered queries.
+"""Run the driver's differential check locally over all registered queries,
+each op inside its own release scope, so none reads what an earlier op
+left persisted.
 
 Usage: python scripts/verify_local.py [--sf /root/testdata/sf0.01] [name ...]
 """
@@ -14,6 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from filemap_spark import all_oracle, all_queries, get_spark
+from filemap_spark.session import release_scope
 from filemap_spark.testing import run_one
 
 
@@ -35,7 +38,8 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            res = run_one(name, queries[name], oracles.get(name), spark, args.sf)
+            with release_scope(spark):
+                res = run_one(name, queries[name], oracles.get(name), spark, args.sf)
         except Exception as exc:  # surface, keep going
             failures += 1
             print(f"[ERR ] {name} — {type(exc).__name__}: {str(exc).splitlines()[0][:300]}")

@@ -16,10 +16,15 @@ from filemap_spark.cli import (
     _fingerprint,
     _memo_hit,
     main,
+    run_decontam,
+    run_dedup,
     run_map,
     run_map_stream,
     run_pipeline,
+    run_quality,
+    run_stats,
 )
+from filemap_spark.io import load_table
 
 
 def _write_lines(path: str, lines: list[str]) -> None:
@@ -1123,6 +1128,51 @@ def test_dedup_stream_releases_what_it_persists(spark, tmp_path):
         assert total == 4 and kept < 4  # pairs found: the rebuild checkpointed
         assert persisted() <= before
         assert mine.count() == 3  # its checkpoint blocks are still there
+    finally:
+        mine.unpersist()
+
+
+_CURATION_VERBS = {
+    "quality": lambda s, i, o, ev: run_quality(s, i, o, clean_lines=True, gate="learned"),
+    "dedup_near": lambda s, i, o, ev: run_dedup(s, i, o, method="near"),
+    "dedup_substring": lambda s, i, o, ev: run_dedup(s, i, o, method="substring"),
+    "dedup_image": lambda s, i, o, ev: run_dedup(s, i, o, modality="image"),
+    "decontam": lambda s, i, o, ev: run_decontam(s, i, o, eval_dir=ev),
+    "stats": lambda s, i, o, ev: run_stats(s, i),
+}
+
+
+@pytest.mark.parametrize("verb", list(_CURATION_VERBS))
+def test_verbs_release_what_they_persist(spark, sf_dir, tmp_path, verb):
+    """Each curation verb leaves the session's persisted RDDs and cached
+    plans as it found them: its localCheckpoints and `persist()`ed frames
+    are released once its writes are done, and a frame the caller cached
+    before the call stays cached. (An RDD of an earlier test may leave
+    meanwhile: Spark's cleaner unpersists the RDDs of collected frames.)"""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+
+    def entries() -> list:
+        seq = cache.cachedData()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def persisted() -> set[int]:
+        return set(jsc.getPersistentRDDs().keys())
+
+    eval_dir = str(tmp_path / "eval")
+    load_table(spark, sf_dir, "documents").where("doc_id % 50 = 0").write.parquet(
+        os.path.join(eval_dir, "documents.parquet")
+    )
+    held = persisted()
+    mine = spark.range(7).selectExpr("id * 3 AS x").cache()
+    try:
+        assert mine.count() == 7
+        mine_rdds = persisted() - held
+        cached, before = entries(), persisted()
+        _CURATION_VERBS[verb](spark, sf_dir, str(tmp_path / "out"), eval_dir)
+        assert persisted() <= before
+        assert entries() == cached
+        assert mine_rdds and mine_rdds <= persisted()  # its blocks are still there
     finally:
         mine.unpersist()
 

@@ -819,20 +819,54 @@ def test_quality_mix_respects_tier_keep_rates(spark, sf_dir):
     assert set(kept) == want
 
 
-def test_release_rank_cache_unpersists(spark, sf_dir):
-    """with_global_rank persists its ranged relation for the lifetime of
-    the session (documented leak); release_rank_cache must drop every
-    tracked relation once callers have materialized their results."""
-    from filemap_spark.functions import ranks
+def _cache_entries(spark) -> list:
+    seq = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    return [seq.apply(i) for i in range(seq.size())]
 
-    df = spark.range(100).withColumnRenamed("id", "k")
-    ranks.release_rank_cache()  # drain anything earlier tests cached
-    out = ranks.with_global_rank(df, "k")
-    assert out.count() == 100
-    assert len(ranks._PERSISTED) >= 1
-    released = ranks.release_rank_cache()
-    assert released >= 1
-    assert not ranks._PERSISTED
+
+def _scoped(spark, sf_dir, name):
+    """NAME's sorted rows, run inside a release scope, with the count and
+    shuffle-write records of the stages it completed (status store,
+    attributed by stage-id range the way perfbench/spans.py does)."""
+    from py4j.protocol import Py4JJavaError
+
+    from filemap_spark.session import release_scope
+
+    jsc = spark.sparkContext._jsc.sc()
+    dag, store, bus = jsc.dagScheduler(), jsc.statusStore(), jsc.listenerBus()
+    bus.waitUntilEmpty(60000)
+    lo = int(dag.nextStageId())
+    with release_scope(spark):
+        rows = sorted(QUERIES[name](spark, sf_dir).collect())
+    bus.waitUntilEmpty(60000)
+    stages = records = 0
+    for s in range(lo, int(dag.nextStageId())):
+        try:
+            sd = store.lastStageAttempt(s)
+        except Py4JJavaError:  # skipped stage: never attempted
+            continue
+        if str(sd.status()) == "COMPLETE":
+            stages += 1
+            records += int(sd.shuffleWriteRecords())
+    return rows, stages, records
+
+
+def test_release_scope_reruns_ops_cold(spark, sf_dir):
+    """Ops that persist a frame (the rank scaffold's ranged relation, the
+    bare persist() of a small frame read twice) or checkpoint the
+    component labels run twice, each run in its own release scope: the
+    second run finds nothing of the first, so it returns the same rows
+    through the same stages and shuffle records, and no cached plan is
+    left behind. The second `dedup_apply_survivors` is a component-label
+    op run after an earlier one's scope released its checkpoint: it
+    computes its own labels instead of reading the released blocks."""
+    cached = _cache_entries(spark)
+    for name in ("agg_decile_lift", "ts_mad_anomaly", "win_pareto_share",
+                 "dedup_apply_survivors"):
+        first = _scoped(spark, sf_dir, name)
+        assert first[0] and first[1], name
+        assert _scoped(spark, sf_dir, name) == first, name
+        assert _cache_entries(spark) == cached, name
 
 
 def test_with_global_rank_tolerates_non_numeric_shuffle_conf(spark):
