@@ -230,6 +230,13 @@ def _stage_files(d: str) -> dict[str, bytes]:
     }
 
 
+def _table_files(d: str) -> list[str]:
+    """The data files on disk in a reduce stage dir's tables, relative to
+    it: its part files and its `_buckets/` deltas."""
+    deltas = os.path.join(d, "_buckets")
+    return sorted([*_stage_files(d), *(f"_buckets/{f}" for f in _stage_files(deltas))])
+
+
 def _mtimes(d: str) -> dict[str, int]:
     return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in _stage_files(d)}
 
@@ -634,10 +641,10 @@ def test_pipeline_reduce_memo_keys_bucket_count(spark, tmp_path, capsys):
 
 @pytest.mark.parametrize("boundary", ["before_rename", "before_delete", "after_commit"])
 def test_pipeline_reduce_commit_survives_a_crash(spark, tmp_path, state_crash, boundary):
-    """A reduce commits its part files and its fingerprint with one
-    manifest rename. Whichever side of it a run dies on, the rerun leaves
-    `final` equal to a cold run, holding only the part files its manifest
-    lists."""
+    """A reduce commits its part files, its buckets' deltas and its
+    manifest with one rename. Whichever side of it a run dies on, the
+    rerun leaves `final` equal to a cold run, holding only the part files
+    and deltas its manifest lists."""
     from filemap_spark import state
 
     src = tmp_path / "in"
@@ -652,8 +659,9 @@ def test_pipeline_reduce_commit_survives_a_crash(spark, tmp_path, state_crash, b
         run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True)
     assert run_pipeline(spark, src, out, _WORDCOUNT, buckets=4, memo=True) == 10
     listed = state.read_manifest(final)["files"]
-    assert sorted(_stage_files(final)) == sorted(listed)
-    assert listed and all(f.startswith("part-") for f in listed)
+    assert _table_files(final) == sorted(listed)
+    assert any(f.startswith("part-") for f in listed)
+    assert all(f.startswith(("part-", "_buckets/")) for f in listed)
     _assert_matches_cold(spark, src, out, _WORDCOUNT, tmp_path, "cold")
 
 
@@ -674,12 +682,12 @@ def test_pipeline_reduce_hit_drops_uncommitted_parts(spark, tmp_path, state_cras
     with pytest.raises(Exception, match="before_rename"):
         run_pipeline(spark, src, out, stages, buckets=2, memo=True)
     listed = state.read_manifest(stage01)["files"]
-    assert set(_stage_files(stage01)) > set(listed)  # the crashed run's parts
+    assert set(_table_files(stage01)) > set(listed)  # the crashed run's files
 
     capsys.readouterr()
     assert run_pipeline(spark, src, out, stages, buckets=4, memo=True) == 3
     assert "stage 1 (reduce) up to date" in capsys.readouterr().err
-    assert sorted(_stage_files(stage01)) == listed
+    assert _table_files(stage01) == listed
     cold = str(tmp_path / "cold")
     run_pipeline(spark, src, cold, stages, buckets=4, memo=True)
     for d in ("stage01", "final"):
@@ -728,6 +736,233 @@ def test_reduce_forks_every_bucket(spark, tmp_path, buckets, body):
     parts = _stage_files(os.path.join(out, "final"))
     assert len(parts) == buckets and all(f.startswith("part-") for f in parts)
     assert sum(int(body) for body in parts.values()) == body.count(b"\n")
+
+
+def _traced(spark, fn):
+    """FN()'s result, and the shuffle records written by the stages it ran
+    by their job description (status store, attributed by stage-id range
+    the way perfbench/spans.py does; a stage that ran writing none counts
+    0)."""
+    from py4j.protocol import Py4JJavaError
+
+    jsc = spark.sparkContext._jsc.sc()
+    dag, store, bus = jsc.dagScheduler(), jsc.statusStore(), jsc.listenerBus()
+    bus.waitUntilEmpty(60000)
+    lo = int(dag.nextStageId())
+    out = fn()
+    bus.waitUntilEmpty(60000)
+    records: dict[str | None, int] = {}
+    for s in range(lo, int(dag.nextStageId())):
+        try:
+            sd = store.lastStageAttempt(s)
+        except Py4JJavaError:  # skipped stage: never attempted
+            continue
+        desc = sd.description().get() if sd.description().isDefined() else None
+        records[desc] = records.get(desc, 0) + int(sd.shuffleWriteRecords())
+    return out, records
+
+
+def _job_phases(spark, fn):
+    """FN()'s result, and the description of each job it started (status
+    store; None for a job without one)."""
+    from py4j.protocol import Py4JJavaError
+
+    jsc = spark.sparkContext._jsc.sc()
+    dag, store, bus = jsc.dagScheduler(), jsc.statusStore(), jsc.listenerBus()
+    bus.waitUntilEmpty(60000)
+    lo = int(dag.nextJobId())
+    out = fn()
+    bus.waitUntilEmpty(60000)
+    descs = []
+    for j in range(lo, int(dag.nextJobId())):
+        try:
+            desc = store.job(j).description()
+        except Py4JJavaError:  # not registered: no description to read
+            continue
+        descs.append(desc.get() if desc.isDefined() else None)
+    return out, descs
+
+
+_COUNT = [("map", "tr -s ' ' '\\n'"), ("reduce", "sort | uniq -c")]
+
+
+def _words(k: int, n: int = 12) -> list[str]:
+    """N lines of arrival K's words, some shared with other arrivals."""
+    return [f"w{(k * 7 + i) % 23} k{k} x{i % 5}" for i in range(n)]
+
+
+def _cold_parts(spark, src: str, tmp_path, name: str, stages=_COUNT, buckets: int = 4):
+    """The sorted part lines of a cold `pipeline` run into a fresh dir."""
+    cold = str(tmp_path / name)
+    run_pipeline(spark, src, cold, stages, buckets=buckets, memo=True)
+    return _parts(os.path.join(cold, "final"))
+
+
+def test_pipeline_reduce_buckets_only_new_files(spark, tmp_path, capsys):
+    """A memoized reduce keeps the lines each bucket has received in its
+    `_buckets/` table, so an arrival's reduce shuffles exactly the lines of
+    the new map outputs, and a command edit forks over the stored buckets
+    with no shuffle at all. After each run `final`'s sorted lines equal a
+    cold run's; the stages' jobs are named `pipeline:map` and
+    `pipeline:reduce`, and the reduce says what it bucketed."""
+    src = tmp_path / "in"
+    src, out = str(src), str(tmp_path / "out")
+    final = os.path.join(out, "final")
+    for k in range(3):
+        _write_lines(os.path.join(src, f"f{k}.txt"), _words(k))
+        capsys.readouterr()
+        _, records = _traced(spark, lambda: run_pipeline(spark, src, out, _COUNT, buckets=4, memo=True))
+        err = capsys.readouterr().err
+        assert {"pipeline:map", "pipeline:reduce"} <= set(records), records
+        # the new map output holds one line per word of the arrival
+        new = 36 * (k + 1) if k == 0 else 36
+        assert records["pipeline:reduce"] == new, (k, records)
+        if k:
+            assert f"reduce: bucketed 1 new file ({new} lines) into 4 buckets" in err, err
+        assert _parts(final) == _cold_parts(spark, src, tmp_path, f"cold{k}")
+    deltas = os.listdir(os.path.join(final, "_buckets"))
+    assert max(sum(d.startswith(f"{i:05d}-") for d in deltas) for i in range(4)) == 3
+
+    edited = [_COUNT[0], ("reduce", "sort | uniq -c | sort -rn")]
+    _, records = _traced(spark, lambda: run_pipeline(spark, src, out, edited, buckets=4, memo=True))
+    assert records.get("pipeline:reduce") == 0, records
+    assert "reduce: no new file, forked 4 stored buckets" in capsys.readouterr().err
+    assert _parts(final) == _cold_parts(spark, src, tmp_path, "cold_edit", edited)
+
+
+def test_pipeline_reduce_rebuckets_when_its_inputs_change(spark, tmp_path, monkeypatch, capsys):
+    """A memoized reduce re-buckets every file, and still equals a cold
+    run, when a map output it bucketed changed or was deleted, when the
+    bucket count changed, when its manifest holds only the fingerprint an
+    older layout wrote, and when a bucket would hold one delta more than
+    `_MAX_DELTAS`."""
+    from filemap_spark import cli, state
+
+    monkeypatch.setattr(cli, "_MAX_DELTAS", 2)
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    final = os.path.join(out, "final")
+    for k in range(2):
+        _write_lines(os.path.join(src, f"f{k}.txt"), _words(k))
+    run_pipeline(spark, src, out, _COUNT, buckets=4, memo=True)
+
+    def old_manifest():
+        m = state.read_manifest(final)
+        old = {"fingerprint": "0", "lines": m["lines"], "batch": m["batch"]}
+        old["files"] = [f for f in m["files"] if f.startswith("part-")]
+        with open(os.path.join(final, state.MANIFEST), "w") as f:
+            json.dump(old, f)
+
+    def touch():
+        _write_lines(os.path.join(src, "f0.txt"), _words(5))
+
+    def arrive(k):
+        def add():
+            _write_lines(os.path.join(src, f"f{k}.txt"), _words(k))
+        return add
+
+    cases = [
+        ("changed", touch, 4),
+        ("deleted", lambda: os.remove(os.path.join(src, "f1.txt")), 4),
+        ("buckets", lambda: None, 3),
+        ("fingerprint", old_manifest, 3),
+        ("one_delta", arrive(6), 3),  # the second delta a bucket: kept
+        ("full", arrive(7), 3),  # the third: more than _MAX_DELTAS
+    ]
+    for name, change, buckets in cases:
+        change()
+        capsys.readouterr()
+        run_pipeline(spark, src, out, _COUNT, buckets=buckets, memo=True)
+        err = capsys.readouterr().err
+        verb = "reduce: bucketed 1 new file" if name == "one_delta" else "reduce: re-bucketed"
+        assert verb in err, (name, err)
+        assert _parts(final) == _cold_parts(spark, src, tmp_path, name, buckets=buckets), name
+        listed = state.read_manifest(final)["files"]
+        assert _table_files(final) == sorted(listed), name
+        per_bucket = [sum(f.startswith(f"_buckets/{i:05d}-") for f in listed) for i in range(buckets)]
+        assert max(per_bucket) == (2 if name == "one_delta" else 1), (name, per_bucket)
+
+
+@pytest.mark.parametrize("boundary", ["before_rename", "before_delete", "after_commit"])
+def test_incremental_reduce_commit_survives_a_crash(spark, tmp_path, state_crash, capsys, boundary):
+    """An arrival's reduce commits its new part files and its buckets' new
+    deltas with one manifest rename. Whichever side of it a run dies on,
+    the rerun equals a cold run and its dir holds exactly the files its
+    manifest lists; a run that died before the rename buckets the new
+    file again on its own."""
+    from filemap_spark import state
+
+    src, out = tmp_path / "in", str(tmp_path / "out")
+    for k in range(2):
+        _write_lines(str(src / f"f{k}.txt"), [w for line in _words(k) for w in line.split()])
+    src = str(src)
+    final = os.path.join(out, "final")
+    stages = [_COUNT[1]]  # a reduce alone: its commit is the arrival's only one
+    run_pipeline(spark, src, out, stages, buckets=4, memo=True)
+    _write_lines(os.path.join(src, "f2.txt"), [w for line in _words(2) for w in line.split()])
+    state_crash(boundary)
+    with pytest.raises(Exception, match=boundary):
+        run_pipeline(spark, src, out, stages, buckets=4, memo=True)
+    capsys.readouterr()
+    run_pipeline(spark, src, out, stages, buckets=4, memo=True)
+    err = capsys.readouterr().err
+    if boundary == "before_rename":
+        assert "reduce: bucketed 1 new file (36 lines) into 4 buckets" in err, err
+    else:
+        assert "stage 0 (reduce) up to date" in err, err
+    listed = state.read_manifest(final)["files"]
+    assert _table_files(final) == sorted(listed)
+    assert _parts(final) == _cold_parts(spark, src, tmp_path, "cold", stages)
+
+
+def test_memo_reduce_reads_files_never_a_hidden_dir(spark, tmp_path, monkeypatch, capsys):
+    """`mapreduce --memo` reduces from the files of its hidden OUT/_map,
+    named one by one (names Hadoop would read as a glob too), never from
+    the dir itself, which Spark's text source would take for no input. Its
+    jobs are named `mapreduce:map` and `mapreduce:reduce`, as are those of
+    a `mapreduce` without `--memo`."""
+    import re
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real, seen = DataFrameReader.text, []
+
+    def spy(self, paths, *args, **kwargs):
+        seen.extend([paths] if isinstance(paths, str) else paths)
+        return real(self, paths, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "text", spy)
+    src = tmp_path / "in"
+    _write_lines(str(src / "a.txt"), ["a b a", "b a c"])
+    _write_lines(str(src / "x[1].txt"), ["c a"])
+    out = str(tmp_path / "out")
+    args = ["mapreduce", str(src), out, "--cmd", _WORDCOUNT_CMDS[0],
+            "--reduce", _WORDCOUNT_CMDS[1], "--buckets", "4"]
+    _, records = _traced(spark, lambda: main(args))
+    assert "mapreduce:reduce" in records, records
+    _, records = _traced(spark, lambda: main(args + ["--memo"]))
+    assert {"mapreduce:map", "mapreduce:reduce"} <= set(records), records
+    _write_lines(str(src / "d.txt"), ["d a"])
+    assert main(args + ["--memo"]) == 0
+    assert "reduce: bucketed 1 new file (2 lines) into 4 buckets" in capsys.readouterr().err
+    files = [re.sub(r"\\(.)", r"\1", p) for p in seen]
+    assert len(files) == 3 and all(os.path.isfile(f) for f in files), seen
+    assert {r["value"] for r in spark.read.text(out).collect()} == {"a 5", "b 2", "c 2", "d 1"}
+
+
+def test_reduce_lists_its_files_on_the_driver(spark, tmp_path):
+    """A reduce over more files than Spark's parallel-listing threshold (32
+    paths) lists them on the driver: no job of it lists leaf files, and
+    the session's threshold is left as it was."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    src, out = tmp_path / "in", str(tmp_path / "out")
+    for i in range(40):
+        _write_lines(str(src / f"f{i:02d}.txt"), [f"w{i % 3} x"])
+    before = spark.conf.get(key, None)
+    n, descs = _job_phases(spark, lambda: run_pipeline(spark, str(src), out, [_COUNT[1]], buckets=4))
+    assert n == 3
+    assert "pipeline:reduce" in descs
+    assert not [d for d in descs if d and d.startswith("Listing leaf files")], descs
+    assert spark.conf.get(key, None) == before
 
 
 # a command whose output ends its lines every way Hadoop's line reader
@@ -1102,6 +1337,22 @@ def test_dedup_stream_noop_leaves_survivors_untouched(spark, tmp_path):
     assert run_dedup_stream(spark, str(corpus), out) == (2, 3)
     assert snapshot(docs) != before
     assert {r["doc_id"] for r in spark.read.parquet(docs).collect()} == {1, 2}
+
+
+def test_dedup_stream_noop_runs_no_survivor_job(spark, tmp_path):
+    """A run with no new file returns the (kept, total) its manifest
+    recorded with the survivor fingerprint at the last rebuild, and starts
+    no `dedup_stream:survivors` job: it neither counts the ledger nor the
+    survivor corpus."""
+    from filemap_spark.cli import run_dedup_stream
+
+    corpus, out = tmp_path / "corpus", str(tmp_path / "out")
+    _write_docs(spark, corpus, _TEXT_DOCS, [1, 2, 3])
+    first, descs = _job_phases(spark, lambda: run_dedup_stream(spark, str(corpus), out))
+    assert first == (2, 3) and "dedup_stream:survivors" in descs
+    again, descs = _job_phases(spark, lambda: run_dedup_stream(spark, str(corpus), out))
+    assert again == first
+    assert "dedup_stream:survivors" not in descs, descs
 
 
 def test_dedup_stream_releases_what_it_persists(spark, tmp_path):
